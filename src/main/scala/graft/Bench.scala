@@ -27,32 +27,45 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_MAX_ATTEMPTS` (default 3) times and stamps the artifact
   * from the best attempt — the r17 driver artifact was a noisy 1.38x
   * sweep even though clean runs existed minutes earlier.
+  *
+  * A query that throws is a failure, not a timing: it is left out of the
+  * per-query minima and `total_s`, stamped in `"failed"`, and the run
+  * exits non-zero.
   */
 object Bench {
 
   private def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
 
-  /** (query, min seconds, max-min spread) per query, one timed pass of
-    * `iters` full-suite sweeps. */
-  private def timedSweeps(spark: SparkSession, sfDir: String,
+  /** One timed pass of `iters` full-suite sweeps: (query, min seconds,
+    * max-min spread) per query that succeeded in every sweep, and the
+    * queries that threw in any sweep. A failed query is a failure, not a
+    * timing — it stays out of the per-query minima and `total_s`. */
+  private[graft] def timedSweeps(spark: SparkSession, sfDir: String,
       suite: Seq[(String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)],
-      iters: Int): Seq[(String, Double, Double)] = {
+      iters: Int): (Seq[(String, Double, Double)], Seq[String]) = {
     val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     (1 to iters).foreach { _ =>
       suite.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[graft] bench: $name failed — $e")
+            false
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         // Flush op-internal persists between queries (untimed): each query
         // re-persists its own frames anyway, so this only stops storage
         // blocks accumulating across the suite.
         graft.core.PersistScope.unpersistAll()
-        times(name) = times.getOrElse(name, Vector.empty) :+ dt
+        if (ok) times(name) = times.getOrElse(name, Vector.empty) :+ dt
+        else failed += name
       }
     }
-    times.toSeq.map { case (name, ts) => (name, ts.min, ts.max - ts.min) }
+    (times.toSeq.collect { case (name, ts) if !failed(name) =>
+      (name, ts.min, ts.max - ts.min) }, failed.toSeq)
   }
 
   /** Cross-run environment gauge: UNIFORM machine-load inflation never
@@ -118,18 +131,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The generated-class cache defaults to 100 entries; a 53-query suite
-      // generates several hundred codegen classes, so with the default every
-      // measured query re-pays Janino compilation its warm-up already did.
-      // Any long-lived multi-query session (a real cluster job server) wants
-      // this sized to its working set.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Session bring-up warm-ups (scan, shuffle, object-operator encoders).
@@ -175,8 +178,11 @@ object Bench {
     // comparing eras needs to see whether the loop engaged and by how
     // much)
     val attemptTotals = scala.collection.mutable.ArrayBuffer[Double]()
+    // queries that threw in ANY attempt: stamped, and the run exits non-zero
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     while (attempt < maxAttempts && !clean) {
-      val results = timedSweeps(spark, sfDir, suite, iters)
+      val (results, failedNow) = timedSweeps(spark, sfDir, suite, iters)
+      failed ++= failedNow
       attempt += 1
       attemptTotals += results.map(_._2).sum
       val attemptNoisy = results.nonEmpty &&
@@ -190,7 +196,9 @@ object Bench {
           s"env_ratio=${attemptEnv.getOrElse(Double.NaN)} — re-running the sweep " +
           "(round artifacts stamp from a quiet environment)")
     }
-    val (results, noisy, env) = best.getOrElse((Seq.empty, false, None))
+    val (bestResults, noisy, env) = best.getOrElse((Seq.empty, false, None))
+    // a query that failed in another attempt is stamped failed, not timed
+    val results = bestResults.filterNot(r => failed(r._1))
     if (noisy) System.err.println(
       "[graft] bench: median spread exceeds 50% of median min — this run " +
         "was taken under load; treat per-query numbers as upper bounds")
@@ -226,8 +234,10 @@ object Bench {
       s""""attempt_totals":${attemptTotals.mkString("[", ",", "]")},""" +
         s""""first_attempt_total_s":${attemptTotals.head},"""
       else ""
+    val failedField = failed.map(q => s"\"$q\"").mkString("[", ",", "]")
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""iterations":$iters,"attempts":$attempt,"noisy_run":$noisy,""" +
+      s""""failed":$failedField,""" +
       attemptsField +
       envField + s""""jvm":"$jvm","sf":"$sfDir","spread":$spreads,""" +
       s""""queries":$qs,"total_s":$total}"""
@@ -253,5 +263,10 @@ object Bench {
     }
     println(json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[graft] bench: ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

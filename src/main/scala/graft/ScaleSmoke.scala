@@ -144,13 +144,9 @@ object ScaleSmoke {
       .split(",").map(_.trim.toInt).toSeq
     val outFile = if (args.length > 2) args(2) else "SCALE_SMOKE.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import scala.jdk.CollectionConverters._

@@ -11,161 +11,73 @@ import graft.ops._
   * call stays lazy (Spark plans compose); `collect`/`show`/`write*` trigger
   * execution. `schema`/`explain` inspect without executing, like the
   * reference's `transform_schema` chain (frame.py:852-904).
+  *
+  * The op facades are [[OpFacades]], shared with [[LazyFrame]]: each call
+  * runs the op's [[Registry]] handler on `df` with the facade's YAML
+  * fields, so a Frame chain and the same LazyFrame chain's `run` execute
+  * the same handler with the same knobs. Ops name themselves
+  * `{type}_{index}` like LazyFrame's. A facade field that names a dataset
+  * (`sbScore`'s `model`, `bitextMine`'s `targetFrom`, ...) resolves in
+  * `datasets` — bind one with [[withDataset]]; a frame-valued facade
+  * argument binds itself.
+  *
+  * What stays here is what no registered op type does: DataFrame plumbing
+  * and actions, the ANN/retrieval/vocabulary helpers, the DataFrame-valued
+  * arms YAML has no key for, and the typed-config overloads (which restate
+  * no knob names).
   */
-final case class Frame(df: DataFrame, client: LlmClient) {
+final case class Frame(df: DataFrame, client: LlmClient,
+    datasets: Map[String, DataFrame] = Map.empty, opIndex: Int = 0)
+    extends OpFacades[Frame] {
 
   private def next(d: DataFrame): Frame = copy(df = d)
 
-  // -- row-local semantic ops (SURVEY.md §2.2)
-  def semanticMap(name: String, prompt: String, schema: (String, String)*): Frame =
-    next(SemanticMap(df, SemanticMapConfig(name, prompt, schema), client))
+  protected def append(tpe: String, fields: (String, Any)*): Frame =
+    applyOp(tpe, datasets, fields)
+
+  /** The frame-valued field binds `other.df` under a generated dataset
+    * name, which the handler resolves like a pipeline dataset. */
+  protected def appendWith(step: String, tpe: String,
+      fields: (String, Any)*): Frame = {
+    val bound = fields.collect { case (k, f: Frame) => s"_${k}_$opIndex" -> f.df }
+    require(bound.size == 1, s"$tpe: expected one frame-valued field")
+    applyOp(tpe, datasets ++ bound, fields.map {
+      case (k, _: Frame) => k -> bound.head._1
+      case kv => kv
+    })
+  }
+
+  private def applyOp(tpe: String, ds: Map[String, DataFrame],
+      fields: Seq[(String, Any)]): Frame = {
+    val conf = Conf(OpFacades.jmap(
+      (("name" -> s"${tpe}_$opIndex") +: ("type" -> tpe) +: fields): _*))
+    copy(df = Registry(tpe)(df, conf, OpContext(df.sparkSession, client, ds)),
+      opIndex = opIndex + 1)
+  }
+
+  /** Bind `other` as dataset `name` for facades that reference datasets
+    * by name (`sbScore(..., model = name)`, `bitextMine(..., targetFrom =
+    * name)`, `op("vocab_coverage", "vocab" -> name, ...)`). */
+  def withDataset(name: String, other: Frame): Frame =
+    copy(datasets = datasets + (name -> other.df))
+
+  // -- typed-config overloads
   def semanticMap(cfg: SemanticMapConfig): Frame = next(SemanticMap(df, cfg, client))
-  def semanticFilter(name: String, prompt: String, decision: String = "keep"): Frame =
-    next(SemanticFilter(df, SemanticMapConfig(name, prompt, Seq(decision -> "bool")), client))
-  def parallelMap(name: String, prompts: ParallelMap.SubPrompt*): Frame =
-    next(ParallelMap(df, name, prompts, client))
-  def extractRegex(name: String, documentKey: String, pattern: String): Frame =
-    next(ExtractOp.regex(df, name, documentKey, pattern))
-
-  // -- code ops
-  def codeMap(outputs: (String, String)*): Frame = next(CodeMap(df, outputs))
-  def codeFilter(predicate: String): Frame = next(CodeFilter(df, predicate))
-  def codeReduce(name: String, keys: Seq[String], aggs: (String, String)*): Frame =
-    next(CodeReduce(df, keys, aggs, name))
-  def addUuid(name: String): Frame = next(AddUuid(df, name))
-  def dropKeys(keys: String*): Frame = next(df.drop(keys: _*))
-  def limit(n: Int): Frame = next(df.limit(n))
-
-  // -- grouped / pairwise semantic ops (§2.4-2.5)
   def semanticReduce(cfg: SemanticReduce.Config): Frame =
     next(SemanticReduce(df, cfg, client))
   def resolve(cfg: ResolveOp.Config): Frame = next(ResolveOp(df, cfg, client))
   def equijoin(right: Frame, cfg: EquijoinOp.Config): Frame =
     next(EquijoinOp(df, right.df, cfg, client))
+  def parse(cfg: graft.sources.ParseOp.Config): Frame =
+    next(graft.sources.ParseOp(df, cfg))
+  def chatRender(messagesCol: String, template: ChatOps.ChatTemplate): Frame =
+    next(ChatOps.render(df, messagesCol, template))
+  /** Agent map with caller-supplied tool functions (YAML names builtins). */
+  def agentMap(cfg: AgentMap.Config, tools: Map[String, String => String]): Frame =
+    next(AgentMap(df, cfg, tools, client))
 
-  // -- reshaping (§2.8)
-  def split(name: String, splitKey: String, numTokens: Int): Frame =
-    next(SplitOp.byTokenCount(df, name, splitKey, numTokens))
-  def splitDelimiter(name: String, splitKey: String, delimiter: String, group: Int = 1): Frame =
-    next(SplitOp.byDelimiter(df, name, splitKey, delimiter, group))
-  def gather(contentKey: String, docIdKey: String, orderKey: String,
-      previous: Int = 1, nextN: Int = 1): Frame =
-    next(GatherOp(df, contentKey, docIdKey, orderKey, previous, nextN))
-  def unnest(key: String, keepEmpty: Boolean = false): Frame =
-    next(UnnestOp.list(df, key, keepEmpty))
-  def unnestColumns(column: String): Frame = next(UnnestColumnsOp(df, column))
-  def pack(groupCols: Seq[String], orderCol: String, tokenExpr: String,
-      budget: Long): Frame =
-    next(PackOp(df, groupCols, orderCol, tokenExpr, budget))
-  def packBestFit(groupCols: Seq[String], orderCol: String,
-      tokenExpr: String, budget: Long): Frame =
-    next(PackOp.packBestFit(df, groupCols, orderCol, tokenExpr, budget))
-  def budgetSelect(scoreExpr: String, costExpr: String, budget: Long,
-      tieBreak: String): Frame =
-    next(BudgetSelect(df, scoreExpr, costExpr, budget, tieBreak))
-  def budgetSelectGrouped(groupCol: String, scoreExpr: String,
-      costExpr: String, budgets: Map[Any, Long], tieBreak: String,
-      defaultBudget: Long = 0L): Frame =
-    next(BudgetSelect.grouped(df, groupCol, scoreExpr, costExpr, budgets,
-      tieBreak, defaultBudget))
-  def budgetSelectFractions(groupCol: String, scoreExpr: String,
-      costExpr: String, totalBudget: Long, fractions: Map[Any, Double],
-      tieBreak: String): Frame =
-    next(BudgetSelect.groupedFractions(df, groupCol, scoreExpr, costExpr,
-      totalBudget, fractions, tieBreak))
-  def chunkFixed(groupCols: Seq[String], orderCol: String, tokenExpr: String,
-      seqLen: Long): Frame =
-    next(PackOp.chunkFixed(df, groupCols, orderCol, tokenExpr, seqLen))
-
-  // -- temporal joins (this frame = the left/probe side)
-  def asofJoin(right: Frame, leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String, rightPayload: Seq[String],
-      tolerance: Option[Long] = None, suffix: String = "_asof"): Frame =
-    next(TemporalOps.asofJoin(df, right.df, leftKey, rightKey, leftTs,
-      rightTs, rightPayload, tolerance, suffix))
-  def windowJoin(right: Frame, leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String, window: Long,
-      rightPayload: Seq[String], suffix: String = "_near"): Frame =
-    next(TemporalOps.windowJoin(df, right.df, leftKey, rightKey, leftTs,
-      rightTs, window, rightPayload, suffix))
-  def sessionize(key: String, ts: String, gap: Long, tieBreak: String,
-      outCol: String = "session_id"): Frame =
-    next(TemporalOps.sessionize(df, key, ts, gap, tieBreak, outCol))
-  def sessions(key: String, ts: String, gap: Long, tieBreak: String): Frame =
-    next(TemporalOps.sessions(df, key, ts, gap, tieBreak))
-
-  // -- sampling / retrieval (§2.6)
-  def sampleFirst(n: Int, orderCols: String*): Frame = next(SampleOp.first(df, n, orderCols))
-  def sampleHash(keyExpr: String, fraction: Double, seed: Long = 0): Frame =
-    next(SampleOp.uniformHash(df, keyExpr, fraction, seed))
-  def sampleStratified(stratifyKey: String, nPerGroup: Int, orderCols: String*): Frame =
-    next(SampleOp.stratified(df, stratifyKey, nPerGroup, orderCols))
-  def sampleStratifiedUniform(stratifyKey: String, keyExpr: String,
-      nPerGroup: Int, seed: Long = 0): Frame =
-    next(SampleOp.stratifiedUniform(df, stratifyKey, keyExpr, nPerGroup, seed))
-  def sampleWeighted(stratifyKey: String, keyExpr: String, total: Int,
-      weights: Map[String, Double], seed: Long = 0): Frame =
-    next(SampleOp.stratifiedWeighted(df, stratifyKey, keyExpr, total, weights, seed))
-  def sampleWeightedEpochs(stratifyKey: String, keyExpr: String, total: Int,
-      weights: Map[String, Double], seed: Long = 0, maxEpochs: Int = 4): Frame =
-    next(SampleOp.stratifiedWeightedEpochs(df, stratifyKey, keyExpr, total,
-      weights, seed, maxEpochs))
-  def sampleProportional(stratifyKey: String, keyExpr: String,
-      total: Int, seed: Long = 0): Frame =
-    next(SampleOp.stratifiedProportional(df, stratifyKey, keyExpr, total, seed))
-  def sampleWeightedRows(weightExpr: String, k: Int, idExpr: String,
-      seed: Long = 0): Frame =
-    next(SampleOp.weightedByRow(df, weightExpr, k, idExpr, seed))
-  def sampleTemperature(stratifyKey: String, keyExpr: String, total: Int,
-      alpha: Double = 0.3, seed: Long = 0): Frame =
-    next(SampleOp.stratifiedTemperature(df, stratifyKey, keyExpr, total, alpha, seed))
-  def sampleOutliers(embeddingCol: String, stdCutoff: Option[Double] = None,
-      samples: Option[Int] = None, keep: Boolean = true,
-      tieBreak: Seq[String] = Nil): Frame =
-    next(SampleOp.outliers(df, embeddingCol, stdCutoff, samples, keep, tieBreak))
-  def sampleCustom(samples: Frame): Frame = next(SampleOp.custom(df, samples.df))
-  def topkBm25(textCol: String, query: String, k: Int, tieBreak: String*): Frame =
-    next(TopKOp.bm25(df, textCol, query.split("\\s+").toSeq, k, tieBreak))
-  def topkBm25Stratified(textCol: String, query: String, k: Int,
-      stratifyKey: String, tieBreak: String*): Frame =
-    next(TopKOp.bm25Stratified(df, textCol, query.split("\\s+").toSeq, k,
-      stratifyKey, tieBreak))
-  def topkEmbedding(embeddingCol: String, query: Array[Double], k: Int,
-      tieBreak: String*): Frame =
-    next(TopKOp.embedding(df, embeddingCol, query, k, tieBreak))
-  def topkEmbeddingStratified(embeddingCol: String, query: Array[Double], k: Int,
-      stratifyKey: String, tieBreak: String*): Frame =
-    next(TopKOp.embeddingStratified(df, embeddingCol, query, k, stratifyKey, tieBreak))
-  def rankByLikert(name: String, prompt: String, tieBreak: String*): Frame =
-    next(RankOp.byLikert(df, name, prompt, client, tieBreak = tieBreak))
-  def rankByEmbedding(embeddingCol: String, query: Array[Double],
-      direction: String = "desc", tieBreak: Seq[String] = Nil): Frame =
-    next(RankOp.byEmbedding(df, embeddingCol, query, direction, tieBreak))
-  def rankPairwise(name: String, idKey: String, renderExpr: String,
-      blockExpr: String = "", tieBreak: Seq[String] = Nil): Frame =
-    next(RankOp.byPairwise(df, name, idKey, renderExpr, client,
-      blockExpr = blockExpr, tieBreak = tieBreak))
-  def rankSlidingWindow(name: String, embeddingCol: String, query: Array[Double],
-      renderExpr: String, k: Int = 50, windowSize: Int = 10,
-      tieBreak: Seq[String] = Nil): Frame =
-    next(RankOp.bySlidingWindow(df, name, embeddingCol, query, renderExpr, client,
-      k = k, windowSize = windowSize, tieBreak = tieBreak))
-  def rankCalibrated(name: String, embeddingCol: String, promptExpr: String,
-      sampleSize: Int, tieBreak: String*): Frame =
-    next(RankOp.byCalibratedEmbedding(df, name, embeddingCol, promptExpr, client,
-      sampleSize = sampleSize, tieBreak = tieBreak))
-  def topkLlmCompare(name: String, prompt: String, k: Int, tieBreak: String*): Frame =
-    next(TopKOp.llmCompare(df, name, prompt, k, client, tieBreak = tieBreak))
-
-  // -- clustering (§2.10)
-  def cluster(embeddingCol: String, renderExpr: String, numClusters: Int,
-      outputKey: String = "clusters"): Frame =
-    next(ClusterOp(df, embeddingCol, renderExpr, numClusters, client,
-      outputKey = outputKey))
-  def clusterHierarchical(embeddingCol: String, renderExpr: String, depth: Int,
-      outputKey: String = "clusters"): Frame =
-    next(ClusterOp.hierarchical(df, embeddingCol, renderExpr, depth, client,
-      outputKey = outputKey))
+  // -- relational plumbing
+  def dropKeys(keys: String*): Frame = next(df.drop(keys: _*))
 
   // -- set operations (same name-aligned semantics as the YAML step heads:
   // union is by column name and distinct unless asked otherwise; the right
@@ -184,764 +96,24 @@ final case class Frame(df: DataFrame, client: LlmClient) {
     next(if (all) df.exceptAll(r) else df.except(r))
   }
 
-  // -- dedup family (candidate-pair frames for the *Pairs entries; the
-  // dedup verbs drop the larger id of each near-dup pair like dedupMinhash)
-  def dedupExact(textCol: String, tieBreak: String): Frame =
-    next(graft.dedup.ExactDedup(df, textCol, tieBreak))
-  def dedupMinhash(idCol: String, textCol: String, threshold: Double = 0.8,
-      maxBucketSize: Option[Int] = None, maxBucketHead: Option[Int] = None): Frame =
-    next(graft.dedup.MinHashDedup(df, idCol, textCol,
-      jaccardThreshold = threshold, maxBucketSize = maxBucketSize,
-      maxBucketHead = maxBucketHead))
-  def dedupMinhashKeepBest(idCol: String, textCol: String,
-      qualityExpr: String = "", threshold: Double = 0.8,
-      maxBucketSize: Option[Int] = None, maxBucketHead: Option[Int] = None): Frame =
-    next(graft.dedup.MinHashDedup.keepBest(df, idCol, textCol, qualityExpr,
-      jaccardThreshold = threshold, maxBucketSize = maxBucketSize,
-      maxBucketHead = maxBucketHead))
-  def dedupAgainst(reference: Frame, idCol: String, textCol: String,
-      refIdCol: String = "", refTextCol: String = "",
-      threshold: Double = 0.8,
-      maxBucketSize: Option[Int] = None,
-      maxBucketHead: Option[Int] = None): Frame =
-    next(graft.dedup.MinHashDedup.cleanAgainstReference(df, idCol, textCol,
-      reference.df,
-      if (refIdCol.isEmpty) idCol else refIdCol,
-      if (refTextCol.isEmpty) textCol else refTextCol,
-      jaccardThreshold = threshold,
-      maxBucketSize = maxBucketSize, maxBucketHead = maxBucketHead))
-  def semdedup(idCol: String, embCol: String, nClusters: Int,
-      threshold: Double = 0.95, qualityExpr: String = "",
-      maxClusterSize: Option[Int] = None,
-      maxClusterHead: Option[Int] = None): Frame =
-    next(graft.dedup.SemDedup.keepBest(df, idCol, embCol, nClusters,
-      threshold, qualityExpr, maxClusterSize, maxClusterHead))
-  def simhashPairs(idCol: String, textCol: String, maxHamming: Int = 3,
-      maxBucketSize: Option[Int] = None, maxBucketHead: Option[Int] = None): Frame =
-    next(graft.dedup.SimHashDedup.candidatePairs(df, idCol, textCol, maxHamming,
-      maxBucketSize, maxBucketHead))
-  def ngramJaccardPairs(idCol: String, textCol: String, blockExpr: String,
-      n: Int = 3, threshold: Double = 0.5,
-      maxPostingSize: Option[Int] = None, maxPostingHead: Option[Int] = None): Frame =
-    next(graft.dedup.NgramJaccardDedup.pairs(df, idCol, textCol, blockExpr, n,
-      threshold, maxPostingSize, maxPostingHead))
-  def embeddingDedupPairs(idCol: String, embCol: String, dim: Int,
-      threshold: Double = 0.95, numPlanes: Int = 8,
-      maxBucketSize: Option[Int] = None, maxBucketHead: Option[Int] = None): Frame =
-    next(graft.dedup.EmbeddingDedup.pairs(df, idCol, embCol, dim, numPlanes,
-      threshold, maxBucketSize = maxBucketSize, maxBucketHead = maxBucketHead))
-
-  def tfidfTopTerms(idCol: String, textCol: String, k: Int): Frame =
-    next(graft.ops.TfIdfOp.topTerms(df, idCol, textCol, k))
-  def unigramSurprisal(idCol: String, textCol: String): Frame =
-    next(graft.ops.UnigramScore(df, idCol, textCol))
-  def pplBuckets(idCol: String, textCol: String, nBuckets: Int = 3): Frame =
-    next(graft.ops.UnigramScore.ccnetBuckets(df, idCol, textCol, nBuckets))
-  def interleave(stratifyCol: String, orderExpr: String,
-      outCol: String = "interleave_rank"): Frame =
-    next(graft.ops.InterleaveOp(df, stratifyCol, orderExpr, outCol))
-  def shuffle(idExpr: String, seed: Long,
-      outCol: String = "shuffle_rank"): Frame =
-    next(graft.ops.InterleaveOp.shuffle(df, idExpr, seed, outCol))
-  def redactPii(textCol: String, outCol: Option[String] = None): Frame =
-    next(df.withColumn(outCol.getOrElse(textCol),
-      graft.functions.TextFunctions.redactPii(
-        org.apache.spark.sql.functions.col(textCol))))
-  def dedupLines(idCol: String, textCol: String, delim: String = "\n",
-      maxDocFreq: Long = 1000): Frame =
-    next(graft.dedup.LineDedup(df, idCol, textCol, delim, maxDocFreq))
-  def dedupSpans(idCol: String, textCol: String, n: Int = 50,
-      delim: String = " "): Frame =
-    next(graft.dedup.SpanDedup(df, idCol, textCol, n, delim))
-  def importanceWeight(idCol: String, textCol: String, target: Frame,
-      targetTextCol: String, outCol: String = "importance_weight"): Frame =
-    next(graft.ops.ImportanceWeightOp.logRatio(df, idCol, textCol,
-      target.df, targetTextCol, outCol))
-  def linearScore(idCol: String, textCol: String, weights: Frame,
-      bias: Double = 0.0, mode: String = "binary",
-      outCol: String = "quality_score"): Frame =
-    next(LinearScore.withScore(df, idCol, textCol, weights.df, bias, mode, outCol))
-  def zorder(cols: Seq[String], bits: Int = 8,
-      outCol: String = "zvalue"): Frame =
-    next(ZOrder.zvalue(df, cols, bits, outCol))
-  def zorderLayout(cols: Seq[String], numFiles: Int, bits: Int = 8,
-      outCol: String = "zvalue"): Frame =
-    next(ZOrder.layout(df, cols, numFiles, bits, outCol))
-  def qualitySignals(textCol: String,
-      cfg: QualityRules.Config = QualityRules.Config()): Frame =
-    next(QualityRules.signals(df, textCol, cfg))
-  def qualityFilter(textCol: String,
-      cfg: QualityRules.Config = QualityRules.Config()): Frame =
-    next(QualityRules.filter(df, textCol, cfg))
-  def urlParse(urlCol: String): Frame =
-    next(UrlOps.parse(df, urlCol))
-  def urlHostStats(urlCol: String): Frame =
-    next(UrlOps.hostStats(df, urlCol))
-  def bpePairCounts(textCol: String): Frame =
-    next(BpeTrain.pairCounts(df, textCol))
-  def distinctNgrams(sliceCol: String, textCol: String, n: Int = 3,
-      approx: Boolean = false, rsd: Double = 0.02): Frame =
-    next(Diversity.distinctN(df, sliceCol, textCol, n, approx, rsd))
-  def sq8Encode(embCol: String, outCol: String = "codes"): Frame = {
-    val (mn, mx) = graft.ann.VectorQuantize.trainSq(df, embCol)
-    next(graft.ann.VectorQuantize.sqEncode(df, embCol, mn, mx, outCol = outCol))
-  }
-  def pqEncode(embCol: String, nSub: Int, nCodes: Int,
-      outCol: String = "pq_codes"): Frame = {
-    val cb = graft.ann.ProductQuantize.trainPq(df, embCol, nSub, nCodes)
-    next(graft.ann.ProductQuantize.encode(df, embCol, cb, outCol))
-  }
-  def chatRender(messagesCol: String, maskRole: String = "assistant"): Frame =
-    next(ChatOps.renderWithSpans(df, messagesCol, maskRole))
-  def chatRender(messagesCol: String, template: ChatOps.ChatTemplate): Frame =
-    next(ChatOps.render(df, messagesCol, template))
-  /** Typed content-part arms (multimodal chat corpora). */
-  def chatRenderParts(messagesCol: String,
-      maskRole: String = "assistant"): Frame =
-    next(ChatOps.renderPartsWithSpans(df, messagesCol,
-      maskRole = maskRole))
-  def partsToContent(messagesCol: String,
-      outCol: String = "messages_flat"): Frame =
-    next(ChatOps.partsToContent(df, messagesCol, outCol = outCol))
-  def conversationStatsParts(messagesCol: String): Frame =
-    next(ChatOps.statsParts(df, messagesCol))
-  def pseudonymizeConversationParts(messagesCol: String,
-      pattern: String = graft.ops.Pseudonymize.EmailPattern,
-      label: String = "EMAIL",
-      outCol: String = "messages_pseudo"): Frame =
-    next(Pseudonymize.conversationParts(df, messagesCol, pattern, label,
-      outCol))
-  def validateConversationParts(messagesCol: String): Frame =
-    next(ChatOps.validateParts(df, messagesCol))
-  /** Tool-call conversation arms (agentic SFT corpora). */
-  def chatRenderTools(messagesCol: String,
-      maskRole: String = "assistant"): Frame =
-    next(ChatOps.renderTools(df, messagesCol, maskRole = maskRole))
-  def validateConversationTools(messagesCol: String): Frame =
-    next(ChatOps.validateTools(df, messagesCol))
-  def conversationStatsTools(messagesCol: String): Frame =
-    next(ChatOps.statsTools(df, messagesCol))
-  def trimConversationToBudget(messagesCol: String, budget: Long,
-      keepSystem: Boolean = true): Frame =
-    next(ChatOps.trimToBudget(df, messagesCol, budget, keepSystem))
-  def lshPlan(numPerms: Int, threshold: Double): Frame =
-    next(graft.dedup.LshPlan.choose(df.sparkSession, numPerms, threshold))
-  def conversationFromPairs(promptCol: String, responseCol: String,
-      system: Option[String] = None): Frame =
-    next(ChatOps.fromPromptResponse(df, promptCol, responseCol, system))
-  def conversationValidate(messagesCol: String): Frame =
-    next(ChatOps.validate(df, messagesCol))
-  def robotsRules(hostCol: String, contentCol: String): Frame =
-    next(RobotsTxt.parseRules(df, hostCol, contentCol))
-  def robotsAllowed(idCol: String, hostCol: String, pathCol: String,
-      rules: Frame, agent: String): Frame =
-    next(RobotsTxt.isAllowed(df, idCol, hostCol, pathCol, rules.df, agent))
-  def scoreBorda(scoreCols: Seq[String], tieBreak: String): Frame =
-    next(ScoreEnsemble.borda(df, scoreCols, tieBreak))
-  def scoreZ(scoreCols: Seq[String], weights: Seq[Double] = Nil): Frame =
-    next(ScoreEnsemble.zscore(df, scoreCols, weights))
-  def lineClean(textCol: String,
-      cfg: LineClean.Config = LineClean.Config()): Frame =
-    next(LineClean(df, textCol, cfg))
-  def encodingRepair(textCol: String): Frame =
-    next(EncodingQuality.repair(df, textCol))
-  def scriptProfile(textCol: String): Frame =
-    next(ScriptProfile(df, textCol))
-  def markdownSections(idCol: String, textCol: String): Frame =
-    next(MarkdownSegment.sections(df, idCol, textCol))
-  def pseudonymize(textCol: String,
-      pattern: String = Pseudonymize.EmailPattern,
-      label: String = "EMAIL"): Frame =
-    next(Pseudonymize(df, textCol, pattern, label))
-  def fim(idCol: String, textCol: String, rate: Double = 0.5,
-      spmRate: Double = 0.5, seed: Long = 0L): Frame =
-    next(Fim(df, idCol, textCol, rate, spmRate, seed))
-  def spanCorrupt(idCol: String, textCol: String, rate: Double = 0.15,
-      spanLen: Int = 3, seed: Long = 0L): Frame =
-    next(SpanCorrupt(df, idCol, textCol, rate, spanLen, seed))
-  def conversationFromEvents(keyCol: String, tsCol: String,
-      roleCol: String, contentCol: String, gap: Long,
-      tieBreak: String): Frame =
-    next(ChatOps.fromEventLog(df, keyCol, tsCol, roleCol, contentCol,
-      gap, tieBreak))
-  def lengthBatches(lenCol: String, batchSize: Int,
-      tieBreak: String): Frame =
-    next(LengthBucket.assignBatches(df, lenCol, batchSize, tieBreak))
-  def paddingReport(lenCol: String, batchSize: Int,
-      tieBreak: String): Frame =
-    next(LengthBucket.paddingReport(df, lenCol, batchSize, tieBreak))
-  def preferenceFromPairs(promptCol: String, chosenCol: String,
-      rejectedCol: String, system: Option[String] = None): Frame =
-    next(Preference.fromPromptPair(df, promptCol, chosenCol, rejectedCol,
-      system))
-  def preferenceValidate(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected"): Frame =
-    next(Preference.validatePairs(df, chosenCol, rejectedCol))
-  def preferenceRender(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected",
-      template: ChatOps.ChatTemplate = ChatOps.ChatTemplate.Default): Frame =
-    next(Preference.renderPair(df, chosenCol, rejectedCol, template))
-  def preferenceLengthBias(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected"): Frame =
-    next(Preference.lengthBias(df, chosenCol, rejectedCol))
-  def kAnonymity(cols: Seq[String], k: Int): Frame =
-    next(Profile.kAnonymity(df, cols, k))
-  /** THIS frame = source embeddings; mine margin-scored bitext
-    * candidates against `target` (Artetxe & Schwenk 2019). */
-  def bitextMargin(idCol: String, embCol: String,
-      target: Frame, targetIdCol: String, targetEmbCol: String,
-      k: Int = 4, threshold: Double = 1.0,
-      mutualBest: Boolean = false): Frame =
-    next(BitextMine.margin(df, idCol, embCol, target.df, targetIdCol,
-      targetEmbCol, k, threshold, mutualBest))
-  /** The IVF scale arm of [[bitextMargin]] — bit-identical when
-    * `nProbe = nCells`, approximate (and ~nCells/nProbe cheaper) below. */
-  def bitextMarginIvf(idCol: String, embCol: String,
-      target: Frame, targetIdCol: String, targetEmbCol: String,
-      k: Int = 4, threshold: Double = 1.0, mutualBest: Boolean = false,
-      nCells: Int = 256, nProbe: Int = 8): Frame =
-    next(BitextMine.marginIvf(df, idCol, embCol, target.df, targetIdCol,
-      targetEmbCol, k, threshold, mutualBest, nCells, nProbe))
-  /** One-row dropped-candidate report for [[bitextMargin]] (always
-    * zero drops on non-empty sides — the exactness baseline). */
-  def bitextMarginAudit(idCol: String, embCol: String,
-      target: Frame, targetIdCol: String, targetEmbCol: String,
-      k: Int = 4): Frame =
-    next(BitextMine.marginAudit(df, idCol, embCol, target.df,
-      targetIdCol, targetEmbCol, k))
-  /** One-row dropped-candidate report for [[bitextMarginIvf]] — the
-    * recall-leak gauge for approximate probing (nProbe < nCells). */
-  def bitextMarginIvfAudit(idCol: String, embCol: String,
-      target: Frame, targetIdCol: String, targetEmbCol: String,
-      k: Int = 4, nCells: Int = 256, nProbe: Int = 8): Frame =
-    next(BitextMine.marginIvfAudit(df, idCol, embCol, target.df,
-      targetIdCol, targetEmbCol, k, nCells, nProbe))
-  /** THIS frame = queries; mine BM25 hard negatives from `corpus`,
-    * excluding `positives` (the DPR training-pair prep). */
-  def hardNegativesBm25(qidCol: String, qtextCol: String,
-      positives: Frame, pQidCol: String, pDocCol: String,
-      corpus: Frame, docIdCol: String, textCol: String,
-      negPerQuery: Int = 5): Frame =
-    next(HardNegatives.mine(df, qidCol, qtextCol, positives.df,
-      pQidCol, pDocCol, corpus.df, docIdCol, textCol, negPerQuery))
-  def kAnonymityGroups(cols: Seq[String], k: Int,
-      limit: Int = 1000): Frame =
-    next(Profile.kAnonymityGroups(df, cols, k, limit))
-  /** Distinct l-diversity (Machanavajjhala 2006) — the sensitive-value
-    * layer k-anonymity misses. */
-  def lDiversity(qiCols: Seq[String], sensitiveCol: String, l: Int): Frame =
-    next(Profile.lDiversity(df, qiCols, sensitiveCol, l))
-  def lDiversityGroups(qiCols: Seq[String], sensitiveCol: String, l: Int,
-      limit: Int = 1000): Frame =
-    next(Profile.lDiversityGroups(df, qiCols, sensitiveCol, l, limit))
-  def lDiversityEntropy(qiCols: Seq[String], sensitiveCol: String,
-      l: Int): Frame =
-    next(Profile.lDiversityEntropy(df, qiCols, sensitiveCol, l))
-  /** t-closeness (Li et al. 2007) — the distribution layer l-diversity
-    * misses. */
-  def tCloseness(qiCols: Seq[String], sensitiveCol: String,
-      t: Double): Frame =
-    next(Profile.tCloseness(df, qiCols, sensitiveCol, t))
-  def tClosenessGroups(qiCols: Seq[String], sensitiveCol: String,
-      t: Double, limit: Int = 1000): Frame =
-    next(Profile.tClosenessGroups(df, qiCols, sensitiveCol, t, limit))
-  def tClosenessNumeric(qiCols: Seq[String], sensitiveCol: String,
-      t: Double, bins: Int = 16): Frame =
-    next(Profile.tClosenessNumeric(df, qiCols, sensitiveCol, t, bins))
-  def tClosenessNumericGroups(qiCols: Seq[String], sensitiveCol: String,
-      t: Double, bins: Int = 16, limit: Int = 1000): Frame =
-    next(Profile.tClosenessNumericGroups(df, qiCols, sensitiveCol, t,
-      bins, limit))
-  /** Typed content-part preference arms (multimodal DPO corpora). */
-  def preferenceValidateParts(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected"): Frame =
-    next(Preference.validatePairsParts(df, chosenCol, rejectedCol))
-  def preferenceRenderParts(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected",
-      template: ChatOps.ChatTemplate = ChatOps.ChatTemplate.Default): Frame =
-    next(Preference.renderPairParts(df, chosenCol, rejectedCol, template))
-  /** Tool-call preference arms (agentic DPO corpora). */
-  def preferenceValidateTools(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected"): Frame =
-    next(Preference.validatePairsTools(df, chosenCol, rejectedCol))
-  def preferenceRenderTools(chosenCol: String = "messages_chosen",
-      rejectedCol: String = "messages_rejected",
-      template: ChatOps.ChatTemplate = ChatOps.ChatTemplate.Default): Frame =
-    next(Preference.renderPairTools(df, chosenCol, rejectedCol, template))
-  def rankingEval(qidCol: String, scoreCol: String, relCol: String,
-      k: Int, tieCol: String): Frame =
-    next(RankingEval.perQuery(df, qidCol, scoreCol, relCol, k, tieCol))
-  def rankingSummary(): Frame = next(RankingEval.summary(df))
-  def htmlLinks(idCols: Seq[String], htmlCol: String,
-      hostCol: String): Frame =
-    next(graft.sources.HtmlLinks.extract(df, idCols, htmlCol, hostCol))
-  def hostEdges(hostCol: String): Frame =
-    next(graft.sources.HtmlLinks.hostEdges(df, hostCol))
-  def ngramF1(idCols: Seq[String], candCol: String, refCol: String,
-      n: Int = 1): Frame =
-    next(TextSim.ngramF1(df, idCols, candCol, refCol, n))
-  def rougeL(idCols: Seq[String], candCol: String, refCol: String,
-      maxTokens: Int = 2000): Frame =
-    next(TextSim.rougeL(df, idCols, candCol, refCol, maxTokens))
-  def chrF(idCols: Seq[String], candCol: String, refCol: String,
-      maxN: Int = 6, beta: Double = 2.0): Frame =
-    next(TextSim.chrF(df, idCols, candCol, refCol, maxN, beta))
-  def bleu(idCols: Seq[String], candCol: String, refCol: String,
-      maxN: Int = 4): Frame =
-    next(TextSim.bleu(df, idCols, candCol, refCol, maxN))
-  def wer(idCols: Seq[String], candCol: String, refCol: String,
-      maxTokens: Int = 2000, maxRate: Option[Double] = None): Frame =
-    next(TextSim.wer(df, idCols, candCol, refCol, maxTokens, maxRate))
-  def cer(idCols: Seq[String], candCol: String, refCol: String,
-      maxChars: Int = 10000, maxRate: Option[Double] = None): Frame =
-    next(TextSim.cer(df, idCols, candCol, refCol, maxChars, maxRate))
-  def editPairs(idCol: String, textCol: String, t: Int): Frame =
-    next(graft.dedup.EditDedup.pairs(df, idCol, textCol, t))
-  def editKeepBest(idCol: String, textCol: String, t: Int,
-      qualityExpr: String = ""): Frame =
-    next(graft.dedup.EditDedup.keepBest(df, idCol, textCol, t, qualityExpr))
-  def editAudit(idCol: String, textCol: String, t: Int,
-      qualityExpr: String = ""): Frame =
-    next(graft.dedup.EditDedup.audit(df, idCol, textCol, t, qualityExpr))
-  def minhashAudit(idCol: String, textCol: String,
-      qualityExpr: String = ""): Frame =
-    next(graft.dedup.MinHashDedup.audit(df, idCol, textCol, qualityExpr))
-  def sbTrain(textCol: String): Frame =
-    next(StupidBackoff.trainModel(df, textCol))
-  def sbScore(idCol: String, textCol: String, model: Frame,
-      alpha: Double = 0.4): Frame =
-    next(df.join(StupidBackoff.perDocWithModel(df, idCol, textCol,
-      model.df, alpha), Seq(idCol)))
-  def distinctSketch(sliceCol: String, valueExpr: String,
-      lgK: Int = 12): Frame =
-    next(DistinctSketch.build(df, sliceCol, valueExpr, lgK))
-  def mergeSketches(): Frame = next(DistinctSketch.merge(df))
-  def runsCollapse(keyCol: String, orderCol: String, valueCol: String,
-      tieCol: String): Frame =
-    next(Runs.collapse(df, keyCol, orderCol, valueCol, tieCol))
-  def skipgramPairs(idCol: String, textCol: String, window: Int = 2,
-      negatives: Int = 2, seed: Long = 0L): Frame =
-    next(SkipGram.pairs(df, idCol, textCol, window, negatives, seed))
-  def trainEmbeddings(textCol: String, dim: Int = 64, minCount: Int = 2,
-      maxIter: Int = 1, seed: Long = 42L, window: Int = 5): Frame =
-    next(EmbedTrain.word2vec(df, textCol, dim, minCount, maxIter, seed,
-      window))
-  def docVectors(idCol: String, textCol: String, vectors: Frame): Frame =
-    next(EmbedTrain.docVectors(df, idCol, textCol, vectors.df))
-  def trainClassifier(labelCol: String, textCol: String,
-      vocabSize: Int = 65536, maxIter: Int = 50,
-      regParam: Double = 0.0): TextClassifier.Model =
-    TextClassifier.train(df, labelCol, textCol, vocabSize, maxIter,
-      regParam)
-  def parseJson(jsonCol: String, schema: Seq[(String, String)],
-      keepRaw: Boolean = true): Frame =
-    next(JsonOps.parseColumn(df, jsonCol, schema, keepRaw))
-  def stratifiedExact(stratifyCol: String, fraction: Double,
-      idExpr: String): Frame =
-    next(SampleOp.stratifiedExact(df, stratifyCol, fraction, idExpr))
-  def robotsSitemaps(hostCol: String, contentCol: String): Frame =
-    next(RobotsTxt.sitemaps(df, hostCol, contentCol))
-  def robotsCrawlDelays(hostCol: String, contentCol: String): Frame =
-    next(RobotsTxt.crawlDelays(df, hostCol, contentCol))
-  def cohenKappa(aCol: String, bCol: String): Frame =
-    next(Agreement.cohenKappa(df, aCol, bCol))
-  def fleissKappa(itemCol: String, labelCol: String): Frame =
-    next(Agreement.fleissKappa(df, itemCol, labelCol))
-  def cohenKappaDistributed(aCol: String, bCol: String): Frame =
-    next(Agreement.cohenKappaDistributed(df, aCol, bCol))
-  def krippendorffAlpha(itemCol: String, labelCol: String): Frame =
-    next(Agreement.krippendorffAlpha(df, itemCol, labelCol))
-  def agreementConfusion(aCol: String, bCol: String): Frame =
-    next(Agreement.confusion(df, aCol, bCol))
-  def redactIbans(textCol: String, token: String = "<IBAN>"): Frame =
-    next(df.withColumn(textCol, graft.functions.TextFunctions
-      .redactIbans(org.apache.spark.sql.functions.col(textCol), token)))
-  def novelty(sliceCol: String, textCol: String, reference: Frame,
-      refTextCol: String, n: Int = 3): Frame =
-    next(Novelty.report(df, sliceCol, textCol, reference.df,
-      refTextCol, n))
-  def editComponents(idCol: String, textCol: String, t: Int): Frame =
-    next(graft.dedup.EditDedup.components(df, idCol, textCol, t))
-  def conversationStats(messagesCol: String): Frame =
-    next(ChatOps.stats(df, messagesCol))
-  def mergeConsecutiveRoles(messagesCol: String,
-      sep: String = "\n"): Frame =
-    next(ChatOps.mergeConsecutiveRoles(df, messagesCol, sep))
-  def apportion(domainCol: String, countExpr: String,
-      budget: Long): Frame =
-    next(MixtureSolver.apportion(df, domainCol, countExpr, budget))
-  def unimax(domainCol: String, countExpr: String, budget: Long,
-      maxEpochs: Int = 4): Frame =
-    next(MixtureSolver.unimax(df, domainCol, countExpr, budget, maxEpochs))
-  def ngramContainmentPairs(idCol: String, textCol: String,
-      blockExpr: String, n: Int = 3, threshold: Double = 0.8): Frame =
-    next(graft.dedup.NgramJaccardDedup.containmentPairs(df, idCol,
-      textCol, blockExpr, n, threshold))
-  def truncationReport(lenExpr: String, seqLen: Long): Frame =
-    next(PackOp.truncationReport(df, lenExpr, seqLen))
-  def truncationCurve(lenExpr: String, seqLens: Seq[Long]): Frame =
-    next(PackOp.truncationCurve(df, lenExpr, seqLens))
-  def zipfReport(textCol: String, topK: Int = 100): Frame =
-    next(CorpusStats.zipfReport(df, textCol, topK))
-  def topValues(cols: Seq[String], k: Int = 10): Frame =
-    next(Profile.topValues(df, cols, k))
-  def freshness(tsCol: String, asOfMicros: Long,
-      groupCols: Seq[String] = Nil): Frame =
-    next(TemporalOps.freshness(df, tsCol, asOfMicros, groupCols))
-  def effectiveCrawlDelay(delays: Frame, agent: String,
-      defaultDelay: Double = 0.0): Frame =
-    next(RobotsTxt.effectiveDelay(df, delays.df, agent, defaultDelay))
-  def scorePercentile(scoreCols: Seq[String], tieBreak: String): Frame =
-    next(ScoreEnsemble.percentile(df, scoreCols, tieBreak))
-  def scoreRrf(scoreCols: Seq[String], tieBreak: String,
-      k: Int = 60): Frame =
-    next(ScoreEnsemble.rrf(df, scoreCols, tieBreak, k))
-  def phraseBlocklist(textCol: String, phrases: Seq[String],
-      report: Boolean = false): Frame =
-    next(Hygiene.blocklistPhrases(df, textCol, phrases, report))
-  /** Dataset-sized blocklist arm: broadcast Aho–Corasick scan against a
-    * phrase FRAME (the 10⁴–10⁶-entry production-blocklist shape). */
-  def phraseBlocklist(textCol: String, phrases: Frame, phraseCol: String,
-      report: Boolean): Frame =
-    next(if (report) graft.ops.Blocklist.report(df, textCol, phrases.df, phraseCol)
-      else graft.ops.Blocklist.filterBlocked(df, textCol, phrases.df, phraseCol))
-  def pseudonymizeConversation(messagesCol: String,
-      pattern: String = graft.ops.Pseudonymize.EmailPattern,
-      label: String = "EMAIL",
-      outCol: String = "messages_pseudo"): Frame =
-    next(Pseudonymize.conversation(df, messagesCol, pattern, label,
-      outCol))
-  def schemaDiff(prev: Frame): Frame =
-    next(SnapshotDiff.schemaDiff(prev.df, df))
-  def histogram(colName: String, bins: Int, lo: Double,
-      hi: Double): Frame =
-    next(Profile.histogram(df, colName, bins, lo, hi))
-  def splitLeakage(idCol: String, textCol: String, splitCol: String,
-      t: Int = 2): Frame =
-    next(SplitLeakage.report(df, idCol, textCol, splitCol, t))
-  def splitLeakagePairs(idCol: String, textCol: String,
-      splitCol: String, t: Int = 2): Frame =
-    next(SplitLeakage.pairs(df, idCol, textCol, splitCol, t))
-  /** Pair-sharing arms: feed a precomputed `editPairs` frame
-    * ([[graft.dedup.EditDedup.pairs]] output) so dedup + leakage +
-    * report pay the PassJoin once. */
-  def splitLeakage(idCol: String, splitCol: String,
-      editPairs: Frame): Frame =
-    next(SplitLeakage.report(df, idCol, splitCol, editPairs.df))
-  def splitLeakagePairs(idCol: String, splitCol: String,
-      editPairs: Frame): Frame =
-    next(SplitLeakage.pairs(df, idCol, splitCol, editPairs.df))
-  def truncateEmbedding(embCol: String, dim: Int,
-      outCol: String = ""): Frame =
-    next(df.withColumn(if (outCol.isEmpty) embCol else outCol,
-      graft.functions.VectorFunctions.truncateNormalize(
-        org.apache.spark.sql.functions.col(embCol), dim)))
-  def dedupComponentSizes(componentCol: String = "component"): Frame =
-    next(graft.dedup.DedupReport.componentSizes(df, componentCol))
-  def dedupSummary(corpusRows: Long,
-      componentCol: String = "component"): Frame =
-    next(graft.dedup.DedupReport.summary(df, corpusRows, componentCol))
-  def correlationMatrix(cols: Seq[String]): Frame =
-    next(Profile.correlationMatrix(df, cols))
-  def saltedJoin(small: Frame, key: String, salts: Int,
-      saltExpr: String): Frame =
-    next(SaltedJoin.inner(df, small.df, key, salts, saltExpr))
-  def collapseRepeats(textCol: String, maxGram: Int = 3): Frame =
-    next(RepeatCollapse.collapse(df, textCol, maxGram))
-  def bradleyTerry(aCol: String, bCol: String, winnerCol: String,
-      nIter: Int = 20): Frame =
-    next(BradleyTerry.fit(df, aCol, bCol, winnerCol, nIter))
-  def vocabDecode(idsCol: String, vocab: Frame,
-      unkToken: String = "<unk>"): Frame =
-    next(VocabCoverage.fromIds(df, idsCol, vocab.df, unkToken = unkToken))
-  def anchorTexts(k: Int = 10): Frame =
-    next(graft.sources.HtmlLinks.anchorTexts(df, k))
-  def scanPruneEstimate(lo: Double, hi: Double): Frame =
-    next(graft.sources.ScanStats.pruneEstimate(df, lo, hi))
-  def skewSummary(keyCol: String): Frame =
-    next(SkewReport.summary(df, keyCol))
-  def skewHeavyKeys(keyCol: String, k: Int,
-      targetPerKey: Long = 1000000L): Frame =
-    next(SkewReport.heavyKeys(df, keyCol, k, targetPerKey))
-  def pmiCooccur(textCol: String, window: Int = 2,
-      minCount: Long = 1L): Frame =
-    next(Cooccur.pmi(df, textCol, window, minCount))
-  def markdownTables(idCol: String, textCol: String): Frame =
-    next(MarkdownTables.cells(df, idCol, textCol))
-  def datacard(textCol: String, sliceCol: String,
-      approx: Boolean = false): Frame =
-    next(Datacard(df, textCol, sliceCol, approx))
-  def fingerprint(cols: Seq[String]): Frame =
-    next(Datacard.fingerprint(df, cols))
-  def datacardPerSlice(textCol: String, sliceCol: String,
-      approx: Boolean = false): Frame =
-    next(Datacard.perSlice(df, textCol, sliceCol, approx))
+  // -- DataFrame-valued arms YAML has no key for (its `sample: custom`
+  // lists rows inline; `url_parse` takes its suffix table inline)
+  def sampleCustom(samples: Frame): Frame = next(SampleOp.custom(df, samples.df))
   def urlDomainViaSuffixes(hostCol: String, suffixes: Frame): Frame =
     next(UrlOps.registeredDomainViaTable(df, hostCol, suffixes.df))
-  def bpeTrain(textCol: String, numMerges: Int,
-      mergesPerRound: Int = 1): Seq[BpeTrain.Merge] =
-    BpeTrain.train(df, textCol, numMerges, mergesPerRound)
-  def bpeEncode(textCol: String, merges: Seq[BpeTrain.Merge],
-      greedy: Boolean = false): Frame =
-    next(if (greedy) BpeTrain.encodeGreedy(df, textCol, merges)
-    else BpeTrain.encode(df, textCol, merges))
-  /** GPT-2-parity byte-level arm: regex pretokenizer + byte alphabet. */
-  def bpeTrainByteLevel(textCol: String, numMerges: Int,
-      mergesPerRound: Int = 1): Seq[BpeTrain.Merge] =
-    BpeTrain.trainByteLevel(df, textCol, numMerges, mergesPerRound)
-  def bpeEncodeByteLevel(textCol: String,
-      merges: Seq[BpeTrain.Merge]): Frame =
-    next(BpeTrain.encodeByteLevelGreedy(df, textCol, merges))
-  /** Unigram-LM (Kudo 2018) train/encode — the SentencePiece-style
-    * sibling of the BPE family. */
-  def unigramTrain(textCol: String, maxPieceLen: Int = 8,
-      seedSize: Int = 2000, targetSize: Int = 800,
-      emIters: Int = 2): Frame =
-    next(UnigramLm.train(df, textCol, maxPieceLen, seedSize, targetSize,
-      emIters))
-  def unigramEncode(textCol: String, vocab: Frame,
-      maxPieceLen: Int = 8): Frame =
-    next(UnigramLm.encode(df, textCol, vocab.df, maxPieceLen))
-  /** WordPiece (Schuster & Nakajima 2012) train/encode — the BERT
-    * member of the tokenizer family. */
-  def wordpieceTrain(textCol: String, numMerges: Int,
-      mergesPerRound: Int = 1): Frame =
-    next(WordPiece.mergeTable(df.sparkSession,
-      WordPiece.train(df, textCol, numMerges, mergesPerRound)))
   /** The encodable (piece) vocabulary — train + corpus alphabet in one
-    * call; THIS (not [[wordpieceTrain]]'s merge table) is what
-    * [[wordpieceEncode]] consumes. */
+    * call; THIS (not `wordpieceTrain`'s merge table) is what
+    * `wordpieceEncode(vocabFrom = ...)` consumes. */
   def wordpieceVocab(textCol: String, numMerges: Int,
       mergesPerRound: Int = 1): Frame =
     next(WordPiece.vocabTable(df, textCol,
       WordPiece.train(df, textCol, numMerges, mergesPerRound)))
-  def wordpieceEncode(textCol: String, vocab: Frame,
-      unk: String = "[UNK]", maxChars: Int = 100): Frame =
-    next(WordPiece.encode(df, textCol, vocab.df, unk, maxChars))
-  def cdcChunks(idCol: String, textCol: String, p: Int = 16): Frame =
-    next(CdcChunk.explodeChunks(df, idCol, textCol, p))
-  def cdcDuplicateChunks(idCol: String, textCol: String,
-      p: Int = 16): Frame =
-    next(CdcChunk.duplicateChunkStats(df, idCol, textCol, p))
-  def cdcDedup(idCol: String, textCol: String, p: Int = 16): Frame =
-    next(CdcChunk.removeDuplicateChunks(df, idCol, textCol, p))
-  def cmsEstimate(keyCol: String, width: Long = 1L << 14,
-      depth: Int = 4): Frame = {
-    val sk = graft.sketch.CountMin.build(df, keyCol, width, depth)
-    next(graft.sketch.CountMin.estimate(df, keyCol, sk))
-  }
-  def truncateTokens(textCol: String, maxTokens: Int,
-      mode: String = "head", marker: String = ""): Frame =
-    next(Truncate(df, textCol, maxTokens, mode, marker))
-  def segmentSentences(idCol: String, textCol: String): Frame =
-    next(Segment.sentences(df, idCol, textCol))
-  def sentenceStats(textCol: String): Frame =
-    next(Segment.sentenceStats(df, textCol))
-  def chunkSentences(idCol: String, textCol: String, maxWords: Int,
-      overlap: Int = 0): Frame =
-    next(Segment.chunkBySentences(df, idCol, textCol, maxWords, overlap))
-  def encodingQuality(textCol: String, threshold: Double = 5.0): Frame =
-    next(EncodingQuality.report(df, textCol, threshold))
-  def encodingClean(textCol: String, threshold: Double = 5.0): Frame =
-    next(EncodingQuality.clean(df, textCol, threshold))
-  def profile(cols: Seq[String], approx: Boolean = false): Frame =
-    next(Profile.numeric(df, cols, approx))
-  def tokenizerStats(textCol: String, merges: Seq[BpeTrain.Merge]): Frame =
-    next(BpeTrain.tokenizerStats(df, textCol, merges))
-  def quotaSelect(keyCol: String, n: Int, orderExpr: String,
-      desc: Boolean = true, tieBreak: String = ""): Frame =
-    next(QuotaSelect(df, keyCol, n, orderExpr, desc, tieBreak))
-  def winsorize(colName: String, pLo: Double = 0.01, pHi: Double = 0.99,
-      approx: Boolean = false): Frame =
-    next(Profile.winsorize(df, colName, pLo, pHi, approx))
-  def iqrOutliers(colName: String, k: Double = 1.5,
-      approx: Boolean = false): Frame =
-    next(Profile.iqrOutliers(df, colName, k, approx))
-  def buildVocab(textCol: String, coverage: Double): Frame =
-    next(VocabCoverage.buildVocab(df, textCol, coverage))
-  def vocabEncode(tokensCol: String, vocab: Frame,
-      unkId: Long = -1L, outCol: String = "ids"): Frame =
-    next(VocabCoverage.toIds(df, tokensCol, vocab.df, unkId = unkId,
-      outCol = outCol))
-  def classifierEval(labelCol: String, scoreCol: String,
-      threshold: Double = 0.5): Frame =
-    next(ClassifierEval.report(df, labelCol, scoreCol, threshold))
-  def calibrationBins(labelCol: String, scoreCol: String,
-      bins: Int = 10): Frame =
-    next(ClassifierEval.calibrationBins(df, labelCol, scoreCol, bins))
-  def calibrationBinsEqualMass(labelCol: String, scoreCol: String,
-      bins: Int, tieBreak: String): Frame =
-    next(ClassifierEval.calibrationBinsEqualMass(df, labelCol, scoreCol,
-      bins, tieBreak))
-  def randomProject(embCol: String, outDim: Int, seed: String = "jl",
-      outCol: String = "embedding_jl"): Frame =
-    next(graft.ann.RandomProject.project(df, embCol, outDim, seed, outCol))
-  def pagerank(srcCol: String, dstCol: String, iterations: Int = 10,
-      dampingPct: Int = 85): Frame =
-    next(graft.graph.PageRank.run(df.select(srcCol, dstCol),
-      iterations, dampingPct))
-  def readability(textCol: String): Frame =
-    next(Readability.report(df, textCol))
-  def schemaValidate(rules: Seq[SchemaValidate.Rule]): Frame =
-    next(SchemaValidate.report(df, rules))
-  def stupidBackoff(idCol: String, textCol: String,
-      ref: Option[Frame] = None, alpha: Double = 0.4): Frame =
-    next(StupidBackoff(df, idCol, textCol, ref.map(_.df), alpha))
-  def htmlExtract(htmlCol: String, outCol: String = "main_content",
-      minChars: Int = 25, maxLinkDensity: Double = 0.33): Frame =
-    next(graft.sources.HtmlExtract.extract(df, htmlCol, outCol, minChars,
-      maxLinkDensity))
-  def schemaClean(rules: Seq[SchemaValidate.Rule]): Frame =
-    next(SchemaValidate.clean(df, rules))
-  def schemaSummary(rules: Seq[SchemaValidate.Rule]): Frame =
-    next(SchemaValidate.summary(df, rules))
-  def codeDetect(textCol: String, threshold: Double = 0.25): Frame =
-    next(CodeDetect.report(df, textCol, threshold))
-  def compressionRatio(textCol: String, threshold: Double = 0.25): Frame =
-    next(CompressionRatio.report(df, textCol, threshold))
-  def corpusOverlap(sliceCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 16): Frame =
-    next(CorpusOverlap.jaccardMatrix(df, sliceCol, textCol, shingleSize,
-      numHashes))
-  def embeddingOutliers(sliceCol: String, embCol: String): Frame =
-    next(EmbeddingStats.outlierScores(df, sliceCol, embCol))
-  def embeddingCentroidMatrix(sliceCol: String, embCol: String): Frame =
-    next(EmbeddingStats.centroidSimilarityMatrix(df, sliceCol, embCol))
-  def oovReport(idCol: String, textCol: String, vocab: Frame): Frame =
-    next(VocabCoverage.oovReport(df, idCol, textCol, vocab.df))
-  def topOovTokens(textCol: String, vocab: Frame, k: Int = 100): Frame =
-    next(VocabCoverage.topOovTokens(df, textCol, vocab.df, k))
-  def imageHeaders(binaryCol: String): Frame =
-    next(graft.multimodal.ImageHeader.parse(df, binaryCol))
-  def audioHeaders(binaryCol: String): Frame =
-    next(graft.multimodal.AudioHeader.parse(df, binaryCol))
-  def byteFeatures(binaryCol: String, dim: Int = 8,
-      outCol: String = "byte_features"): Frame =
-    next(graft.multimodal.BinaryOps.withByteFeatures(df, binaryCol, dim,
-      outCol))
-  def mixturePlan(domainCol: String, tokenExpr: String,
-      weights: Map[String, Double], totalBudget: Long): Frame =
-    next(MixtureSolver.planFromCorpus(df, domainCol, tokenExpr, weights,
-      totalBudget))
-  def groundingScore(sourceCol: String, responseCol: String,
-      n: Int = 2): Frame =
-    next(Grounding(df, sourceCol, responseCol, n))
-  def winnowFingerprints(idCol: String, textCol: String,
-      k: Int = 5, w: Int = 4): Frame =
-    next(graft.dedup.Winnow.fingerprints(df, idCol, textCol, k, w))
-  def winnowShared(idCol: String, textCol: String,
-      k: Int = 5, w: Int = 4): Frame =
-    next(graft.dedup.Winnow.sharedFingerprints(df, idCol, textCol, k, w))
-  def winnowPairs(idCol: String, textCol: String,
-      k: Int = 5, w: Int = 4): Frame =
-    next(graft.dedup.Winnow.matchPairs(df, idCol, textCol, k, w))
-  def nbTrain(labelCol: String, textCol: String,
-      alpha: Double = 1.0): Frame =
-    next(NaiveBayes.train(df, labelCol, textCol, alpha))
-  def nbClassify(idCol: String, textCol: String, model: Frame): Frame =
-    next(NaiveBayes.classify(df, idCol, textCol, model.df))
-  def piiReport(textCol: String): Frame =
-    next(Hygiene.piiReport(df, textCol))
-  def blocklistWords(textCol: String, words: Seq[String],
-      report: Boolean = false): Frame =
-    next(Hygiene.blocklistWords(df, textCol, words, report))
-  def snapshotDiff(prev: Frame, idCol: String, contentExpr: String): Frame =
-    next(SnapshotDiff(prev.df, df, idCol, contentExpr))
-  def reprocessAgainst(prev: Frame, idCol: String, contentExpr: String): Frame =
-    next(SnapshotDiff.reprocessSet(prev.df, df, idCol, contentExpr))
-  def annPq(queryId: String, queryEmb: String, corpus: Frame,
-      corpusId: String, corpusEmb: String, nSub: Int, nCodes: Int,
-      k: Int): Frame = {
-    val cb = graft.ann.ProductQuantize.trainPq(corpus.df, corpusEmb, nSub, nCodes)
-    val coded = graft.ann.ProductQuantize.encode(corpus.df, corpusEmb, cb)
-    next(graft.ann.ProductQuantize.adcSearch(coded, corpusId, "pq_codes", cb,
-      df, queryId, queryEmb, k))
-  }
-  def corpusStats(groupCols: Seq[String], tokenExpr: String,
-      quantiles: Seq[Double] = Seq(0.5, 0.9, 0.99)): Frame =
-    next(CorpusStats(df, groupCols, tokenExpr, quantiles))
-  def corpusDrift(textCol: String, other: Frame,
-      otherTextCol: String = ""): Frame =
-    next(CorpusDrift.jensenShannon(df, textCol, other.df,
-      if (otherTextCol.isEmpty) textCol else otherTextCol))
-  def corpusDriftMatrix(groupCol: String, textCol: String): Frame =
-    next(CorpusDrift.jensenShannonMatrix(df, groupCol, textCol))
-  def curriculum(scoreExpr: String, idExpr: String, nBuckets: Int,
-      seed: Long = 0): Frame =
-    next(graft.ops.InterleaveOp.curriculum(df, scoreExpr, idExpr, nBuckets, seed))
-  def bigramSurprisal(idCol: String, textCol: String,
-      lambda: Double = 0.75): Frame =
-    next(graft.ops.BigramScore(df, idCol, textCol, lambda))
-  def filterBlockedDomains(urlCol: String, blocked: Seq[String]): Frame =
-    next(graft.functions.UrlFunctions.filterBlockedDomains(df, urlCol, blocked))
-  def filterBlockedDomains(urlCol: String, blocklist: Frame): Frame =
-    next(graft.functions.UrlFunctions.filterBlockedDomains(df, urlCol, blocklist.df))
-  def bloomHits(idCol: String, textCol: String, reference: Frame,
-      refTextCol: String, n: Int = 4, bits: Long = 1L << 22,
-      hashes: Int = 3): Frame =
-    next(graft.dedup.BloomFilter.gramHits(df, idCol, textCol, reference.df,
-      refTextCol, n, bits, hashes))
-  def bloomClean(idCol: String, textCol: String, reference: Frame,
-      refTextCol: String, n: Int = 4, bits: Long = 1L << 22,
-      hashes: Int = 3, maxHits: Long = 0L): Frame =
-    next(graft.dedup.BloomFilter.cleanAgainstReference(df, idCol, textCol,
-      reference.df, refTextCol, n, bits, hashes, maxHits))
-  def contaminationHits(idCol: String, textCol: String, benchmark: Frame,
-      benchTextCol: String, n: Int = 8, broadcastBenchmark: Boolean = true): Frame =
-    next(graft.dedup.Decontaminate.hits(df, idCol, textCol, benchmark.df,
-      benchTextCol, n, broadcastBenchmark))
-  def decontaminate(idCol: String, textCol: String, benchmark: Frame,
-      benchTextCol: String, n: Int = 8, broadcastBenchmark: Boolean = true): Frame =
-    next(graft.dedup.Decontaminate.clean(df, idCol, textCol, benchmark.df,
-      benchTextCol, n, broadcastBenchmark))
-  def contaminationReport(textCol: String, benchmark: Frame,
-      benchIdCol: String, benchTextCol: String, n: Int = 8): Frame =
-    next(graft.dedup.Decontaminate.benchmarkHits(df, textCol, benchmark.df,
-      benchIdCol, benchTextCol, n))
-  /** Embedding-space decontamination arms (the rephrased-item gap the
-    * n-gram family misses). */
-  def embeddingContaminationHits(idCol: String, embCol: String,
-      benchmark: Frame, benchIdCol: String, benchEmbCol: String,
-      threshold: Double, maxBenchRows: Int = 100000): Frame =
-    next(graft.dedup.Decontaminate.embeddingHits(df, idCol, embCol,
-      benchmark.df, benchIdCol, benchEmbCol, threshold, maxBenchRows))
-  def decontaminateEmbedding(idCol: String, embCol: String,
-      benchmark: Frame, benchIdCol: String, benchEmbCol: String,
-      threshold: Double, maxBenchRows: Int = 100000): Frame =
-    next(graft.dedup.Decontaminate.embeddingClean(df, idCol, embCol,
-      benchmark.df, benchIdCol, benchEmbCol, threshold, maxBenchRows))
-  def cleanText(textCol: String, outCol: Option[String] = None): Frame =
-    next(df.withColumn(outCol.getOrElse(textCol),
-      graft.functions.TextFunctions.cleanText(
-        org.apache.spark.sql.functions.col(textCol))))
-  def normalizeText(textCol: String, form: String = "NFC",
-      outCol: Option[String] = None): Frame =
-    next(df.withColumn(outCol.getOrElse(textCol),
-      graft.functions.TextFunctions.normalize(
-        org.apache.spark.sql.functions.col(textCol), form)))
-  def assignSplit(groupKeyExpr: String, splits: Seq[(String, Double)],
-      seed: Long = 0): Frame =
-    next(graft.ops.SampleOp.assignSplit(df,
-      org.apache.spark.sql.functions.expr(groupKeyExpr), splits, seed))
 
   // -- approximate nearest neighbors (this frame = the query side)
   def annBruteForce(queryId: String, queryEmb: String, corpus: Frame,
       corpusId: String, corpusEmb: String, k: Int): Frame =
     next(graft.ann.Ann.bruteForce(corpus.df, corpusId, corpusEmb,
       df, queryId, queryEmb, k))
-  def annHardNegatives(queryId: String, queryEmb: String, queryLabel: String,
-      corpus: Frame, corpusId: String, corpusEmb: String, corpusLabel: String,
-      k: Int): Frame =
-    next(graft.ann.Ann.hardNegatives(corpus.df, corpusId, corpusEmb,
-      corpusLabel, df, queryId, queryEmb, queryLabel, k))
-  /** IVF-bucketed arm of [[annHardNegatives]] — bit-identical when
-    * `nProbe = nCells`, approximate (and ~nCells/nProbe cheaper) below. */
-  def annHardNegativesIvf(queryId: String, queryEmb: String,
-      queryLabel: String, corpus: Frame, corpusId: String,
-      corpusEmb: String, corpusLabel: String, k: Int,
-      nCells: Int = 256, nProbe: Int = 8): Frame =
-    next(graft.ann.Ann.hardNegativesIvf(corpus.df, corpusId, corpusEmb,
-      corpusLabel, df, queryId, queryEmb, queryLabel, k, nCells, nProbe))
   def annLsh(queryId: String, queryEmb: String, corpus: Frame,
       corpusId: String, corpusEmb: String, dim: Int, k: Int,
       numPlanes: Int = 8, multiProbe: Int = 1): Frame =
@@ -955,20 +127,17 @@ final case class Frame(df: DataFrame, client: LlmClient) {
     next(graft.ann.Ann.ivfSearch(assigned, corpusId, corpusEmb,
       df, queryId, queryEmb, centroids, k, nProbe))
   }
+  def annPq(queryId: String, queryEmb: String, corpus: Frame,
+      corpusId: String, corpusEmb: String, nSub: Int, nCodes: Int,
+      k: Int): Frame = {
+    val cb = graft.ann.ProductQuantize.trainPq(corpus.df, corpusEmb, nSub, nCodes)
+    val coded = graft.ann.ProductQuantize.encode(corpus.df, corpusEmb, cb)
+    next(graft.ann.ProductQuantize.adcSearch(coded, corpusId, "pq_codes", cb,
+      df, queryId, queryEmb, k))
+  }
 
-  // -- document parsing / web I/O
-  def parse(cfg: graft.sources.ParseOp.Config): Frame =
-    next(graft.sources.ParseOp(df, cfg))
-  def webSearch(name: String, queryTemplate: String, maxResults: Int = 3,
-      http: HttpClient = StubHttpClient()): Frame =
-    next(WebSearchOp(df, name, queryTemplate, maxResults, http))
-  def webFetch(name: String, urlKey: String, http: HttpClient = StubHttpClient(),
-      convertToMarkdown: Boolean = false): Frame =
-    next(WebFetchOp(df, name, urlKey, http, convertToMarkdown))
-
-  // -- embeddings / retrieval / cascades
-  def embed(textExpr: String, outCol: String = "embedding"): Frame =
-    next(EmbedOp(df, textExpr, outCol, client))
+  // -- retrieval context joins (the YAML surface reaches these only
+  // through `map`'s `retriever:` block)
   def withRetrievedContext(name: String, queryTextCol: String, corpus: Frame,
       corpusTextCol: String, k: Int = 3): Frame =
     next(RetrieverOp.byTermOverlap(df, name, queryTextCol, corpus.df,
@@ -986,14 +155,6 @@ final case class Frame(df: DataFrame, client: LlmClient) {
       corpusTextCol: String, k: Int = 3, vectorWeight: Double = 0.5): Frame =
     next(RetrieverOp.byHybrid(df, name, queryEmbCol, queryTextCol, corpus.df,
       corpusEmbCol, corpusTextCol, corpusTextCol, k, vectorWeight))
-  def cascadeFilter(name: String, prompt: String, targetRecall: Double = 0.9): Frame =
-    next(CascadeFilter(df, CascadeFilter.Config(
-      name = name, prompt = prompt, targetRecall = targetRecall), client, client))
-  def linkResolve(name: String, idKey: String, linkKey: String): Frame =
-    next(LinkResolveOp(df, LinkResolveOp.Config(name, idKey, linkKey), client))
-  def agentMap(name: String, prompt: String, tools: Map[String, String => String],
-      schema: (String, String)*): Frame =
-    next(AgentMap(df, AgentMap.Config(name, prompt, schema), tools, client))
 
   // -- inspection without execution (frame.py:852-904)
   def schema: StructType = df.schema

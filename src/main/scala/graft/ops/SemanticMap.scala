@@ -241,28 +241,28 @@ object SemanticMap {
       it.grouped(cfgB.batchSize).flatMap { batch =>
         if (cfgB.batchPrompt) {
           // One provider round-trip per batch; cache still applies per item.
-          val prompts = batch.map(renderRow)
+          // Each key is looked up ONCE and misses fill from the responses
+          // in hand: the cache is a bounded FIFO shared by the JVM, so a
+          // re-read after the call can find an entry evicted or cleared.
+          val prompts = batch.map(renderRow).toVector
           val keys = prompts.map(p => s"${cfgB.model}|${outStruct.simpleString}|$p")
-          val misses = keys.zip(prompts).filter { case (k, _) =>
-            cfgB.bypassCache || LlmCache.get(k).isEmpty
-          }
-          if (misses.nonEmpty) {
-            callsAcc.add(1)
-            val responses = clientB.completeBatch(cfgB.model, misses.map(_._2), outStruct)
-            misses.zip(responses).foreach { case ((k, _), r) =>
-              costAcc.add(r.cost)
-              if (!cfgB.bypassCache) LlmCache.put(k, r)
-            }
-            if (cfgB.bypassCache) {
-              val byPrompt = misses.map(_._2).zip(responses).toMap
-              batch.iterator.zip(prompts.iterator).map { case (row, p) =>
-                emit(row, p, byPrompt(p).values)
+          val cached = keys.map(k => if (cfgB.bypassCache) None else LlmCache.get(k))
+          val misses = cached.indices.filter(cached(_).isEmpty)
+          val responses =
+            if (misses.isEmpty) cached
+            else {
+              callsAcc.add(1)
+              val fresh = clientB.completeBatch(cfgB.model, misses.map(prompts), outStruct)
+              require(fresh.size == misses.size,
+                s"completeBatch returned ${fresh.size} responses for ${misses.size} prompts")
+              misses.zip(fresh).foldLeft(cached) { case (acc, (i, r)) =>
+                costAcc.add(r.cost)
+                if (!cfgB.bypassCache) LlmCache.put(keys(i), r)
+                acc.updated(i, Some(r))
               }
-            } else batch.iterator.zip(keys.iterator.zip(prompts.iterator)).map {
-              case (row, (k, p)) => emit(row, p, LlmCache.get(k).get.values)
             }
-          } else batch.iterator.zip(keys.iterator.zip(prompts.iterator)).map {
-            case (row, (k, p)) => emit(row, p, LlmCache.get(k).get.values)
+          batch.iterator.zip(prompts.iterator).zip(responses.iterator).map {
+            case ((row, p), r) => emit(row, p, r.get.values)
           }
         } else graft.llm.Concurrency.flatMapOrdered(batch.iterator, cfgB.concurrency) { row =>
           val prompt = renderRow(row)

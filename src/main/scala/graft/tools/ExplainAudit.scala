@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for representative queries so
   * pushdown/broadcast/codegen regressions are visible (SURVEY.md §7 goal:
   * iterate on the plan, not just the result). */
@@ -73,12 +71,8 @@ object ExplainAudit {
         // t-closeness join (no exchange on the sensitive key), the
         // string-staged CER kernel, and the per-row-cell IVF audit
         "q286_t_closeness", "q291_cer", "q292_bitext_ivf_audit")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.core.GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

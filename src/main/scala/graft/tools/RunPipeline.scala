@@ -27,12 +27,8 @@ object RunPipeline {
     val stats = !flags.contains("--no-stats")
     val showRows = args.drop(1).find(a => !a.startsWith("--")).map(_.toInt).getOrElse(5)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val estimateArg = args.drop(1).find(_.startsWith("--estimate"))

@@ -157,9 +157,9 @@ class FrameSpec extends SparkSpec {
   test("fluent chain stays lazy and executes correctly") {
     val f = Graft.fromDF(docsDf)
       .codeMap("n" -> "length(text)")
-      .semanticMap("m", "{{ input.text }}", "sentiment" -> "str")
-      .semanticFilter("f", "{{ input.text }}")
-      .codeReduce("r", Seq("sentiment"), "n_docs" -> "count(1)")
+      .semanticMap("{{ input.text }}", "sentiment" -> "str")
+      .semanticFilter("{{ input.text }}")
+      .codeReduce(Seq("sentiment"), "n_docs" -> "count(1)")
     assert(f.schema.fieldNames.contains("n_docs"))
     assert(f.count() > 0)
   }
@@ -172,13 +172,13 @@ class FrameSpec extends SparkSpec {
     import graft.api.implicits._
     val out = docsDf.semantic
       .codeMap("n" -> "length(text)")
-      .semanticMap("m", "{{ input.text }}", "sentiment" -> "str")
+      .semanticMap("{{ input.text }}", "sentiment" -> "str")
       .dedupExact("text", "doc_id")
     assert(out.count() === 5) // doc 4 is the exact dup
     assert(out.schema.fieldNames.toSet.contains("sentiment"))
     // explicit-client form shares the same chain
     assert(docsDf.semantic(graft.llm.MockLlmClient())
-      .semanticFilter("f", "{{ input.text }}").count() > 0)
+      .semanticFilter("{{ input.text }}").count() > 0)
   }
 
   test("frame surface: sampling, topk, rank, cluster, set ops, retrievers on sf0.001") {
@@ -187,7 +187,7 @@ class FrameSpec extends SparkSpec {
     val nLangs = docs.toDF.select("lang").distinct().count()
 
     // sampling family
-    assert(docs.sampleStratified("lang", 2, "doc_id").count() <= nLangs * 2)
+    assert(docs.sampleStratified("lang", 2, Seq("doc_id")).count() <= nLangs * 2)
     assert(docs.sampleStratifiedUniform("lang", "doc_id", 2).count() <= nLangs * 2)
     assert(docs.sampleProportional("lang", "doc_id", 20).count() == 20)
     val keys = Graft.fromDF(docs.toDF.select("lang").distinct().limit(1))
@@ -197,20 +197,21 @@ class FrameSpec extends SparkSpec {
     val query = Array.tabulate(64)(i => math.sin(i + 1.0))
     val emb = Graft.readParquet(spark, s"$sf/embeddings.parquet")
       .codeMap("e" -> "cast(embedding as array<double>)", "grp" -> "vec_id % 3")
-    assert(emb.topkEmbedding("e", query, 5, "vec_id").count() == 5)
-    assert(emb.topkEmbeddingStratified("e", query, 2, "grp", "vec_id")
+    assert(emb.topkEmbedding("e", query.toSeq, 5, Seq("vec_id")).count() == 5)
+    assert(emb.topkEmbeddingStratified("e", query.toSeq, 2, "grp", Seq("vec_id"))
       .count() == 6) // 3 strata x 2
-    val ranked = emb.rankByEmbedding("e", query, tieBreak = Seq("vec_id"))
+    val ranked = emb.rankEmbedding("e", query.toSeq, tieBreak = Seq("vec_id"))
     assert(ranked.toDF.select(org.apache.spark.sql.functions.max("_rank"))
       .collect()(0).getLong(0) == emb.count())
     assert(emb.sampleOutliers("e", samples = Some(4), tieBreak = Seq("vec_id")).count() == 4)
     val clustered = emb.cluster("e", "cast(vec_id as string)", numClusters = 2)
     assert(clustered.toDF.select("clusters").distinct().count() <= 2)
-    assert(emb.clusterHierarchical("e", "cast(vec_id as string)", depth = 2)
+    assert(emb.op("cluster", "method" -> "hierarchical", "embedding_key" -> "e",
+      "render_expr" -> "cast(vec_id as string)", "depth" -> 2)
       .count() == emb.count())
 
     // bm25 stratified + llm-free rank variants over documents
-    assert(docs.topkBm25Stratified("text", "the and of", 2, "lang", "doc_id")
+    assert(docs.topkFtsStratified("text", "the and of", 2, "lang", Seq("doc_id"))
       .count() <= nLangs * 2)
 
     // set ops (name-aligned)
@@ -242,13 +243,16 @@ class FrameSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val docs = Graft.readParquet(spark, s"$sf/documents.parquet")
     // pair frames return (id_a, id_b, metric) shapes
-    assert(docs.simhashPairs("doc_id", "text").schema.fieldNames.toSet ==
+    assert(docs.op("dedup", "method" -> "simhash_pairs", "id_key" -> "doc_id",
+      "text_key" -> "text").schema.fieldNames.toSet ==
       Set("id_a", "id_b", "hamming"))
-    assert(docs.ngramJaccardPairs("doc_id", "text", "lang", threshold = 0.9)
+    assert(docs.op("dedup", "method" -> "ngram_pairs", "id_key" -> "doc_id",
+      "text_key" -> "text", "block_expr" -> "lang", "threshold" -> 0.9)
       .schema.fieldNames.toSet == Set("id_a", "id_b", "jaccard"))
     val emb = Graft.readParquet(spark, s"$sf/embeddings.parquet")
       .codeMap("e" -> "cast(embedding as array<double>)")
-    assert(emb.embeddingDedupPairs("vec_id", "e", dim = 64, threshold = 0.99)
+    assert(emb.op("dedup", "method" -> "embedding_pairs", "id_key" -> "vec_id",
+      "embedding_key" -> "e", "dim" -> 64, "threshold" -> 0.99)
       .schema.fieldNames.toSet == Set("id_a", "id_b", "cosine"))
     // ANN: 5 queries x top-3 neighbors; IVF with exhaustive probe = brute force
     val queries = Graft.fromDF(emb.toDF.filter("vec_id < 5"))
@@ -267,11 +271,14 @@ class FrameSpec extends SparkSpec {
       .codeMap("e" -> "cast(embedding as array<double>)")
       .limit(12)
     val query = Array.tabulate(64)(i => math.cos(i + 1.0))
-    val slid = emb.rankSlidingWindow("rs", "e", query, "cast(vec_id as string)",
-      k = 5, windowSize = 4, tieBreak = Seq("vec_id"))
+    val slid = emb.op("rank", "method" -> "sliding_window",
+      "embedding_key" -> "e", "query_vector" -> query.toSeq,
+      "render_expr" -> "cast(vec_id as string)", "k" -> 5, "batch_size" -> 4,
+      "tie_break" -> "vec_id")
     assert(slid.count() == 12)
-    val pw = emb.rankPairwise("rp", "vec_id", "cast(vec_id as string)",
-      blockExpr = "vec_id % 2", tieBreak = Seq("vec_id"))
+    val pw = emb.op("rank", "method" -> "pairwise", "id_key" -> "vec_id",
+      "render_expr" -> "cast(vec_id as string)", "block_expr" -> "vec_id % 2",
+      "tie_break" -> "vec_id")
     assert(pw.toDF.columns.contains("_rank") && pw.count() == 12)
   }
 }

@@ -65,7 +65,7 @@ class CorpusDriftSpec extends SparkSpec {
     val a = df(schema, Row(1L, "x y"))
     val b = df(schema, Row(2L, "y z"))
     val viaFrame = graft.api.Graft.fromDF(a)
-      .corpusDrift("text", graft.api.Graft.fromDF(b))
+      .corpusDrift(graft.api.Graft.fromDF(b), "text")
     assert(viaFrame.count() === 1)
 
     import graft.api.{LazyFrame, Pipeline}

@@ -9,16 +9,14 @@ import org.apache.spark.sql.types._
   * wordpieceEncode vocab_from precedent).
   *
   * The guarantee has two layers:
-  *   1. STRUCTURAL — [[graft.api.LazyFrame.op]] (generic registered-op
-  *      step) and [[graft.api.LazyFrame.withOption]] (set any field on
-  *      the last op) make every op and knob reachable from the lazy
-  *      builder by construction; both are exercised end-to-end below.
-  *      [[graft.api.Frame]]'s equivalent is by construction too: every
-  *      Registry handler dispatches to a public graft.ops/graft.dedup
-  *      function whose parameters ARE the knobs, and Frame.toDF
-  *      round-trips into those functions.
+  *   1. STRUCTURAL — [[graft.api.OpFacades.op]] (generic registered-op
+  *      step) makes every op and knob reachable from both builders
+  *      ([[graft.api.LazyFrame]] and [[graft.api.Frame]] share the one
+  *      facade list, so their parity holds by construction), and
+  *      [[graft.api.LazyFrame.withOption]] sets any field on the last
+  *      op; both are exercised end-to-end below.
   *   2. INVENTORY — this spec re-derives, from the SOURCE of
-  *      Registry.scala and LazyFrame.scala, (a) which registered ops
+  *      Registry.scala and OpFacades.scala, (a) which registered ops
   *      have no dedicated fluent facade and (b) which knobs each
   *      facade omits, and asserts both match the pinned lists below
   *      EXACTLY. Adding a Registry knob without either extending the
@@ -28,9 +26,8 @@ import org.apache.spark.sql.types._
   *
   * Pinned no-facade ops (all reachable via op()): cascade_filter and
   * parse are pipeline-wiring ops (the YAML runner threads cascades /
-  * parsing_tools config), interleave / nb_train / redact_cc /
-  * unigram_surprisal are registry-only analysis arms whose eager
-  * surfaces live on Frame. Pinned facade gaps are mostly semantic-op
+  * parsing_tools config; Frame keeps a typed `parse(cfg)`), redact_cc
+  * is a registry-only curation arm. Pinned facade gaps are mostly semantic-op
   * tuning (model/gleaning/value_sampling on map/reduce/resolve/rank),
   * output_key renames, and alias ops covered by their unified facade
   * (hard_negatives_bm25 -> hardNegatives) — each reachable via
@@ -38,15 +35,13 @@ import org.apache.spark.sql.types._
 class KnobParitySpec extends SparkSpec {
 
   private val noFacadeOps: Set[String] = Set(
-    "cascade_filter", "interleave", "nb_train", "parse", "redact_cc", "unigram_surprisal")
+    "cascade_filter", "parse", "redact_cc")
 
   private val facadeGaps: Map[String, Set[String]] = Map(
     "agent_map" -> Set(
       "max_turns", "model"),
     "audio_header" -> Set(
       "output_key"),
-    "bloom_decontaminate" -> Set(
-      "max_hits"),
     "bpe_encode" -> Set(
       "output_key"),
     "bpe_train" -> Set(
@@ -79,12 +74,10 @@ class KnobParitySpec extends SparkSpec {
       "allowed_types"),
     "datacard" -> Set(
       "rsd"),
-    "decontaminate" -> Set(
-      "broadcast_benchmark"),
     "dedup" -> Set(
-      "dim", "max_cluster_head", "max_cluster_size", "max_hamming", "max_posting_head", "max_posting_size", "num_bands", "num_perms", "num_planes", "shingle_size"),
+      "dim", "max_hamming", "max_posting_head", "max_posting_size", "num_bands", "num_perms", "num_planes", "shingle_size"),
     "dedup_against" -> Set(
-      "max_bucket_head", "max_bucket_size", "num_bands", "num_perms", "precomputed", "shingle_size"),
+      "num_bands", "num_perms", "precomputed", "shingle_size"),
     "dedup_lines" -> Set(
       "replace_text"),
     "dedup_spans" -> Set(
@@ -143,8 +136,6 @@ class KnobParitySpec extends SparkSpec {
       "blocking", "cascade", "comparison_model", "limit_comparisons", "max_iter", "max_pairs_per_bucket", "model", "resolution_model", "warn_pairs_per_bucket"),
     "sample" -> Set(
       "query", "query_vector", "text_key"),
-    "score_ensemble" -> Set(
-      "weights"),
     "skipgram_pairs" -> Set(
       "alpha"),
     "span_corrupt" -> Set(
@@ -202,25 +193,28 @@ class KnobParitySpec extends SparkSpec {
     }.groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2).toSet }
   }
 
-  /** LazyFrame op type -> YAML fields some facade emits for it
-    * (fields and appends matched within one `def` block, so Seq-built
-    * field lists count for the op they feed). */
-  private lazy val lazyFields: Map[String, Set[String]] = {
-    val lf = sourceFile("src/main/scala/graft/api/LazyFrame.scala")
-    val defs = lf.split("\n  def ")
+  /** Op type -> YAML fields some facade emits for it (fields and
+    * appends matched within one `def` block, so Seq-built field lists
+    * count for the op they feed). Binary facades name their op type in
+    * `appendWith("type", ...)` or `appendWith("step", "type", ...)`. */
+  private lazy val facadeFields: Map[String, Set[String]] = {
+    val src = sourceFile("src/main/scala/graft/api/OpFacades.scala")
+    val defs = src.split("\n  def ")
     val appendRe = "append\\(\"([a-z0-9_]+)\"".r
-    val appendNamedRe = "appendNamed\\([^,]+, \"([a-z0-9_]+)\"".r
+    val appendWithRe =
+      "appendWith\\(\"([a-z0-9_]+)\"(?:, \"([a-z0-9_]+)\",)?".r
     val fieldRe = "\"([a-z0-9_]+)\" ->".r
     defs.flatMap { d =>
       val appends = appendRe.findAllMatchIn(d).map(_.group(1)).toSeq ++
-        appendNamedRe.findAllMatchIn(d).map(_.group(1)).toSeq
+        appendWithRe.findAllMatchIn(d).map(m =>
+          Option(m.group(2)).getOrElse(m.group(1))).toSeq
       val fields = fieldRe.findAllMatchIn(d).map(_.group(1)).toSet
       appends.map(_ -> fields)
     }.groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2).toSet }
   }
 
   test("every Registry op has a LazyFrame facade or a pinned reason") {
-    val computed = registryKnobs.keySet -- lazyFields.keySet
+    val computed = registryKnobs.keySet -- facadeFields.keySet
     assert(computed == noFacadeOps,
       s"unpinned no-facade ops: ${(computed -- noFacadeOps).toSeq.sorted}" +
         s"; stale pins: ${(noFacadeOps -- computed).toSeq.sorted}")
@@ -228,7 +222,7 @@ class KnobParitySpec extends SparkSpec {
 
   test("facade knob gaps match the pinned inventory exactly") {
     val computed = registryKnobs.flatMap { case (op, knobs) =>
-      lazyFields.get(op).map { f =>
+      facadeFields.get(op).map { f =>
         op -> (knobs -- f -- structuralKeys)
       }
     }.filter(_._2.nonEmpty)
@@ -294,5 +288,40 @@ class KnobParitySpec extends SparkSpec {
     assert(b.contains("mode: audit") && b.contains("seed: 7") &&
       b.contains("target_id_key: tid") &&
       b.contains("target_embedding_key: te"), b)
+  }
+
+  test("the merge closes Frame's knobs on the shared facades") {
+    val lf = graft.api.LazyFrame.read("d", "/tmp/nowhere.parquet")
+    val ref = graft.api.LazyFrame.read("r", "/tmp/nowhere_ref.parquet")
+    val kb = lf.dedupMinhashKeepBest("id", "text", maxBucketSize = Some(5),
+      maxBucketHead = Some(2)).toYaml
+    assert(kb.contains("max_bucket_size: 5") &&
+      kb.contains("max_bucket_head: 2"), kb)
+    // absent Options stay absent: default YAML is unchanged
+    assert(!lf.dedupMinhashKeepBest("id", "text").toYaml
+      .contains("max_bucket"))
+    val da = lf.dedupAgainst(ref, "id", "text", maxBucketSize = Some(7),
+      maxBucketHead = Some(3)).toYaml
+    assert(da.contains("max_bucket_size: 7") &&
+      da.contains("max_bucket_head: 3"), da)
+    val sd = lf.semdedup("id", "e", 4, maxClusterSize = Some(9),
+      maxClusterHead = Some(4)).toYaml
+    assert(sd.contains("max_cluster_size: 9") &&
+      sd.contains("max_cluster_head: 4"), sd)
+    val dc = lf.decontaminate(ref, "id", "text",
+      broadcastBenchmark = Some(false)).toYaml
+    assert(dc.contains("broadcast_benchmark: false"), dc)
+    assert(!lf.decontaminate(ref, "id", "text").toYaml.contains("broadcast"))
+    val bd = lf.bloomDecontaminate(ref, "id", "text", maxHits = Some(2L))
+      .toYaml
+    assert(bd.contains("max_hits: 2"), bd)
+    val z = lf.scoreZ(Seq("a", "b"), weights = Seq(2.0, 1.0)).toYaml
+    assert(z.contains("weights:") && z.contains("- 2.0"), z)
+    assert(!lf.scoreZ(Seq("a")).toYaml.contains("weights"))
+    // Frame-only verbs now on both surfaces
+    val y = lf.interleave("lang", "id").nbTrain("label", "text")
+      .unigramSurprisal("id", "text").toYaml
+    assert(y.contains("type: interleave") && y.contains("type: nb_train") &&
+      y.contains("type: unigram_surprisal"), y)
   }
 }

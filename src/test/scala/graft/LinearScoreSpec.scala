@@ -70,7 +70,7 @@ class LinearScoreSpec extends SparkSpec {
   test("Frame and LazyFrame wire linearScore end to end") {
     val wDf = df(wSchema, Row("good", 2.0))
     val f = graft.api.Graft.fromDF(df(docSchema, Row(1L, "good stuff")))
-      .linearScore("doc_id", "text", graft.api.Graft.fromDF(wDf))
+      .linearScore(graft.api.Graft.fromDF(wDf), "doc_id", "text")
     assert(f.toDF.columns.contains("quality_score") && f.count() === 1)
 
     import graft.api.{LazyFrame, Pipeline}
@@ -89,7 +89,7 @@ class LinearScoreSpec extends SparkSpec {
   test("Frame exposes tokenUsage tallies and CSV writes") {
     val f = graft.api.Graft.fromDF(df(docSchema, Row(1L, "good")))
     // a semantic call records a tally for the mock model
-    f.semanticMap("lsu", "{{ input.text }}", "sentiment" -> "str").count()
+    f.semanticMap("{{ input.text }}", "sentiment" -> "str").count()
     val usage = f.tokenUsage
     assert(usage.nonEmpty && usage.values.forall(_.calls > 0))
     assert(f.totalCost >= 0.0)

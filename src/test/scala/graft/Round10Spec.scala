@@ -246,17 +246,16 @@ class Round10Spec extends SparkSpec {
   test("Frame round-10 surface composes") {
     import graft.api.Graft
     val f = Graft.fromDF(docsDf)
-    assert(f.cdcChunks("doc_id", "text", p = 4).count() > 0)
+    assert(f.cdcChunk("doc_id", "text", p = 4).count() > 0)
     assert(f.cmsEstimate("lang").toDF.columns.contains("est_count"))
     assert(f.truncateTokens("text", 3, "tail").toDF
       .columns.contains("text_trunc"))
     assert(f.sentenceStats("text").toDF.columns.contains("n_sentences"))
     assert(f.corpusOverlap("lang", "text").count() == 1)
-    val merges = f.bpeTrain("text", 2)
-    assert(merges.size == 2)
-    assert(f.bpeEncode("text", merges, greedy = true).toDF
+    assert(f.bpeTrain("text", 2).count() == 2)
+    assert(f.bpeEncode("text", 2, greedy = true).toDF
       .columns.contains("tokens"))
-    val conv = f.conversationFromPairs("text", "lang", Some("sys"))
+    val conv = f.conversationFromPairs("text", "lang", "sys")
       .conversationValidate("messages")
     assert(conv.toDF.filter(col("conv_valid")).count() == docsDf.count())
     assert(f.conversationFromPairs("text", "lang")

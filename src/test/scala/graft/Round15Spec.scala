@@ -465,7 +465,8 @@ class Round15Spec extends SparkSpec {
     val wp = graft.api.Frame(textsDf((1L, "hug hug pug")),
       graft.llm.MockLlmClient())
     val vocab = wp.wordpieceVocab("text", numMerges = 2)
-    val enc = wp.wordpieceEncode("text", vocab).df
+    val enc = wp.withDataset("vocab", vocab)
+      .wordpieceEncode("text", vocabFrom = Some("vocab")).df
       .select("decoded", "n_unk").collect().head
     assert(enc.getString(0) == "hug hug pug" && enc.getLong(1) == 0L)
     // tool names with quotes/backslashes render as VALID JSON

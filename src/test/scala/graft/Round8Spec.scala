@@ -566,7 +566,7 @@ class PairBudgetSpec extends SparkSpec {
       StructField("content", BinaryType))), Row(1L, docx))
     val out = graft.api.Frame(d, MockLlmClient())
       .parse(graft.sources.ParseOp.Config(function = "docx"))
-      .webSearch("ws", "{{ input.text }}", maxResults = 1)
+      .webSearch("{{ input.text }}", maxResults = 1)
       .addUuid("u")
       .toDF
     val r = out.collect()(0)

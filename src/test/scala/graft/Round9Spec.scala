@@ -681,22 +681,22 @@ class Round9Spec extends SparkSpec {
     val bench = graft.api.Frame(
       df(schema, Row(99L, "en", "w1 common tokens appear")), MockLlmClient())
     val out = corpus
-      .decontaminate("doc_id", "text", bench, "text", n = 4)
+      .decontaminate(bench, "doc_id", "text", "text", n = 4)
       .unigramSurprisal("doc_id", "text") // doc cols + nll
       .interleave("lang", "doc_id")
       .pack(Seq("lang"), "interleave_rank", "8", budget = 16)
       .collect()
     assert(out.nonEmpty)
-    val cols = corpus.decontaminate("doc_id", "text", bench, "text", n = 4)
+    val cols = corpus.decontaminate(bench, "doc_id", "text", "text", n = 4)
       .unigramSurprisal("doc_id", "text").interleave("lang", "doc_id")
       .pack(Seq("lang"), "interleave_rank", "8", budget = 16).df.columns.toSeq
     assert(cols == Seq("doc_id", "lang", "text", "nll", "interleave_rank", "pack_id"))
     // tfidf + weighted sampling entries compose too
     assert(corpus.tfidfTopTerms("doc_id", "text", 2).collect().length == 60)
     assert(corpus.sampleWeighted("lang", "doc_id", 6,
-      Map("en" -> 1.0, "de" -> 1.0)).collect().length == 6)
+      Seq("en" -> 1.0, "de" -> 1.0)).collect().length == 6)
     assert(corpus.sampleWeightedEpochs("lang", "doc_id", 50,
-      Map("de" -> 1.0), maxEpochs = 2).collect().length == 20) // 10 de x 2
+      Seq("de" -> 1.0), maxEpochs = 2).collect().length == 20) // 10 de x 2
   }
 
   test("Frame decontaminate chains on the fluent API") {
@@ -707,10 +707,11 @@ class Round9Spec extends SparkSpec {
       MockLlmClient())
     val bench = graft.api.Frame(df(schema, Row(9L, "one two three four")),
       MockLlmClient())
-    val kept = corpus.decontaminate("doc_id", "text", bench, "text", n = 4)
+    val kept = corpus.decontaminate(bench, "doc_id", "text", "text", n = 4)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L))
-    val hits = corpus.contaminationHits("doc_id", "text", bench, "text", n = 4)
+    val hits = corpus.decontaminate(bench, "doc_id", "text", "text", n = 4,
+        mode = "hits")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hits == Set((1L, 1L)))
   }

@@ -316,8 +316,9 @@ class Round9bSpec extends SparkSpec {
     val ordered = f.shuffle("doc_id", seed = 3).toDF
     assert(ordered.select("shuffle_rank").collect().map(_.getLong(0)).sorted
       === (1L to 6L).toArray)
-    val iw = f.importanceWeight("doc_id", "text",
-      graft.api.Graft.fromDF(docsDf.filter(col("lang") === "de")), "text")
+    val iw = f.importanceWeight(
+      graft.api.Graft.fromDF(docsDf.filter(col("lang") === "de")),
+      "doc_id", "text", "text")
     assert(iw.count() === 6)
   }
 

@@ -186,12 +186,13 @@ class Round9dSpec extends SparkSpec {
   test("Frame chains the round9d entries") {
     import graft.api.{Frame, Graft}
     val docs = Graft.fromDF(docsDf)
-    val cleaned = docs.cleanText("text").assignSplit("lang", splits, seed = 2)
+    val cleaned = docs.normalizeText("text")
+      .assignSplit("lang", splits, randomState = 2)
     assert(cleaned.toDF.columns.contains("split"))
     assert(cleaned.count() == 6)
     val bench = Graft.fromDF(docsDf.select(col("doc_id").as("bench_id"),
       col("text")).filter(col("bench_id") === 1L))
-    val report = docs.contaminationReport("text", bench, "bench_id", "text", n = 3)
+    val report = docs.contaminationReport(bench, "text", "bench_id", "text", n = 3)
     assert(report.count() == 1)
   }
 

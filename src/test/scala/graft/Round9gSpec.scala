@@ -436,7 +436,8 @@ class Round9gSpec extends SparkSpec {
     val nxt = df(snapSchema, Row(2L, "B"), Row(3L, "c"))
     assert(Graft.fromDF(nxt).snapshotDiff(Graft.fromDF(prev), "id", "text")
       .count() == 3)
-    assert(Graft.fromDF(nxt).reprocessAgainst(Graft.fromDF(prev), "id", "text")
+    assert(Graft.fromDF(nxt).snapshotDiff(Graft.fromDF(prev), "id", "text",
+      reprocess = true)
       .df.columns.toSeq == Seq("id", "text"))
     val dir = java.nio.file.Files.createTempDirectory("r9gsnap").toString
     prev.write.mode("overwrite").parquet(s"$dir/prev.parquet")
@@ -888,7 +889,7 @@ class Round9gSpec extends SparkSpec {
       Row(2L, "https://b.co.uk/y#f", "ab cd cd", Seq(1.0, 0.0)))
 
     assert(Graft.fromDF(d).urlParse("url").df.columns.contains("url_canon"))
-    assert(Graft.fromDF(d).urlHostStats("url").count() == 2)
+    assert(Graft.fromDF(d).urlParse("url", stats = true).count() == 2)
     assert(Graft.fromDF(d).bpePairCounts("text").count() == 2) // ab, cd
     assert(Graft.fromDF(d).distinctNgrams("id", "text", 2).count() == 2)
     assert(Graft.fromDF(d).sq8Encode("e").df.columns.contains("codes"))

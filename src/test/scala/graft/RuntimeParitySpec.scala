@@ -35,6 +35,21 @@ class BatchPromptSpec extends SparkSpec {
     assert(client.callCount == 1) // 6 rows, one batch call
     assert(m(1L) == "positive" && m(2L) == "negative")
   }
+  test("batch_prompt survives a cache cleared during the provider call") {
+    // the cache is a bounded FIFO shared by the whole JVM: entries a batch
+    // found before its provider call can be gone (evicted, cleared) after
+    LlmCache.clear()
+    val subset = docsDf.filter(col("doc_id") <= 3).coalesce(1)
+    val cfg = SemanticMapConfig(name = "bpc", prompt = "{{ input.text }}",
+      outputSchema = Seq("sentiment" -> "str"), batchPrompt = true,
+      batchSize = 64)
+    SemanticMap(subset, cfg, client).collect() // docs 1-3 now cached
+    val out = SemanticMap(docsDf.coalesce(1), cfg,
+      CacheClearingClient(client)).collect()
+    val m = out.map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("sentiment")).toMap
+    assert(m.size == 6 && m(1L) == "positive" && m(2L) == "negative")
+    assert(m(4L) == m(1L)) // exact dup of doc 1
+  }
   test("batch_prompt rejects gleaning") {
     intercept[IllegalArgumentException] {
       SemanticMap(docsDf, SemanticMapConfig(
@@ -42,6 +57,21 @@ class BatchPromptSpec extends SparkSpec {
         batchPrompt = true, gleaning = Some(GleaningConfig("v"))), client)
     }
   }
+}
+
+/** Clears the shared LLM cache inside every batch call. */
+final case class CacheClearingClient(inner: graft.llm.LlmClient)
+    extends graft.llm.LlmClient {
+  def complete(model: String, prompt: String,
+      schema: org.apache.spark.sql.types.StructType): graft.llm.LlmResponse =
+    inner.complete(model, prompt, schema)
+  override def completeBatch(model: String, prompts: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Seq[graft.llm.LlmResponse] = {
+    LlmCache.clear()
+    inner.completeBatch(model, prompts, schema)
+  }
+  def embed(model: String, texts: Seq[String]): Seq[Array[Float]] =
+    inner.embed(model, texts)
 }
 
 class RateLimitSpec extends SparkSpec {

@@ -5,13 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one forked JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.core.GraftSession.builder("local[4]", 4)
     .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 }
 

@@ -298,7 +298,7 @@ class TemporalSpec extends SparkSpec {
     assert(kept.count() > 0 && kept.count() < docsDf.count())
     val keptGrouped = graft.api.Graft.fromDF(docsDf)
       .budgetSelectGrouped("lang", "doc_id", "size(split(text, ' '))",
-        Map[Any, Long]("en" -> 23L, "de" -> 5L), "doc_id")
+        Map("en" -> 23L, "de" -> 5L), "doc_id")
     assert(keptGrouped.count() === 3) // en: 6,5,4 fit 23; de's doc costs 6 > 5
   }
 
