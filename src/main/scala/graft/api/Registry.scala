@@ -67,7 +67,7 @@ object Registry {
       calibrate = c.boolOr("calibrate", false),
       calibrateSampleSize = c.intOr("calibrate_sample_size", 5),
       binaryAttachCol = c.get("binary_attach").map(_.str),
-      concurrency = c.intOr("concurrency", 1))
+      concurrency = c.get("concurrency").map(_.int))
 
   // ---- registrations (SURVEY.md §2 op inventory) ----
 

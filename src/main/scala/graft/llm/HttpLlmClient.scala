@@ -44,9 +44,10 @@ final class LlmHttpException(val status: Int, body: String)
   * surfaces to RetryingClient / the op's validation loop exactly like the
   * reference's parse-and-retry.
   *
-  * Compose as `RetryingClient(FallbackClient(RateLimitedClient(http)))` and
-  * run inside `Concurrency.mapOrdered` for in-partition parallelism — see
-  * HttpLlmSpec for the full stack under a local fake server.
+  * Compose as `RetryingClient(FallbackClient(RateLimitedClient(http)))`;
+  * the LLM operators run its calls through [[Concurrency.mapOrdered]] for
+  * in-partition parallelism — see HttpLlmSpec for the full stack under a
+  * local fake server.
   *
   * Cost: `pricePerMTokIn`/`pricePerMTokOut` (dollars per million tokens)
   * applied to the usage block the provider returns.
@@ -324,56 +325,4 @@ final case class HttpLlmClient(
     val lp = root.path("choices").path(0).path("logprobs").path("content").path(0).path("logprob")
     if (lp.isMissingNode || lp.isNull) 1.0 else math.exp(lp.asDouble())
   }
-}
-
-/** Bounded in-flight, order-preserving concurrent mapping for executor-side
-  * LLM calls — the analog of the reference's per-op thread pool
-  * (reference docetl/runner.py:156: `max_threads = 4 * cpu_count`, every op
-  * fans its rows across it). Spark gives one thread per partition; without
-  * this, in-partition calls serialize and throughput is bounded by
-  * #partitions rather than the provider's concurrency budget.
-  *
-  * A sliding window of at most `parallelism` futures is kept in flight on a
-  * shared daemon pool; results are yielded in input order (semantic results
-  * must not depend on response arrival order). Failures propagate on the
-  * failing element's turn, so skip_on_error semantics are per-row as in the
-  * serial path.
-  */
-object Concurrency {
-
-  private lazy val pool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
-      val t = new Thread(r, "graft-llm-async")
-      t.setDaemon(true)
-      t
-    })
-
-  def mapOrdered[A, B](it: Iterator[A], parallelism: Int)(f: A => B): Iterator[B] =
-    if (parallelism <= 1) it.map(f)
-    else new Iterator[B] {
-      private val window = new java.util.ArrayDeque[java.util.concurrent.Future[B]]()
-      private def fill(): Unit =
-        while (window.size < parallelism && it.hasNext) {
-          val a = it.next()
-          window.add(pool.submit(() => f(a)))
-        }
-      fill()
-      override def hasNext: Boolean = !window.isEmpty
-      override def next(): B = {
-        val fut = window.poll()
-        try {
-          val r = fut.get()
-          fill()
-          r
-        } catch {
-          case e: java.util.concurrent.ExecutionException =>
-            fill()
-            throw e.getCause
-        }
-      }
-    }
-
-  /** flatMap flavor: each element yields 0..n outputs, order preserved. */
-  def flatMapOrdered[A, B](it: Iterator[A], parallelism: Int)(f: A => Iterator[B]): Iterator[B] =
-    mapOrdered(it, parallelism)(a => f(a).toVector).flatten
 }

@@ -149,7 +149,9 @@ object Cached {
   * INSIDE the retry loop — so every retry attempt re-acquires a permit
   * rather than bursting unthrottled at a failing provider. An abandoned
   * timed-out call may still complete (and bill) provider-side — the
-  * response cache absorbs the duplicate if it lands. */
+  * response cache absorbs the duplicate if it lands. An interrupted caller
+  * (a cancelled call window) interrupts its round-trip and does not
+  * retry. */
 final case class RetryingClient(
     inner: LlmClient,
     timeoutMs: Long = 120000,
@@ -162,6 +164,7 @@ final case class RetryingClient(
     while (attempt <= maxRetries) {
       try return withTimeout(budgetMs)(f)
       catch {
+        case e: InterruptedException => throw e // cancelled: no retry
         case e: Exception =>
           last = e
           attempt += 1
@@ -179,6 +182,9 @@ final case class RetryingClient(
         task.cancel(true)
         throw new java.util.concurrent.TimeoutException(
           s"LLM call exceeded ${budgetMs}ms")
+      case e: InterruptedException =>
+        task.cancel(true)
+        throw e
       case e: java.util.concurrent.ExecutionException => throw e.getCause
     }
   }
@@ -326,15 +332,49 @@ object LlmCache {
     diskPut(key, v)
   }
 
+  /** Keys being computed right now, each with the future its leader
+    * completes. */
+  private val inflight =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[LlmResponse]]()
+
+  /** Single-flight: concurrent callers of one missing key make ONE provider
+    * call. The first caller computes; the others wait for its response and
+    * count as hits, exactly as they would have in a serial run. If the
+    * leader fails, each waiter computes for itself, so a waiter sees no
+    * failure it would not have seen alone. */
   def getOrCompute(key: String, compute: => LlmResponse): LlmResponse =
     get(key) match {
       case Some(v) => hitCounter.incrementAndGet(); v
       case None =>
-        val v = compute
-        remember(key, v)
-        diskPut(key, v)
-        v
+        val mine = new java.util.concurrent.CompletableFuture[LlmResponse]()
+        inflight.putIfAbsent(key, mine) match {
+          case null =>
+            try {
+              // a leader that finished between get and putIfAbsent has
+              // already stored its response
+              val v = Option(map.get(key)) match {
+                case Some(v) => hitCounter.incrementAndGet(); v
+                case None => computeAndStore(key, compute)
+              }
+              mine.complete(v)
+              v
+            } catch {
+              case e: Throwable => mine.completeExceptionally(e); throw e
+            } finally inflight.remove(key, mine)
+          case leader =>
+            try { val v = leader.get(); hitCounter.incrementAndGet(); v }
+            catch {
+              case _: java.util.concurrent.ExecutionException => computeAndStore(key, compute)
+            }
+        }
     }
+
+  private def computeAndStore(key: String, compute: => LlmResponse): LlmResponse = {
+    val v = compute
+    remember(key, v)
+    diskPut(key, v)
+    v
+  }
 
   /** Served-from-cache completions since the last [[resetHits]] — lets a
     * pre-flight estimate tell a cold measurement from one a warm cache

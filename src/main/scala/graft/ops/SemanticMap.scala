@@ -127,6 +127,7 @@ final case class SemanticMapConfig(
     model: String = "mock",
     dropKeys: Seq[String] = Nil,
     limit: Option[Int] = None,
+    /** Rows per `batch_prompt` round trip; unused otherwise. */
     batchSize: Int = 64,
     skipOnError: Boolean = false,
     bypassCache: Boolean = false,
@@ -158,16 +159,21 @@ final case class SemanticMapConfig(
       * retry-safe. */
     binaryAttachCol: Option[String] = None,
     /** In-partition async fan-out: up to this many provider calls in flight
-      * per partition (reference runner.py:156 `4 * cpu_count` thread pool).
+      * per partition, on the executor's shared [[graft.llm.Concurrency]]
+      * pool of `4 × cores` threads (reference runner.py:156). None = the
+      * task's share of that pool, 4 calls per task CPU, shared with the
+      * task's other default windows; the pool size caps larger values.
       * 1 = serial. Results stay in input order; per-row error semantics
-      * (skip_on_error, validate retries) are unchanged. */
-    concurrency: Int = 1)
+      * (skip_on_error, validate retries, gleaning) are unchanged. */
+    concurrency: Option[Int] = None)
 
 /** LLM projection (reference docetl/operations/map.py:35-714).
   *
-  * Core loop = `mapPartitions` with per-batch submission: NOT a one-row UDF,
-  * so a production client can batch/async its HTTP calls, share a rate
-  * limiter per executor, and amortize cache lookups (SURVEY.md §2.2 mapping).
+  * Core loop = `mapPartitions`, NOT a one-row UDF: each partition keeps a
+  * window of rows' calls in flight on the executor's shared pool
+  * ([[graft.llm.Concurrency]]), or, under `batch_prompt`, sends one round
+  * trip per `batchSize` rows; a rate limiter and the response cache are
+  * shared per executor (SURVEY.md §2.2 mapping).
   * Declared output fields are merged into the row, input fields pass through
   * (`{**item, **output}`, map.py:513); `dropKeys` / drop-keys-only fast path
   * (map.py:358-372) and `limit` early-stop are honored.
@@ -238,42 +244,42 @@ object SemanticMap {
     }
 
     base.mapPartitions { it =>
-      it.grouped(cfgB.batchSize).flatMap { batch =>
-        if (cfgB.batchPrompt) {
-          // One provider round-trip per batch; cache still applies per item.
-          // Each key is looked up ONCE and misses fill from the responses
-          // in hand: the cache is a bounded FIFO shared by the JVM, so a
-          // re-read after the call can find an entry evicted or cleared.
-          val prompts = batch.map(renderRow).toVector
-          val keys = prompts.map(p => s"${cfgB.model}|${outStruct.simpleString}|$p")
-          val cached = keys.map(k => if (cfgB.bypassCache) None else LlmCache.get(k))
-          val misses = cached.indices.filter(cached(_).isEmpty)
-          val responses =
-            if (misses.isEmpty) cached
-            else {
-              callsAcc.add(1)
-              val fresh = clientB.completeBatch(cfgB.model, misses.map(prompts), outStruct)
-              require(fresh.size == misses.size,
-                s"completeBatch returned ${fresh.size} responses for ${misses.size} prompts")
-              misses.zip(fresh).foldLeft(cached) { case (acc, (i, r)) =>
-                costAcc.add(r.cost)
-                if (!cfgB.bypassCache) LlmCache.put(keys(i), r)
-                acc.updated(i, Some(r))
-              }
+      if (cfgB.batchPrompt) it.grouped(cfgB.batchSize).flatMap { batch =>
+        // One provider round-trip per batch; cache still applies per item.
+        // Each key is looked up ONCE and misses fill from the responses
+        // in hand: the cache is a bounded FIFO shared by the JVM, so a
+        // re-read after the call can find an entry evicted or cleared.
+        val prompts = batch.map(renderRow).toVector
+        val keys = prompts.map(p => s"${cfgB.model}|${outStruct.simpleString}|$p")
+        val cached = keys.map(k => if (cfgB.bypassCache) None else LlmCache.get(k))
+        val misses = cached.indices.filter(cached(_).isEmpty)
+        val responses =
+          if (misses.isEmpty) cached
+          else {
+            callsAcc.add(1)
+            val fresh = clientB.completeBatch(cfgB.model, misses.map(prompts), outStruct)
+            require(fresh.size == misses.size,
+              s"completeBatch returned ${fresh.size} responses for ${misses.size} prompts")
+            misses.zip(fresh).foldLeft(cached) { case (acc, (i, r)) =>
+              costAcc.add(r.cost)
+              if (!cfgB.bypassCache) LlmCache.put(keys(i), r)
+              acc.updated(i, Some(r))
             }
-          batch.iterator.zip(prompts.iterator).zip(responses.iterator).map {
-            case ((row, p), r) => emit(row, p, r.get.values)
           }
-        } else graft.llm.Concurrency.flatMapOrdered(batch.iterator, cfgB.concurrency) { row =>
-          val prompt = renderRow(row)
-          try {
-            val values = LlmRunner.callWithLoops(
-              clientB, cfgB.model, prompt, outStruct, cfgB.gleaning, cfgB.validate,
-              cfgB.numRetriesOnValidateFailure, cfgB.bypassCache, costAcc, callsAcc)
-            Iterator.single(emit(row, prompt, values))
-          } catch {
-            case e: Exception if cfgB.skipOnError => Iterator.empty
-          }
+        batch.iterator.zip(prompts.iterator).zip(responses.iterator).map {
+          case ((row, p), r) => emit(row, p, r.get.values)
+        }
+      }
+      // One window over the whole partition: it never drains between rows.
+      else graft.llm.Concurrency.flatMapOrdered(it, cfgB.concurrency) { row =>
+        val prompt = renderRow(row)
+        try {
+          val values = LlmRunner.callWithLoops(
+            clientB, cfgB.model, prompt, outStruct, cfgB.gleaning, cfgB.validate,
+            cfgB.numRetriesOnValidateFailure, cfgB.bypassCache, costAcc, callsAcc)
+          Iterator.single(emit(row, prompt, values))
+        } catch {
+          case e: Exception if cfgB.skipOnError => Iterator.empty
         }
       }
     }(Encoders.row(newSchema))
@@ -302,12 +308,8 @@ object LlmRunner {
     def oneCall(p: String): Map[String, Any] = {
       val key = s"$model|${schema.simpleString}|$p"
       // cost counted only on real calls: cache hits are free provider-side
-      def real(): graft.llm.LlmResponse = {
-        callsAcc.add(1)
-        val r = client.complete(model, p, schema)
-        costAcc.add(r.cost)
-        r
-      }
+      def real(): graft.llm.LlmResponse =
+        charged(client, model, p, schema, costAcc, callsAcc)
       val resp =
         if (bypassCache) real()
         else LlmCache.getOrCompute(key, real())
@@ -352,12 +354,23 @@ object LlmRunner {
       costAcc: DoubleAccumulator,
       callsAcc: org.apache.spark.util.LongAccumulator): Map[String, Any] =
     LlmCache.getOrCompute(
-      s"$model|${schema.simpleString}|$prompt", {
-        callsAcc.add(1)
-        val r = client.complete(model, prompt, schema)
-        costAcc.add(r.cost)
-        r
-      }).values
+      s"$model|${schema.simpleString}|$prompt",
+      charged(client, model, prompt, schema, costAcc, callsAcc)).values
+
+  /** One real provider call, charged to the op's accumulators: the call
+    * counts even if it throws, its cost once it answers. The adds are
+    * synchronized because the pool threads of one task share that task's
+    * accumulator copies, and `AccumulatorV2.add` is a plain
+    * read-modify-write. */
+  def charged(
+      client: LlmClient, model: String, prompt: String, schema: StructType,
+      costAcc: DoubleAccumulator,
+      callsAcc: org.apache.spark.util.LongAccumulator): graft.llm.LlmResponse = {
+    callsAcc.synchronized(callsAcc.add(1))
+    val r = client.complete(model, prompt, schema)
+    costAcc.synchronized(costAcc.add(r.cost))
+    r
+  }
 
   /** Coerce a mock/parsed value to the declared Spark type (the analog of the
     * reference's response type-checking, validation.py:184-240). */
@@ -382,7 +395,8 @@ object LlmRunner {
 
 /** N independent prompts per row, each writing disjoint output keys, results
   * unioned into the row (reference docetl/operations/map.py:717-985
-  * `parallel_map`). One pass; sub-prompts fire per row within the partition. */
+  * `parallel_map`). One pass; rows run through the executor's shared call
+  * window ([[graft.llm.Concurrency]]), each row's sub-prompts in turn. */
 object ParallelMap {
 
   final case class SubPrompt(prompt: String, outputSchema: Seq[(String, String)], model: String = "mock")
@@ -400,7 +414,7 @@ object ParallelMap {
     val promptsB = prompts
     val tpls = prompts.map(sp => Template(sp.prompt, df.schema))
     df.mapPartitions { it =>
-      it.map { row =>
+      graft.llm.Concurrency.mapOrdered(it, None) { row =>
         val outs = promptsB.zip(outStructs).zip(tpls).flatMap { case ((sp, st), tpl) =>
           val prompt = tpl.render(row)
           val values = LlmRunner.callWithLoops(
@@ -417,7 +431,9 @@ object ParallelMap {
   * schema is exactly one bool (+ optional `_short_explanation`); rows where
   * the LLM answered true are kept and the decision key is consumed.
   * `limit` counts passing rows — Spark's CollectLimit executes partitions
-  * incrementally, giving the same early-termination economics.
+  * incrementally, giving the same early-termination economics. A window of
+  * in-flight calls would pay for rows past the limit, so a limited filter
+  * runs its calls serially unless `concurrency` is set.
   */
 object SemanticFilter {
 
@@ -428,7 +444,8 @@ object SemanticFilter {
     require(boolFields.size == 1,
       s"filter schema must declare exactly one bool (got $boolFields) — reference filter.py:59-69")
     val decisionKey = boolFields.head._1
-    val mapped = SemanticMap(df, cfg.copy(limit = None), client)
+    val mapped = SemanticMap(df, cfg.copy(limit = None,
+      concurrency = cfg.concurrency.orElse(cfg.limit.map(_ => 1))), client)
     val filtered = mapped
       .filter(org.apache.spark.sql.functions.col(decisionKey))
       .drop(decisionKey)

@@ -3,9 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.{DoubleAccumulator, LongAccumulator}
 
 import graft.core.SchemaTypes
-import graft.llm.LlmClient
+import graft.llm.{LlmCache, LlmClient}
 
 /** LLM aggregation (reference docetl/operations/reduce.py:35-1053).
   *
@@ -163,26 +164,7 @@ object SemanticReduce {
             cfgB.valueSampleEmbedModel, client)
         }
         val n = row.getLong(gSchema.fieldIndex("_n"))
-        val promptsUsed = Seq.newBuilder[String]
-        var lastPrompt = ""
-        // Responses go through the executor-local cache: a global sort ABOVE
-        // this operator runs a range-partitioner SAMPLING pass that executes
-        // the whole partition twice — without the cache every group would
-        // pay its LLM calls twice (and task retries would too).
-        def call(prompt: String): Map[String, Any] = {
-          if (cfgB.enableObservability) promptsUsed += prompt
-          lastPrompt = prompt
-          val key = s"${cfgB.model}|${outStruct.simpleString}|$prompt"
-          // cost counted only on the real call — cache hits are free, so the
-          // cost accumulator matches actual provider spend under replays
-          val resp = graft.llm.LlmCache.getOrCompute(key, {
-            callsAcc.add(1)
-            val r = client.complete(cfgB.model, prompt, outStruct)
-            costAcc.add(r.cost)
-            r
-          })
-          resp.values
-        }
+        val call = new GroupCalls(cfgB, client, outStruct, costAcc, callsAcc)
         val intermediates = Seq.newBuilder[String]
         val initial = cfgB.strategy match {
           case "batch" => call(members.mkString("\n"))
@@ -204,34 +186,7 @@ object SemanticReduce {
               }.getOrElse(call(""))
           case other => throw new IllegalArgumentException(s"unknown strategy $other")
         }
-        // Gleaning: judge the group result, refine up to numRounds times
-        // (reference api.py:365-460).
-        val values = cfgB.gleaning match {
-          case None => initial
-          case Some(g) =>
-            val judgeSchema = StructType(Seq(
-              StructField("should_refine", BooleanType),
-              StructField("improvements", StringType)))
-            var v = initial
-            var rounds = 0
-            var continue = true
-            while (continue && rounds < g.numRounds && g.shouldGlean(v)) {
-              val judgePrompt = s"${g.validationPrompt}\n${v.toSeq.sortBy(_._1).mkString(";")}"
-              val verdict = graft.llm.LlmCache.getOrCompute(
-                s"${cfgB.model}|judge|$judgePrompt", {
-                  callsAcc.add(1)
-                  val r = client.complete(cfgB.model, judgePrompt, judgeSchema)
-                  costAcc.add(r.cost)
-                  r
-                })
-              if (verdict.values("should_refine").asInstanceOf[Boolean]) {
-                v = call(s"$lastPrompt\nRefine: ${verdict.values("improvements")}")
-                rounds += 1
-              } else continue = false
-            }
-            v
-        }
-        val resp = graft.llm.LlmResponse(values, 0.0)
+        val values = call.gleaned(initial)
         val keyVals = (0 until nKeys).map(row.get)
         val ptVals =
           if (cfgB.passThrough.isEmpty) Seq.empty[Any]
@@ -239,19 +194,19 @@ object SemanticReduce {
             val pt = row.getStruct(gSchema.fieldIndex("_pt"))
             cfgB.passThrough.indices.map(i => pt.get(i + 1))
           }
-        val outVals = outStruct.fields.map(f => LlmRunner.coerce(resp.values.get(f.name), f.dataType))
+        val outVals = outStruct.fields.map(f => LlmRunner.coerce(values.get(f.name), f.dataType))
         val lineageVals =
           if (cfgB.lineage) Seq(allMembers) // reference reduce.py:410-418
           else Seq.empty[Any]
         val obsVals =
-          if (cfgB.enableObservability) Seq(promptsUsed.result().mkString("\n=====\n"))
-          else Seq.empty[Any]
+          if (cfgB.enableObservability) Seq(call.prompts) else Seq.empty[Any]
         val interVals =
           if (cfgB.persistIntermediates) Seq(intermediates.result())
           else Seq.empty[Any]
         Row((keyVals ++ ptVals ++ outVals ++ lineageVals ++ obsVals ++ interVals :+ n): _*)
       }
-      it.flatMap { row =>
+      // Groups reduce through the executor's shared call window, in order.
+      graft.llm.Concurrency.flatMapOrdered(it, None) { row =>
         // deterministic config errors (bad mode, missing query) must still
         // fail loudly — skip_on_error is for per-group RUNTIME failures
         try Iterator.single(reduceGroup(row)) catch {
@@ -260,6 +215,57 @@ object SemanticReduce {
         }
       }
     }(Encoders.row(newSchema))
+  }
+
+  private val judgeSchema = StructType(Seq(
+    StructField("should_refine", BooleanType),
+    StructField("improvements", StringType)))
+
+  /** One group's LLM calls: cache-through completions charged to the op's
+    * accumulators (cost only on real calls — cache hits are free, so the
+    * cost accumulator matches actual provider spend under replays), the
+    * prompts sent, and gleaning. Responses go through the executor-local
+    * cache because a global sort ABOVE this operator runs a
+    * range-partitioner SAMPLING pass that executes the whole partition
+    * twice — without the cache every group would pay its LLM calls twice
+    * (and task retries would too). */
+  private final class GroupCalls(
+      cfg: Config, client: LlmClient, outStruct: StructType,
+      costAcc: DoubleAccumulator, callsAcc: LongAccumulator) {
+    private val sent = Seq.newBuilder[String]
+    private var lastPrompt = ""
+
+    def apply(prompt: String): Map[String, Any] = {
+      if (cfg.enableObservability) sent += prompt
+      lastPrompt = prompt
+      cached(s"${cfg.model}|${outStruct.simpleString}|$prompt", prompt, outStruct)
+    }
+
+    private def cached(key: String, prompt: String, schema: StructType): Map[String, Any] =
+      LlmCache.getOrCompute(key,
+        LlmRunner.charged(client, cfg.model, prompt, schema, costAcc, callsAcc)).values
+
+    /** Judge the group result, refine up to numRounds times (reference
+      * api.py:365-460). */
+    def gleaned(initial: Map[String, Any]): Map[String, Any] = cfg.gleaning match {
+      case None => initial
+      case Some(g) =>
+        var v = initial
+        var rounds = 0
+        var continue = true
+        while (continue && rounds < g.numRounds && g.shouldGlean(v)) {
+          val judgePrompt = s"${g.validationPrompt}\n${v.toSeq.sortBy(_._1).mkString(";")}"
+          val verdict = cached(s"${cfg.model}|judge|$judgePrompt", judgePrompt, judgeSchema)
+          if (verdict("should_refine").asInstanceOf[Boolean]) {
+            v = apply(s"$lastPrompt\nRefine: ${verdict("improvements")}")
+            rounds += 1
+          } else continue = false
+        }
+        v
+    }
+
+    /** The prompts sent for the group, fold chains joined by "\n=====\n". */
+    def prompts: String = sent.result().mkString("\n=====\n")
   }
 
   /** Scale shape for `strategy = "fold"`: repartition by the reduce keys,
@@ -336,20 +342,8 @@ object SemanticReduce {
         var acc = Option.empty[Map[String, Any]]
         var failed = Option.empty[Throwable]
         var iter = 0
-        var lastPrompt = ""
-        val promptsUsed = Seq.newBuilder[String]
+        val call = new GroupCalls(cfgB, client, outStruct, costAcc, callsAcc)
         val intermediates = Seq.newBuilder[String]
-        def call(prompt: String): Map[String, Any] = {
-          if (cfgB.enableObservability) promptsUsed += prompt
-          lastPrompt = prompt
-          val key = s"${cfgB.model}|${outStruct.simpleString}|$prompt"
-          graft.llm.LlmCache.getOrCompute(key, {
-            callsAcc.add(1)
-            val r = client.complete(cfgB.model, prompt, outStruct)
-            costAcc.add(r.cost)
-            r
-          }).values
-        }
         val chunk = new scala.collection.mutable.ArrayBuffer[String](cfgB.foldBatchSize)
         def flush(): Unit = if (chunk.nonEmpty && failed.isEmpty) {
           val prefix = acc.map(a =>
@@ -388,36 +382,10 @@ object SemanticReduce {
         if (failed.isDefined) return None
         val ptVals = bestPt.tail
         try {
-          val initial = acc.getOrElse(call(""))
-          val values = cfgB.gleaning match {
-            case None => initial
-            case Some(g) =>
-              val judgeSchema = StructType(Seq(
-                StructField("should_refine", BooleanType),
-                StructField("improvements", StringType)))
-              var v = initial
-              var rounds = 0
-              var continue = true
-              while (continue && rounds < g.numRounds && g.shouldGlean(v)) {
-                val judgePrompt = s"${g.validationPrompt}\n${v.toSeq.sortBy(_._1).mkString(";")}"
-                val verdict = graft.llm.LlmCache.getOrCompute(
-                  s"${cfgB.model}|judge|$judgePrompt", {
-                    callsAcc.add(1)
-                    val r = client.complete(cfgB.model, judgePrompt, judgeSchema)
-                    costAcc.add(r.cost)
-                    r
-                  })
-                if (verdict.values("should_refine").asInstanceOf[Boolean]) {
-                  v = call(s"$lastPrompt\nRefine: ${verdict.values("improvements")}")
-                  rounds += 1
-                } else continue = false
-              }
-              v
-          }
+          val values = call.gleaned(acc.getOrElse(call("")))
           val outVals = outStruct.fields.map(f => LlmRunner.coerce(values.get(f.name), f.dataType))
           val obsVals =
-            if (cfgB.enableObservability) Seq(promptsUsed.result().mkString("\n=====\n"))
-            else Seq.empty[Any]
+            if (cfgB.enableObservability) Seq(call.prompts) else Seq.empty[Any]
           val interVals =
             if (cfgB.persistIntermediates) Seq(intermediates.result())
             else Seq.empty[Any]

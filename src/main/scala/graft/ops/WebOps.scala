@@ -94,7 +94,10 @@ object WebFetchOp {
     *   - `convertToMarkdown` converts HTML-looking responses via the
     *     pure-JVM [[graft.sources.HtmlToMarkdown]] (web_fetch.py:48-52);
     *   - `maxWorkers` fetches that many URLs concurrently per partition
-    *     (the reference's thread pool; in-partition, order-preserving).
+    *     (the reference's thread pool; in-partition, order-preserving),
+    *     capped by the executor's shared pool of
+    *     [[graft.llm.Concurrency.poolSize]] threads, which the LLM
+    *     operators' calls use too.
     */
   def apply(
       df: DataFrame,

@@ -328,7 +328,7 @@ class HttpLlmSpec extends AnyFunSuite {
         LlmCache.clear()
         SemanticMap(data,
           SemanticMapConfig("http_map", "label {{ input.text }}",
-            Seq("label" -> "str"), model = "good", concurrency = conc, bypassCache = false),
+            Seq("label" -> "str"), model = "good", concurrency = Some(conc), bypassCache = false),
           stack).orderBy("id").collect().map(_.toSeq).toSeq
       }
       val serial = run(1)
