@@ -1,6 +1,8 @@
 package graft.llm
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.{DoubleAccumulator, LongAccumulator}
 
 /** The LLM seam every semantic operator calls through — the Scala analog of
   * the reference's `APIWrapper` (reference docetl/operations/utils/api.py:76+).
@@ -95,46 +97,99 @@ final case class RateLimitedClient(inner: LlmClient, key: String, permitsPerMinu
     copy(inner = inner.withOutputMode(mode))
 }
 
-/** Cache-through call helpers for executor-side LLM invocations. EVERY
-  * executor call site should go through these (the analog of the
-  * reference's disk LLM cache, cache.py:17-23): Spark re-executes partitions
-  * for task retries, speculation, AND the range-partitioner sampling pass a
-  * global sort runs over its child — without the cache each of those pays
-  * the provider calls again. */
-object Cached {
-  def complete(client: LlmClient, model: String, prompt: String, schema: StructType): LlmResponse =
-    LlmCache.getOrCompute(s"$model|${schema.simpleString}|$prompt",
-      client.complete(model, prompt, schema))
+/** An op's charge — the engine-wide analog of the reference's per-op float
+  * cost return (base.py:190-205): provider round trips and dollar cost in
+  * the accumulators `graft.llm.calls.<op>` and `graft.llm.cost.<op>`.
+  * Only [[Cached]] charges it, and only for real provider calls: cache
+  * hits are free provider-side, so a warm re-run reports 0. */
+final case class Meter(calls: LongAccumulator, cost: DoubleAccumulator) {
 
-  def compare(client: LlmClient, model: String, prompt: String): Boolean =
-    complete(client, model, prompt, MockLlmClient.boolSchema)
+  /** One real round trip: it counts even if it throws, its cost once it
+    * answers. The adds are synchronized because the pool threads of one
+    * task share that task's accumulator copies, and `AccumulatorV2.add` is
+    * a plain read-modify-write. */
+  private[llm] def charge[A](call: => A)(costOf: A => Double): A = {
+    calls.synchronized(calls.add(1))
+    val r = call
+    cost.synchronized(cost.add(costOf(r)))
+    r
+  }
+}
+
+object Meter {
+  def apply(spark: SparkSession, op: String): Meter = Meter(
+    spark.sparkContext.longAccumulator(s"graft.llm.calls.$op"),
+    spark.sparkContext.doubleAccumulator(s"graft.llm.cost.$op"))
+}
+
+/** The one path from an op to the provider (the analog of the reference's
+  * `APIWrapper` with its disk cache, api.py:76+ / cache.py:17-23): every
+  * call is looked up in [[LlmCache]] and charged to the op's [[Meter]] only
+  * when it reaches the provider. Spark re-executes partitions for task
+  * retries, speculation, AND the range-partitioner sampling pass a global
+  * sort runs over its child — without the cache each of those pays the
+  * provider calls again; driver-side calls (calibration anchors, oracle
+  * labels, summaries) are cached for the same reason across re-runs.
+  * `bypassCache` neither reads nor writes the cache. */
+object Cached {
+
+  private def key(model: String, schema: StructType, prompt: String) =
+    s"$model|${schema.simpleString}|$prompt"
+
+  def complete(
+      client: LlmClient, meter: Meter, model: String, prompt: String, schema: StructType,
+      bypassCache: Boolean = false): LlmResponse = {
+    def call = meter.charge(client.complete(model, prompt, schema))(_.cost)
+    if (bypassCache) call else LlmCache.getOrCompute(key(model, schema, prompt), call)
+  }
+
+  def compare(client: LlmClient, meter: Meter, model: String, prompt: String): Boolean =
+    complete(client, meter, model, prompt, MockLlmClient.boolSchema)
       .values("is_match").asInstanceOf[Boolean]
 
   /** Cached logprob confidence — a recomputed partition must see the SAME
     * confidence or rows can cross a calibrated threshold between two scans
     * of the same frame (classified into neither or both sides). */
-  def confidence(client: LlmClient, model: String, prompt: String): Double =
-    LlmCache.getOrCompute(s"$model|logprob|$prompt",
-      LlmResponse(Map("confidence" -> client.logprobConfidence(model, prompt)), 0.0))
+  def confidence(client: LlmClient, meter: Meter, model: String, prompt: String): Double =
+    LlmCache.getOrCompute(s"$model|logprob|$prompt", LlmResponse(Map("confidence" ->
+      meter.charge(client.logprobConfidence(model, prompt))(_ => 0.0)), 0.0))
       .values("confidence").asInstanceOf[Double]
 
-  /** Cached embeddings: only cache misses reach the provider, batched in
-    * one call. */
-  def embed(client: LlmClient, model: String, texts: Seq[String]): Seq[Array[Float]] = {
-    def key(t: String) = s"$model|embed|$t"
-    val hits = texts.map(t => LlmCache.get(key(t)))
-    val missIdx = texts.indices.filter(i => hits(i).isEmpty)
-    val computed: Map[Int, Array[Float]] =
-      if (missIdx.isEmpty) Map.empty
-      else {
-        val embs = client.embed(model, missIdx.map(texts))
-        missIdx.zip(embs).map { case (i, e) =>
-          LlmCache.put(key(texts(i)), LlmResponse(Map("e" -> e), 0.0))
-          i -> e
-        }.toMap
-      }
-    texts.indices.map(i =>
-      computed.getOrElse(i, hits(i).get.values("e").asInstanceOf[Array[Float]]))
+  /** One provider round trip labels the batch's distinct misses
+    * (reference map.py:530-618 `batch_prompt`). */
+  def completeBatch(
+      client: LlmClient, meter: Meter, model: String, prompts: Seq[String], schema: StructType,
+      bypassCache: Boolean): Seq[LlmResponse] = {
+    val ps = prompts.toIndexedSeq
+    fill(ps.map(key(model, schema, _)), bypassCache) { misses =>
+      meter.charge(client.completeBatch(model, misses.map(ps), schema))(_.map(_.cost).sum)
+    }
+  }
+
+  /** Embeddings, the distinct misses in one provider round trip. */
+  def embed(client: LlmClient, meter: Meter, model: String, texts: Seq[String]): Seq[Array[Float]] = {
+    val ts = texts.toIndexedSeq
+    fill(ts.map(t => s"$model|embed|$t"), bypassCache = false) { misses =>
+      meter.charge(client.embed(model, misses.map(ts)))(_ => 0.0)
+        .map(e => LlmResponse(Map("e" -> e), 0.0))
+    }.map(_.values("e").asInstanceOf[Array[Float]])
+  }
+
+  /** Batch-miss fill: each key is looked up ONCE, `fetch` sends only the
+    * distinct misses, and every item is answered from the responses in
+    * hand — the cache is a bounded FIFO shared by the JVM, so a re-read
+    * after the provider call can find an entry evicted or cleared. */
+  private def fill(keys: IndexedSeq[String], bypassCache: Boolean)(
+      fetch: IndexedSeq[Int] => Seq[LlmResponse]): IndexedSeq[LlmResponse] = {
+    val found = keys.map(k => if (bypassCache) None else LlmCache.get(k))
+    val misses = keys.indices.filter(found(_).isEmpty).distinctBy(keys)
+    if (misses.isEmpty) return found.map(_.get)
+    val fresh = fetch(misses)
+    require(fresh.size == misses.size,
+      s"provider returned ${fresh.size} responses for ${misses.size} requests")
+    if (!bypassCache) misses.zip(fresh).foreach { case (i, r) => LlmCache.put(keys(i), r) }
+    val byKey = misses.map(keys).zip(fresh).toMap
+    keys.indices.map(i => found(i).getOrElse(byKey(keys(i))))
   }
 }
 

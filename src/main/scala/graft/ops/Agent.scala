@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 import graft.core.SchemaTypes
-import graft.llm.{LlmClient, Template}
+import graft.llm.{Cached, LlmClient, Meter, Template}
 
 /** Agent-mode projection (reference docetl/operations/map.py:44,493 +
   * operations/utils/openai_agents_runner.py): instead of a one-shot
@@ -53,8 +53,7 @@ object AgentMap {
     val keptIdx = kept.map(f => df.schema.fieldIndex(f.name))
     val newSchema = StructType(kept ++ outStruct.fields)
     val tpl = Template(cfg.prompt, df.schema)
-    val costAcc = SemanticMap.costAccumulator(df, s"graft.llm.cost.${cfg.name}")
-    val callsAcc = df.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.${cfg.name}")
+    val meter = Meter(df.sparkSession, cfg.name)
     val cfgB = cfg
     val toolsB = tools
 
@@ -64,9 +63,8 @@ object AgentMap {
         var turns = 0
         var done = false
         while (!done && turns < cfgB.maxTurns) {
-          val resp = graft.llm.Cached.complete(client, cfgB.model, transcript, actionSchema)
-          costAcc.add(resp.cost); callsAcc.add(1)
-          val action = resp.values("action").asInstanceOf[String]
+          val action = Cached.complete(client, meter, cfgB.model, transcript, actionSchema)
+            .values("action").asInstanceOf[String]
           if (action == "final") done = true
           else {
             // Unknown tool names fall back to the alphabetically-first tool
@@ -77,8 +75,7 @@ object AgentMap {
             turns += 1
           }
         }
-        val fin = graft.llm.Cached.complete(client, cfgB.model, transcript, outStruct)
-        costAcc.add(fin.cost); callsAcc.add(1)
+        val fin = Cached.complete(client, meter, cfgB.model, transcript, outStruct)
         val out = keptIdx.map(row.get) ++
           outStruct.fields.map(f => LlmRunner.coerce(fin.values.get(f.name), f.dataType))
         Row(out.toSeq: _*)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.llm.LlmClient
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** Associative fold+merge LLM reduce as a Spark `Aggregator` —
   * the reference's parallel fold/merge strategy (reference
@@ -43,24 +43,16 @@ object AssociativeSemanticReduce {
     val outStruct = graft.core.SchemaTypes.toStruct(cfg.outputSchema)
     require(outStruct.fields.forall(_.dataType == StringType),
       "associative reduce outputs string fields (folded accumulators)")
-    val costAcc = SemanticMap.costAccumulator(df, s"graft.llm.cost.${cfg.name}")
-    val callsAcc = df.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.${cfg.name}")
+    val meter = Meter(df.sparkSession, cfg.name)
     val model = cfg.model
     val foldSize = cfg.foldBatchSize
     val accSchema = StructType(Seq(StructField("acc", StringType)))
 
-    def foldCall(current: String, members: Seq[String]): String = {
-      val prompt =
-        (if (current == null) "" else s"ACC:$current\n") + members.mkString("\n")
-      val resp = graft.llm.Cached.complete(client, model, prompt, accSchema)
-      costAcc.add(resp.cost); callsAcc.add(1)
-      resp.values("acc").toString
-    }
-    def mergeCall(a: String, b: String): String = {
-      val resp = graft.llm.Cached.complete(client, model, s"MERGE:$a\n###\n$b", accSchema)
-      costAcc.add(resp.cost); callsAcc.add(1)
-      resp.values("acc").toString
-    }
+    def accCall(prompt: String): String =
+      Cached.complete(client, meter, model, prompt, accSchema).values("acc").toString
+    def foldCall(current: String, members: Seq[String]): String =
+      accCall((if (current == null) "" else s"ACC:$current\n") + members.mkString("\n"))
+    def mergeCall(a: String, b: String): String = accCall(s"MERGE:$a\n###\n$b")
     def drain(b: Buf, force: Boolean): Buf =
       if (b.pending.size >= foldSize || (force && b.pending.nonEmpty))
         Buf(Nil, foldCall(b.acc, b.pending), b.n)

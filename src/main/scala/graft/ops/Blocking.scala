@@ -63,6 +63,7 @@ object Blocking {
       candidates: DataFrame, // (id_a, id_b, cosine)
       renders: DataFrame,    // (id, render) — compare text per row id
       client: LlmClient,
+      meter: graft.llm.Meter,
       model: String,
       targetRecall: Double = 0.95,
       sampleSize: Int = 100): (DataFrame, Double) = {
@@ -75,7 +76,7 @@ object Blocking {
       .collect()
     val labeled = sample.map { row =>
       val cos = row.getAs[Double]("cosine")
-      val isMatch = client.compare(model,
+      val isMatch = graft.llm.Cached.compare(client, meter, model,
         s"${row.getAs[String]("_ra")}\n###\n${row.getAs[String]("_rb")}")
       (cos, isMatch)
     }.toSeq

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.llm.{LlmClient, Template}
+import graft.llm.{Cached, LlmClient, Meter, Template}
 
 /** Model cascade for filter-shaped ops (reference
   * docetl/operations/utils/cascade_runner.py, SURVEY.md §2.11/§4.2):
@@ -47,14 +47,15 @@ object CascadeFilter {
       .add(StructField("_graft_dec", BooleanType))
       .add(StructField("_graft_conf", DoubleType))
     val proxyModel = cfg.proxyModel
+    val meter = Meter(df.sparkSession, cfg.name)
 
     // Pass 1: proxy decision + confidence for every row.
     val scored = graft.core.PersistScope.register(df.mapPartitions { it =>
       it.map { row =>
         val p = tpl.render(row)
-        val dec = graft.llm.Cached.complete(proxy, proxyModel, p, boolSchema)
+        val dec = Cached.complete(proxy, meter, proxyModel, p, boolSchema)
           .values(cfg.decisionKey).asInstanceOf[Boolean]
-        val conf = graft.llm.Cached.confidence(proxy, proxyModel, p)
+        val conf = Cached.confidence(proxy, meter, proxyModel, p)
         Row.fromSeq(row.toSeq :+ dec :+ conf)
       }
     }(Encoders.row(scoredSchema)).persist())
@@ -70,7 +71,7 @@ object CascadeFilter {
     val confIdx = scoredSchema.fieldIndex("_graft_conf")
     val labeled = sample.map { row =>
       val p = tpl.render(row)
-      val truth = oracle.complete(oracleModel, p, boolSchema)
+      val truth = Cached.complete(oracle, meter, oracleModel, p, boolSchema)
         .values(cfg.decisionKey).asInstanceOf[Boolean]
       (row.getBoolean(tplIdx), row.getDouble(confIdx), truth)
     }
@@ -149,11 +150,12 @@ object CascadeCompare {
       .add(StructField("_graft_dec", BooleanType))
       .add(StructField("_graft_conf", DoubleType))
     val proxyModel = cfg.proxyModel
+    val meter = Meter(pairs.sparkSession, "cascade_compare")
     val scored = graft.core.PersistScope.register(pairs.mapPartitions { it =>
       it.map { row =>
         val p = s"${row.getString(iL)}\n###\n${row.getString(iR)}"
-        Row.fromSeq(row.toSeq :+ graft.llm.Cached.compare(client, proxyModel, p)
-          :+ graft.llm.Cached.confidence(client, proxyModel, p))
+        Row.fromSeq(row.toSeq :+ Cached.compare(client, meter, proxyModel, p)
+          :+ Cached.confidence(client, meter, proxyModel, p))
       }
     }(Encoders.row(scoredSchema)).persist())
 
@@ -167,7 +169,7 @@ object CascadeCompare {
       scored.filter(col("_graft_dec")), cfg.calibrationSize).collect()
     val labeled = sample.map { row =>
       val p = s"${row.getString(iL)}\n###\n${row.getString(iR)}"
-      (row.getDouble(confIdx), graft.llm.Cached.compare(client, oracleModel, p))
+      (row.getDouble(confIdx), Cached.compare(client, meter, oracleModel, p))
     }
     val threshold = calibratePrecision(labeled.toSeq, cfg.targetPrecision)
 
@@ -175,7 +177,7 @@ object CascadeCompare {
     val escalated = scored.filter(!col("_graft_dec") || col("_graft_conf") < threshold)
     val escalatedMatches = escalated.mapPartitions { it =>
       it.filter { row =>
-        graft.llm.Cached.compare(client, oracleModel, s"${row.getString(iL)}\n###\n${row.getString(iR)}")
+        Cached.compare(client, meter, oracleModel, s"${row.getString(iL)}\n###\n${row.getString(iR)}")
       }
     }(Encoders.row(scoredSchema))
     (trusted.unionByName(escalatedMatches).drop("_graft_dec", "_graft_conf"), threshold)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.llm.LlmClient
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** Hierarchical clustering + LLM node summaries (reference
   * docetl/operations/cluster.py:14-310): embed rows, build a cluster tree,
@@ -64,10 +64,11 @@ object ClusterOp {
       .groupBy("_graft_cluster")
       .agg(sort_array(collect_list(col("_graft_render"))).as("_members"))
       .collect()
+    val meter = Meter(df.sparkSession, "cluster")
     val summaries = samples.map { r =>
       val cid = r.getInt(0)
       val prompt = renderSummaryPrompt(summaryPrompt, r.getSeq[String](1).mkString("\n"))
-      val resp = client.complete(model, prompt, outStruct)
+      val resp = Cached.complete(client, meter, model, prompt, outStruct)
       cid -> renderSummaryValues(resp.values, outStruct)
     }.toMap
     val summaryMap = typedLit(summaries)
@@ -217,6 +218,7 @@ object ClusterOp {
       .collect()
       .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     val summaries = scala.collection.mutable.Map[String, String]()
+    val meter = Meter(df.sparkSession, "cluster")
     def summarize(path: String): String = summaries.getOrElseUpdate(path, {
       val children = leafSamples.keys.filter(k =>
         k.startsWith(path) && k != path).toSeq.sorted
@@ -229,7 +231,8 @@ object ClusterOp {
             .filter(_.nonEmpty).head).distinct.sorted.map(c => s"$path/$c")
           childPaths.map(summarize).mkString("\n")
       }
-      val resp = client.complete(model, renderSummaryPrompt(summaryPrompt, input), outStruct)
+      val resp = Cached.complete(client, meter, model,
+        renderSummaryPrompt(summaryPrompt, input), outStruct)
       renderSummaryValues(resp.values, outStruct)
     })
     leafSamples.keys.foreach(summarize)

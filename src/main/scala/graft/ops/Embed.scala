@@ -4,17 +4,17 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.llm.LlmClient
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** Embedding stage (reference `gen_embedding`, api.py:179; embedding batch
   * sizes 1000/2000 per resolve/equijoin — BASELINE.md): adds
   * `ArrayType(FloatType)` vectors for a rendered text expression.
   *
   * `mapPartitions` with batched provider calls — the same batching a real
-  * embedding endpoint wants — plus an executor-local cache keyed by
-  * (model, text) so repeated texts (and task retries) don't re-embed.
-  * Downstream ops (topk/blocking/dedup/ANN) consume the column with the
-  * native cosine expression.
+  * embedding endpoint wants — through the shared response cache, so
+  * repeated texts (and task retries) don't re-embed. Downstream ops
+  * (topk/blocking/dedup/ANN) consume the column with the native cosine
+  * expression.
   */
 object EmbedOp {
 
@@ -30,43 +30,13 @@ object EmbedOp {
     val textIdx = inSchema.fieldIndex("_graft_embed_text")
     val outSchema = StructType(
       df.schema.fields :+ StructField(outCol, ArrayType(FloatType)))
+    val meter = Meter(df.sparkSession, "embed")
     withText.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
-        val texts = batch.map(_.getString(textIdx))
-        val cached = texts.map(t => EmbedCache.get(model, t))
-        val missing = texts.zip(cached).collect { case (t, None) => t }.distinct
-        if (missing.nonEmpty) {
-          val vecs = client.embed(model, missing)
-          missing.zip(vecs).foreach { case (t, v) => EmbedCache.put(model, t, v) }
-        }
-        batch.iterator.zip(texts.iterator).map { case (row, t) =>
-          val vec = EmbedCache.get(model, t).get
-          Row.fromSeq(row.toSeq.patch(textIdx, Nil, 1) :+ vec.toSeq)
-        }
+        val vecs = Cached.embed(client, meter, model, batch.map(_.getString(textIdx)))
+        batch.lazyZip(vecs).map((row, vec) =>
+          Row.fromSeq(row.toSeq.patch(textIdx, Nil, 1) :+ vec.toSeq))
       }
     }(Encoders.row(outSchema))
   }
-}
-
-/** Executor-local embedding cache (same idempotency rationale as LlmCache). */
-object EmbedCache {
-  private val maxEntries = 200000
-  private val map = new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  def get(model: String, text: String): Option[Array[Float]] =
-    Option(map.get(s"$model|$text"))
-
-  def put(model: String, text: String, v: Array[Float]): Unit = {
-    val key = s"$model|$text"
-    if (map.putIfAbsent(key, v) == null) {
-      order.add(key)
-      while (map.size() > maxEntries) {
-        val evict = order.poll()
-        if (evict != null) map.remove(evict) else return
-      }
-    }
-  }
-
-  def clear(): Unit = { map.clear(); order.clear() }
 }

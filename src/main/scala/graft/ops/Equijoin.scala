@@ -128,10 +128,11 @@ object EquijoinOp {
           case Some(cas) => CascadeCompare(withCmp, "_cl", "_cr", cas, client)
           case None =>
             val model = cfg.model
+            val meter = graft.llm.Meter(left.sparkSession, cfg.name)
             val s2 = withCmp.schema
             withCmp.mapPartitions { it =>
               it.filter { row =>
-                graft.llm.Cached.compare(client, model,
+                graft.llm.Cached.compare(client, meter, model,
                   s"${row.getString(s2.fieldIndex("_cl"))}\n###\n${row.getString(s2.fieldIndex("_cr"))}")
               }
             }(Encoders.row(s2))
@@ -295,9 +296,10 @@ object EquijoinOp {
       .orderBy(col("_lr"), col("_rr")) // deterministic sample
       .limit(sampleSize)
       .collect()
+    val meter = graft.llm.Meter(left.sparkSession, cfg.name)
     val labeled = sample.map { row =>
-      (row.getAs[Double]("_cos"),
-        client.compare(cfg.model, s"${row.getAs[String]("_lr")}\n###\n${row.getAs[String]("_rr")}"))
+      (row.getAs[Double]("_cos"), graft.llm.Cached.compare(client, meter, cfg.model,
+        s"${row.getAs[String]("_lr")}\n###\n${row.getAs[String]("_rr")}"))
     }.toSeq
     val threshold = Blocking.calibrateCosineThreshold(labeled, targetRecall)
     (withEmbeddingBlocking(left, right, cfg, leftEmbCol, rightEmbCol, dim,

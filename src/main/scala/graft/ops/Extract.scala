@@ -58,13 +58,14 @@ object ExtractOp {
     val newSchema = df.schema.add(StructField(outKey, StringType))
     val idx = df.schema.fieldIndex(documentKey)
     val rangeSchema = StructType(Seq(StructField("ranges", StringType)))
+    val meter = graft.llm.Meter(df.sparkSession, name)
     df.mapPartitions { it =>
       it.map { row =>
         val text = row.getString(idx)
         val lines = Option(text).getOrElse("").grouped(width).toArray
         val numbered = lines.zipWithIndex
           .map { case (l, i) => s"${i + 1}: $l" }.mkString("\n")
-        val resp = graft.llm.Cached.complete(client, model, s"$prompt\n$numbered", rangeSchema)
+        val resp = graft.llm.Cached.complete(client, meter, model, s"$prompt\n$numbered", rangeSchema)
         val spans = resp.values("ranges").toString.split(",").flatMap { r =>
           r.trim.split("-") match {
             case Array(a, b) =>

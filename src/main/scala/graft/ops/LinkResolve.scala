@@ -49,10 +49,11 @@ object LinkResolveOp {
       .select("_lv", "_cid")
 
     val model = cfg.model
+    val meter = graft.llm.Meter(spark, cfg.name)
     val mappingSchema = StructType(Seq(
       StructField("_lv", StringType), StructField("_cid", StringType)))
     val confirmed = graft.core.PersistScope.register(cands.mapPartitions { it =>
-      it.filter(row => graft.llm.Cached.compare(client, model,
+      it.filter(row => graft.llm.Cached.compare(client, meter, model,
         s"${row.getString(0).trim.toLowerCase}\n###\n${row.getString(1).trim.toLowerCase}"))
     }(Encoders.row(mappingSchema))
       // one canonical target per dangling value: smallest id wins

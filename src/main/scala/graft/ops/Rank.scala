@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.llm.LlmClient
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** LLM semantic ORDER BY (reference docetl/operations/rank.py:16-1109,
   * type alias "order").
@@ -110,9 +110,10 @@ object RankOp {
     val s = pairs.schema
     val (iA, iRa, iRb) = (s.fieldIndex("_ida"), s.fieldIndex("_ra"), s.fieldIndex("_rb"))
     val winSchema = StructType(Seq(StructField("_id", s("_ida").dataType)))
+    val meter = Meter(df.sparkSession, name)
     val wins = pairs.mapPartitions { it =>
       it.flatMap { row =>
-        if (graft.llm.Cached.compare(client, model, s"${row.getString(iRa)}\n###\n${row.getString(iRb)}"))
+        if (Cached.compare(client, meter, model, s"${row.getString(iRa)}\n###\n${row.getString(iRb)}"))
           Iterator.single(Row(row.get(iA)))
         else Iterator.empty
       }
@@ -147,8 +148,9 @@ object RankOp {
       .limit(sampleSize).collect()
     require(sample.nonEmpty, "calibrated rank needs a non-empty sample")
     val ratingSchema = StructType(Seq(StructField("rating", LongType)))
+    val meter = Meter(df.sparkSession, name)
     val anchors = sample.map { r =>
-      val rating = client.complete(model, r.getString(0), ratingSchema)
+      val rating = Cached.complete(client, meter, model, r.getString(0), ratingSchema)
         .values("rating").asInstanceOf[Long].toDouble
       (r.getSeq[Double](1).toArray, rating)
     }
@@ -196,6 +198,7 @@ object RankOp {
     if (slice.length <= 1) return initial
     val renderIdx = slice.head.fieldIndex("_graft_render")
     val ratingSchema = StructType(Seq(StructField("rating", LongType)))
+    val meter = Meter(spark, name)
     var items = slice.toVector
     val step = math.max(1, windowSize / 2)
     var start = 0
@@ -203,7 +206,7 @@ object RankOp {
     while (!done) {
       val window = items.slice(start, math.min(start + windowSize, items.length))
       val rated = window.map { r =>
-        val rating = graft.llm.Cached.complete(client, model,
+        val rating = Cached.complete(client, meter, model,
           r.getString(renderIdx), ratingSchema).values("rating").asInstanceOf[Long]
         (r, rating)
       }
@@ -249,6 +252,7 @@ object RankOp {
     if (slice.isEmpty) return ranked
     val renderIdx = slice.head.fieldIndex("_graft_render")
     val ratingSchema = StructType(Seq(StructField("rating", LongType)))
+    val meter = Meter(spark, "refine_top_slice")
     var items = slice.toVector
     var calls = 0
     val step = math.max(1, (windowSize * (1 - overlapFraction)).toInt)
@@ -256,7 +260,7 @@ object RankOp {
     while (calls < callBudget && start >= 0) {
       val window = items.slice(start, start + windowSize)
       val rated = window.map { r =>
-        val resp = client.complete(model, r.getString(renderIdx), ratingSchema)
+        val resp = Cached.complete(client, meter, model, r.getString(renderIdx), ratingSchema)
         calls += 1
         (r, resp.values("rating").asInstanceOf[Long])
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.graph.ConnectedComponents
-import graft.llm.LlmClient
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** Entity resolution (reference docetl/operations/resolve.py:33-892).
   *
@@ -75,6 +75,7 @@ object ResolveOp {
       maxCanonicalMembers: Int = 1000)
 
   def apply(df: DataFrame, cfg: Config, client: LlmClient): DataFrame = {
+    val meter = Meter(df.sparkSession, cfg.name)
     val withBlk = df
       .withColumn("_blk", expr(cfg.blockExpr))
       .withColumn("_cmp", expr(cfg.compareExpr).cast("string"))
@@ -102,7 +103,7 @@ object ResolveOp {
       val eqW = org.apache.spark.sql.expressions.Window.partitionBy(col("_blk"))
       val labels = withBlk
         .withColumn("component", min(col(cfg.idKey)).over(eqW).cast("long"))
-      val resolvedFast = canonicalizeLabeled(labels, cfg, client)
+      val resolvedFast = canonicalizeLabeled(labels, cfg, client, meter)
       withBlk.unpersist()
       return resolvedFast.drop("_blk", "_cmp")
     }
@@ -135,7 +136,7 @@ object ResolveOp {
         case None => capped
       }
     }
-    val llmEdges = verdictEdges(pairBase, cfg, client)
+    val llmEdges = verdictEdges(pairBase, cfg, client, meter)
     val edges =
       if (!autoMatch) llmEdges
       else {
@@ -149,7 +150,7 @@ object ResolveOp {
         star.unionByName(llmEdges)
       }
 
-    val resolved = clusterAndCanonicalize(withBlk, cfg, edges, client)
+    val resolved = clusterAndCanonicalize(withBlk, cfg, edges, client, meter)
     withBlk.unpersist()
     resolved.drop("_blk", "_cmp")
   }
@@ -167,24 +168,25 @@ object ResolveOp {
       client: LlmClient,
       targetRecall: Double = 0.95,
       sampleSize: Int = 100): DataFrame = {
+    val meter = Meter(df.sparkSession, cfg.name)
     val renders = df.select(
       col(cfg.idKey).cast("long").as("id"),
       expr(cfg.compareExpr).cast("string").as("render"))
     val cands = Blocking.embeddingCandidates(df, cfg.idKey, embeddingCol, dim)
     val (kept, _) = Blocking.autoThreshold(
-      cands, renders, client, cfg.model, targetRecall, sampleSize)
+      cands, renders, client, meter, cfg.model, targetRecall, sampleSize)
     val pairBase = kept
       .join(renders.select(col("id").as("id_a"), col("render").as("_ca")), Seq("id_a"))
       .join(renders.select(col("id").as("id_b"), col("render").as("_cb")), Seq("id_b"))
       .select(col("id_a").as("_ida"), col("id_b").as("_idb"), col("_ca"), col("_cb"))
-    clusterAndCanonicalize(df, cfg, verdictEdges(pairBase, cfg, client), client)
+    clusterAndCanonicalize(df, cfg, verdictEdges(pairBase, cfg, client, meter), client, meter)
   }
 
   /** Pairwise verdicts -> (src, dst) match edges; plain per-pair compare,
     * or the precision cascade when configured (reference resolve.py:627-637).
     * `pairBase` columns: _ida/_idb (long-compatible) and _ca/_cb renders. */
   private def verdictEdges(
-      pairBase: DataFrame, cfg: Config, client: LlmClient): DataFrame =
+      pairBase: DataFrame, cfg: Config, client: LlmClient, meter: Meter): DataFrame =
     cfg.cascade match {
       case Some(cas) =>
         CascadeCompare(pairBase, "_ca", "_cb", cas, client)
@@ -197,7 +199,7 @@ object ResolveOp {
         val model = cfg.model
         pairBase.mapPartitions { it =>
           it.flatMap { row =>
-            if (graft.llm.Cached.compare(client, model,
+            if (Cached.compare(client, meter, model,
               s"${row.getString(iCa)}\n###\n${row.getString(iCb)}"))
               Iterator.single(Row(row.getLong(iIda), row.getLong(iIdb)))
             else Iterator.empty
@@ -210,13 +212,14 @@ object ResolveOp {
     * over the match edges, then per-cluster canonicalization broadcast back
     * onto the members. */
   private def clusterAndCanonicalize(
-      df: DataFrame, cfg: Config, edges: DataFrame, client: LlmClient): DataFrame = {
+      df: DataFrame, cfg: Config, edges: DataFrame, client: LlmClient,
+      meter: Meter): DataFrame = {
     // 3. Clusters.
     val labels = ConnectedComponents.run(
       edges, df.select(col(cfg.idKey).cast("long").as("id")), cfg.maxIter)
     val withCluster = df.join(
       labels.withColumnRenamed("id", cfg.idKey), Seq(cfg.idKey))
-    canonicalizeLabeled(withCluster, cfg, client)
+    canonicalizeLabeled(withCluster, cfg, client, meter)
   }
 
   /** Stage 4 over a DataFrame that already carries a `component` column:
@@ -228,7 +231,7 @@ object ResolveOp {
     * smallest member rendering per key (MockLlmClient `canonical` rule),
     * real clients summarize. */
   private def canonicalizeLabeled(
-      withCluster: DataFrame, cfg: Config, client: LlmClient): DataFrame = {
+      withCluster: DataFrame, cfg: Config, client: LlmClient, meter: Meter): DataFrame = {
     val model = cfg.resolutionModel.getOrElse(cfg.model)
     val memberSchema = StructType(Seq(StructField("canonical", StringType)))
     val canonCols = cfg.resolveKeys.map { k =>
@@ -258,7 +261,7 @@ object ResolveOp {
         val comp = row.getLong(0)
         val canonVals = cfg.resolveKeys.zipWithIndex.map { case (k, i) =>
           val members = row.getSeq[String](i + 1)
-          val resp = graft.llm.Cached.complete(client, model, members.mkString("\n"), memberSchema)
+          val resp = Cached.complete(client, meter, model, members.mkString("\n"), memberSchema)
           resp.values("canonical").asInstanceOf[String]
         }
         Row((comp +: canonVals): _*)

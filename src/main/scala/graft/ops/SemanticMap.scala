@@ -2,10 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.DoubleAccumulator
 
 import graft.core.SchemaTypes
-import graft.llm.{LlmCache, LlmClient, Template}
+import graft.llm.{Cached, LlmClient, Meter, Template}
 
 /** Configuration shared by the row-local semantic (LLM) operators —
   * the subset of the reference's per-op surface we reproduce
@@ -178,8 +177,8 @@ final case class SemanticMapConfig(
   * (`{**item, **output}`, map.py:513); `dropKeys` / drop-keys-only fast path
   * (map.py:358-372) and `limit` early-stop are honored.
   *
-  * Cost is observed through a `DoubleAccumulator` — the engine-wide analog of
-  * the reference's per-op float cost return.
+  * Provider calls and cost are charged to the op's [[graft.llm.Meter]] —
+  * the engine-wide analog of the reference's per-op float cost return.
   */
 object SemanticMap {
 
@@ -199,8 +198,7 @@ object SemanticMap {
       else Array.empty[StructField]
     val newSchema = StructType(kept ++ outStruct.fields ++ obsFields)
     val keptIdx = kept.map(f => base.schema.fieldIndex(f.name))
-    val costAcc = costAccumulator(base, s"graft.llm.cost.${cfg.name}")
-    val callsAcc = base.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.${cfg.name}")
+    val meter = Meter(base.sparkSession, cfg.name)
 
     val cfgB = cfg
     val clientB =
@@ -218,7 +216,8 @@ object SemanticMap {
           .seededHead(base, cfg.calibrateSampleSize)
           .collect().map(sampleTpl.render).sorted
         val anchorSchema = StructType(Seq(StructField("anchors", StringType)))
-        val resp = clientB.complete(cfg.model, samplePrompts.mkString("\n"), anchorSchema)
+        val resp = Cached.complete(clientB, meter, cfg.model, samplePrompts.mkString("\n"),
+          anchorSchema, cfg.bypassCache)
         s"CALIBRATION:\n${resp.values("anchors")}\n\n${cfg.prompt}"
       }
     val tpl = Template(effectivePrompt, base.schema)
@@ -246,29 +245,10 @@ object SemanticMap {
     base.mapPartitions { it =>
       if (cfgB.batchPrompt) it.grouped(cfgB.batchSize).flatMap { batch =>
         // One provider round-trip per batch; cache still applies per item.
-        // Each key is looked up ONCE and misses fill from the responses
-        // in hand: the cache is a bounded FIFO shared by the JVM, so a
-        // re-read after the call can find an entry evicted or cleared.
-        val prompts = batch.map(renderRow).toVector
-        val keys = prompts.map(p => s"${cfgB.model}|${outStruct.simpleString}|$p")
-        val cached = keys.map(k => if (cfgB.bypassCache) None else LlmCache.get(k))
-        val misses = cached.indices.filter(cached(_).isEmpty)
-        val responses =
-          if (misses.isEmpty) cached
-          else {
-            callsAcc.add(1)
-            val fresh = clientB.completeBatch(cfgB.model, misses.map(prompts), outStruct)
-            require(fresh.size == misses.size,
-              s"completeBatch returned ${fresh.size} responses for ${misses.size} prompts")
-            misses.zip(fresh).foldLeft(cached) { case (acc, (i, r)) =>
-              costAcc.add(r.cost)
-              if (!cfgB.bypassCache) LlmCache.put(keys(i), r)
-              acc.updated(i, Some(r))
-            }
-          }
-        batch.iterator.zip(prompts.iterator).zip(responses.iterator).map {
-          case ((row, p), r) => emit(row, p, r.get.values)
-        }
+        val prompts = batch.map(renderRow)
+        val responses = Cached.completeBatch(
+          clientB, meter, cfgB.model, prompts, outStruct, cfgB.bypassCache)
+        batch.lazyZip(prompts).lazyZip(responses).map((row, p, r) => emit(row, p, r.values))
       }
       // One window over the whole partition: it never drains between rows.
       else graft.llm.Concurrency.flatMapOrdered(it, cfgB.concurrency) { row =>
@@ -276,7 +256,7 @@ object SemanticMap {
         try {
           val values = LlmRunner.callWithLoops(
             clientB, cfgB.model, prompt, outStruct, cfgB.gleaning, cfgB.validate,
-            cfgB.numRetriesOnValidateFailure, cfgB.bypassCache, costAcc, callsAcc)
+            cfgB.numRetriesOnValidateFailure, cfgB.bypassCache, meter)
           Iterator.single(emit(row, prompt, values))
         } catch {
           case e: Exception if cfgB.skipOnError => Iterator.empty
@@ -284,9 +264,6 @@ object SemanticMap {
       }
     }(Encoders.row(newSchema))
   }
-
-  private[ops] def costAccumulator(df: DataFrame, name: String): DoubleAccumulator =
-    df.sparkSession.sparkContext.doubleAccumulator(name)
 }
 
 /** Shared call loop: cache -> complete -> gleaning rounds -> validate+retry.
@@ -302,39 +279,14 @@ object LlmRunner {
       validate: Option[Map[String, Any] => Boolean],
       validateRetries: Int,
       bypassCache: Boolean,
-      costAcc: DoubleAccumulator,
-      callsAcc: org.apache.spark.util.LongAccumulator): Map[String, Any] = {
+      meter: Meter): Map[String, Any] = {
 
-    def oneCall(p: String): Map[String, Any] = {
-      val key = s"$model|${schema.simpleString}|$p"
-      // cost counted only on real calls: cache hits are free provider-side
-      def real(): graft.llm.LlmResponse =
-        charged(client, model, p, schema, costAcc, callsAcc)
-      val resp =
-        if (bypassCache) real()
-        else LlmCache.getOrCompute(key, real())
-      resp.values
-    }
+    def ask(p: String): Map[String, Any] =
+      Cached.complete(client, meter, model, p, schema, bypassCache).values
 
-    def withGleaning(p: String): Map[String, Any] = {
-      var values = oneCall(p)
-      gleaning.foreach { g =>
-        var rounds = 0
-        var continue = true
-        while (continue && rounds < g.numRounds && g.shouldGlean(values)) {
-          val judgePrompt = s"${g.validationPrompt}\n${values.toSeq.sortBy(_._1).mkString(";")}"
-          val judgeSchema = StructType(Seq(
-            StructField("should_refine", BooleanType),
-            StructField("improvements", StringType)))
-          val verdict = oneCall2(client, model, judgePrompt, judgeSchema, costAcc, callsAcc)
-          if (verdict("should_refine").asInstanceOf[Boolean]) {
-            values = oneCall(s"$p\nRefine: ${verdict("improvements")}")
-            rounds += 1
-          } else continue = false
-        }
-      }
-      values
-    }
+    // map refines from the prompt it started from
+    def withGleaning(p: String): Map[String, Any] =
+      glean(gleaning, client, meter, model, ask(p))(imp => ask(s"$p\nRefine: $imp"))
 
     var values = withGleaning(prompt)
     validate.foreach { v =>
@@ -349,28 +301,31 @@ object LlmRunner {
     values
   }
 
-  private def oneCall2(
-      client: LlmClient, model: String, prompt: String, schema: StructType,
-      costAcc: DoubleAccumulator,
-      callsAcc: org.apache.spark.util.LongAccumulator): Map[String, Any] =
-    LlmCache.getOrCompute(
-      s"$model|${schema.simpleString}|$prompt",
-      charged(client, model, prompt, schema, costAcc, callsAcc)).values
+  private val judgeSchema = StructType(Seq(
+    StructField("should_refine", BooleanType),
+    StructField("improvements", StringType)))
 
-  /** One real provider call, charged to the op's accumulators: the call
-    * counts even if it throws, its cost once it answers. The adds are
-    * synchronized because the pool threads of one task share that task's
-    * accumulator copies, and `AccumulatorV2.add` is a plain
-    * read-modify-write. */
-  def charged(
-      client: LlmClient, model: String, prompt: String, schema: StructType,
-      costAcc: DoubleAccumulator,
-      callsAcc: org.apache.spark.util.LongAccumulator): graft.llm.LlmResponse = {
-    callsAcc.synchronized(callsAcc.add(1))
-    val r = client.complete(model, prompt, schema)
-    costAcc.synchronized(costAcc.add(r.cost))
-    r
-  }
+  /** The gleaning loop of map and reduce (reference api.py:365-460): while
+    * rounds remain and the `if` condition holds, a cached judge call over
+    * the current output decides `should_refine`; `refine(improvements)`
+    * sends the refinement and returns the next output. */
+  def glean(
+      gleaning: Option[GleaningConfig], client: LlmClient, meter: Meter, model: String,
+      initial: Map[String, Any])(refine: String => Map[String, Any]): Map[String, Any] =
+    gleaning.fold(initial) { g =>
+      var values = initial
+      var rounds = 0
+      var continue = true
+      while (continue && rounds < g.numRounds && g.shouldGlean(values)) {
+        val judgePrompt = s"${g.validationPrompt}\n${values.toSeq.sortBy(_._1).mkString(";")}"
+        val verdict = Cached.complete(client, meter, model, judgePrompt, judgeSchema).values
+        if (verdict("should_refine").asInstanceOf[Boolean]) {
+          values = refine(String.valueOf(verdict("improvements")))
+          rounds += 1
+        } else continue = false
+      }
+      values
+    }
 
   /** Coerce a mock/parsed value to the declared Spark type (the analog of the
     * reference's response type-checking, validation.py:184-240). */
@@ -409,8 +364,7 @@ object ParallelMap {
     val kept = df.schema.fields.filterNot(f => allOut.exists(_.name == f.name))
     val keptIdx = kept.map(f => df.schema.fieldIndex(f.name))
     val newSchema = StructType(kept ++ allOut)
-    val costAcc = SemanticMap.costAccumulator(df, s"graft.llm.cost.$name")
-    val callsAcc = df.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.$name")
+    val meter = Meter(df.sparkSession, name)
     val promptsB = prompts
     val tpls = prompts.map(sp => Template(sp.prompt, df.schema))
     df.mapPartitions { it =>
@@ -418,7 +372,7 @@ object ParallelMap {
         val outs = promptsB.zip(outStructs).zip(tpls).flatMap { case ((sp, st), tpl) =>
           val prompt = tpl.render(row)
           val values = LlmRunner.callWithLoops(
-            client, sp.model, prompt, st, None, None, 0, bypassCache = false, costAcc, callsAcc)
+            client, sp.model, prompt, st, None, None, 0, bypassCache = false, meter)
           st.fields.map(f => LlmRunner.coerce(values.get(f.name), f.dataType))
         }
         Row((keptIdx.map(row.get) ++ outs).toSeq: _*)

@@ -3,10 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.{DoubleAccumulator, LongAccumulator}
 
 import graft.core.SchemaTypes
-import graft.llm.{LlmCache, LlmClient}
+import graft.llm.{Cached, LlmClient, Meter}
 
 /** LLM aggregation (reference docetl/operations/reduce.py:35-1053).
   *
@@ -148,8 +147,7 @@ object SemanticReduce {
       case _ => groupedAll
     }
 
-    val costAcc = SemanticMap.costAccumulator(df, s"graft.llm.cost.${cfg.name}")
-    val callsAcc = df.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.${cfg.name}")
+    val meter = Meter(df.sparkSession, cfg.name)
     val cfgB = cfg
     val nKeys = keyFields.length
     val gSchema = grouped.schema
@@ -161,10 +159,10 @@ object SemanticReduce {
           case None => allMembers
           case Some(k) => ValueSampling(
             allMembers, k, cfgB.valueSampleMode, cfgB.valueSampleQuery,
-            cfgB.valueSampleEmbedModel, client)
+            cfgB.valueSampleEmbedModel, client, meter)
         }
         val n = row.getLong(gSchema.fieldIndex("_n"))
-        val call = new GroupCalls(cfgB, client, outStruct, costAcc, callsAcc)
+        val call = new GroupCalls(cfgB, client, meter, outStruct)
         val intermediates = Seq.newBuilder[String]
         val initial = cfgB.strategy match {
           case "batch" => call(members.mkString("\n"))
@@ -186,7 +184,7 @@ object SemanticReduce {
               }.getOrElse(call(""))
           case other => throw new IllegalArgumentException(s"unknown strategy $other")
         }
-        val values = call.gleaned(initial)
+        val values = LlmRunner.glean(cfgB.gleaning, client, meter, cfgB.model, initial)(call.refine)
         val keyVals = (0 until nKeys).map(row.get)
         val ptVals =
           if (cfgB.passThrough.isEmpty) Seq.empty[Any]
@@ -217,52 +215,25 @@ object SemanticReduce {
     }(Encoders.row(newSchema))
   }
 
-  private val judgeSchema = StructType(Seq(
-    StructField("should_refine", BooleanType),
-    StructField("improvements", StringType)))
-
-  /** One group's LLM calls: cache-through completions charged to the op's
-    * accumulators (cost only on real calls — cache hits are free, so the
-    * cost accumulator matches actual provider spend under replays), the
-    * prompts sent, and gleaning. Responses go through the executor-local
-    * cache because a global sort ABOVE this operator runs a
-    * range-partitioner SAMPLING pass that executes the whole partition
-    * twice — without the cache every group would pay its LLM calls twice
-    * (and task retries would too). */
+  /** One group's LLM calls through the op's cache path, the prompts sent,
+    * and its gleaning refinements. The cache matters here because a global sort ABOVE this
+    * operator runs a range-partitioner SAMPLING pass that executes the
+    * whole partition twice — without it every group would pay its LLM
+    * calls twice (and task retries would too). */
   private final class GroupCalls(
-      cfg: Config, client: LlmClient, outStruct: StructType,
-      costAcc: DoubleAccumulator, callsAcc: LongAccumulator) {
+      cfg: Config, client: LlmClient, meter: Meter, outStruct: StructType) {
     private val sent = Seq.newBuilder[String]
     private var lastPrompt = ""
 
     def apply(prompt: String): Map[String, Any] = {
       if (cfg.enableObservability) sent += prompt
       lastPrompt = prompt
-      cached(s"${cfg.model}|${outStruct.simpleString}|$prompt", prompt, outStruct)
+      Cached.complete(client, meter, cfg.model, prompt, outStruct).values
     }
 
-    private def cached(key: String, prompt: String, schema: StructType): Map[String, Any] =
-      LlmCache.getOrCompute(key,
-        LlmRunner.charged(client, cfg.model, prompt, schema, costAcc, callsAcc)).values
-
-    /** Judge the group result, refine up to numRounds times (reference
-      * api.py:365-460). */
-    def gleaned(initial: Map[String, Any]): Map[String, Any] = cfg.gleaning match {
-      case None => initial
-      case Some(g) =>
-        var v = initial
-        var rounds = 0
-        var continue = true
-        while (continue && rounds < g.numRounds && g.shouldGlean(v)) {
-          val judgePrompt = s"${g.validationPrompt}\n${v.toSeq.sortBy(_._1).mkString(";")}"
-          val verdict = cached(s"${cfg.model}|judge|$judgePrompt", judgePrompt, judgeSchema)
-          if (verdict("should_refine").asInstanceOf[Boolean]) {
-            v = apply(s"$lastPrompt\nRefine: ${verdict("improvements")}")
-            rounds += 1
-          } else continue = false
-        }
-        v
-    }
+    /** A gleaning refinement: reduce refines from the last prompt it sent. */
+    def refine(improvements: String): Map[String, Any] =
+      apply(s"$lastPrompt\nRefine: $improvements")
 
     /** The prompts sent for the group, fold chains joined by "\n=====\n". */
     def prompts: String = sent.result().mkString("\n=====\n")
@@ -280,8 +251,7 @@ object SemanticReduce {
   private def streamingFold(
       df: DataFrame, cfg: Config, client: LlmClient,
       outStruct: StructType, newSchema: StructType, global: Boolean): DataFrame = {
-    val costAcc = SemanticMap.costAccumulator(df, s"graft.llm.cost.${cfg.name}")
-    val callsAcc = df.sparkSession.sparkContext.longAccumulator(s"graft.llm.calls.${cfg.name}")
+    val meter = Meter(df.sparkSession, cfg.name)
     val cfgB = cfg
     val keyNames = if (global) Seq.empty[String] else cfg.reduceKeys
     val projected = df.select(
@@ -342,7 +312,7 @@ object SemanticReduce {
         var acc = Option.empty[Map[String, Any]]
         var failed = Option.empty[Throwable]
         var iter = 0
-        val call = new GroupCalls(cfgB, client, outStruct, costAcc, callsAcc)
+        val call = new GroupCalls(cfgB, client, meter, outStruct)
         val intermediates = Seq.newBuilder[String]
         val chunk = new scala.collection.mutable.ArrayBuffer[String](cfgB.foldBatchSize)
         def flush(): Unit = if (chunk.nonEmpty && failed.isEmpty) {
@@ -382,7 +352,8 @@ object SemanticReduce {
         if (failed.isDefined) return None
         val ptVals = bestPt.tail
         try {
-          val values = call.gleaned(acc.getOrElse(call("")))
+          val values = LlmRunner.glean(cfgB.gleaning, client, meter, cfgB.model,
+            acc.getOrElse(call("")))(call.refine)
           val outVals = outStruct.fields.map(f => LlmRunner.coerce(values.get(f.name), f.dataType))
           val obsVals =
             if (cfgB.enableObservability) Seq(call.prompts) else Seq.empty[Any]
@@ -422,7 +393,8 @@ private[graft] object ValueSampling {
       mode: String,
       query: Option[String],
       embedModel: String,
-      client: LlmClient): Seq[String] = mode match {
+      client: LlmClient,
+      meter: Meter): Seq[String] = mode match {
     case "first_n" => allMembers.take(k)
     case "random" => // seeded stable pick
       keepByIndex(allMembers,
@@ -435,8 +407,8 @@ private[graft] object ValueSampling {
         "sem_sim value sampling needs value_sample_query"))
       if (allMembers.size <= k) allMembers
       else {
-        val embs = graft.llm.Cached.embed(client, embedModel, allMembers)
-        val qe = graft.llm.Cached.embed(client, embedModel, Seq(q)).head
+        val embs = Cached.embed(client, meter, embedModel, allMembers)
+        val qe = Cached.embed(client, meter, embedModel, Seq(q)).head
         keepByIndex(allMembers,
           allMembers.indices.sortBy(i => (-cosine(embs(i), qe), i)).take(k))
       }
@@ -449,7 +421,7 @@ private[graft] object ValueSampling {
       // group's members — the embeddings never leave the task.
       if (allMembers.size <= k) allMembers
       else {
-        val embs = graft.llm.Cached.embed(client, embedModel, allMembers)
+        val embs = Cached.embed(client, meter, embedModel, allMembers)
         val assign = localKMeans(embs, k)
         val reps = assign.zipWithIndex.groupBy(_._1._1).values.map { cluster =>
           // (cluster id, dist to centroid) with original index
@@ -460,7 +432,7 @@ private[graft] object ValueSampling {
     case "diverse" => // farthest-first representatives
       if (allMembers.size <= k) allMembers
       else {
-        val embs = graft.llm.Cached.embed(client, embedModel, allMembers)
+        val embs = Cached.embed(client, meter, embedModel, allMembers)
         val selected = scala.collection.mutable.ArrayBuffer(0)
         while (selected.size < k) {
           // maximize the MINIMUM distance to the selected set (classic

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler.{
-  SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -104,36 +102,6 @@ class LlmCacheSingleFlightSpec extends SparkSpec {
 
 /** The default in-flight window of the LLM operators. */
 class ConcurrencyDefaultSpec extends SparkSpec {
-
-  /** Runs `action` and sums the per-task updates of the named accumulators
-    * over the jobs it ran. */
-  private def accumulated(names: Set[String])(action: => Unit): Map[String, Double] = {
-    val sums = new ConcurrentHashMap[String, java.lang.Double]()
-    val started, ended = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        e.taskInfo.accumulables.foreach { a =>
-          (a.name, a.update) match {
-            case (Some(n), Some(v: Number)) if names(n) =>
-              sums.merge(n, v.doubleValue, (x, y) => x + y)
-            case _ => ()
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      // the listener bus is asynchronous; a job's task ends reach the
-      // listener before its job end
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
-      while ((started.get() == 0 || ended.get() < started.get()) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.get() > 0 && ended.get() == started.get(), "jobs did not finish on the bus")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    names.map(n => n -> Option(sums.get(n)).map(_.doubleValue).getOrElse(0.0)).toMap
-  }
 
   test("calls and cost accumulators count every call made from the window's threads") {
     val client = MockLlmClient(costPerCall = 1e-4)

@@ -198,7 +198,7 @@ class DiverseSamplingSpec extends SparkSpec {
     }
     graft.llm.LlmCache.clear()
     val out = graft.ops.ValueSampling(
-      Seq("a", "a2", "b", "mid"), 3, "diverse", None, "m", fixed)
+      Seq("a", "a2", "b", "mid"), 3, "diverse", None, "m", fixed, graft.llm.Meter(spark, "vs"))
     // a (seed), then b (farthest), then mid — never the duplicate a2
     assert(out == Seq("a", "b", "mid"))
   }

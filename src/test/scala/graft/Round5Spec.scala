@@ -120,12 +120,13 @@ class ClusterValueSamplingSpec extends SparkSpec {
         texts.map(vecs)
     }
     graft.llm.LlmCache.clear()
-    val out = ValueSampling(Seq("a1", "a2", "a3", "b1", "b2"), 2, "cluster", None, "m", fixed)
+    val meter = graft.llm.Meter(spark, "vs")
+    val out = ValueSampling(Seq("a1", "a2", "a3", "b1", "b2"), 2, "cluster", None, "m", fixed, meter)
     assert(out.size == 2)
     // one member from the a-cluster, one from the b-cluster
     assert(out.count(_.startsWith("a")) == 1 && out.count(_.startsWith("b")) == 1)
     // deterministic across calls
-    val again = ValueSampling(Seq("a1", "a2", "a3", "b1", "b2"), 2, "cluster", None, "m", fixed)
+    val again = ValueSampling(Seq("a1", "a2", "a3", "b1", "b2"), 2, "cluster", None, "m", fixed, meter)
     assert(out == again)
   }
 
@@ -136,7 +137,8 @@ class ClusterValueSamplingSpec extends SparkSpec {
       override def embed(model: String, texts: Seq[String]): Seq[Array[Float]] =
         texts.map(_ => Array(1f))
     }
-    assert(ValueSampling(Seq("x", "y"), 5, "cluster", None, "m", fixed) == Seq("x", "y"))
+    assert(ValueSampling(Seq("x", "y"), 5, "cluster", None, "m", fixed,
+      graft.llm.Meter(spark, "vs")) == Seq("x", "y"))
   }
 }
 

@@ -16,6 +16,40 @@ abstract class SparkSpec extends AnyFunSuite {
   import org.apache.spark.sql.{DataFrame, Row}
   import org.apache.spark.sql.types._
 
+  /** Runs `action` and sums the per-task updates of the named accumulators
+    * over the jobs it ran. */
+  protected def accumulated(names: Set[String])(action: => Unit): Map[String, Double] = {
+    import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{
+      SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sums = new ConcurrentHashMap[String, java.lang.Double]()
+    val started, ended = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.foreach { a =>
+          (a.name, a.update) match {
+            case (Some(n), Some(v: Number)) if names(n) =>
+              sums.merge(n, v.doubleValue, (x, y) => x + y)
+            case _ => ()
+          }
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      action
+      // the listener bus is asynchronous; a job's task ends reach the
+      // listener before its job end
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while ((started.get() == 0 || ended.get() < started.get()) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.get() > 0 && ended.get() == started.get(), "jobs did not finish on the bus")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    names.map(n => n -> Option(sums.get(n)).map(_.doubleValue).getOrElse(0.0)).toMap
+  }
+
   def df(schema: StructType, rows: Row*): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
