@@ -5365,13 +5365,14 @@ object Queries {
       // content equality through the rewrite, plus in-query asserts that
       // the metadata plan fired (worthIt), the on-disk layout hit
       // targetFiles exactly, and the order-free fingerprint is unchanged.
-      // The fixture is rebuilt per run so repeated executions always
-      // exercise the real scattered→compacted transition.
+      // The fixture is rebuilt per run, in a fresh temp directory (deleted
+      // at JVM exit), so repeated or concurrent executions each exercise
+      // the real scattered→compacted transition on their own files.
       "q178_compact_roundtrip",
       (s: SparkSession, dir: String) => {
-        val sf = java.nio.file.Paths.get(dir).getFileName.toString
-        val path = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), s"graft_compact_$sf").toString
+        val tmp = java.nio.file.Files.createTempDirectory("graft_compact_").toFile
+        sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(tmp))
+        val path = new java.io.File(tmp, "documents").toString
         val cols = Seq("doc_id", "text", "lang", "source")
         t(s, dir, "documents").select(cols.map(col): _*)
           .repartition(64).write.mode("overwrite").parquet(path)

@@ -32,15 +32,9 @@ object Ann {
     val c = corpus.select(col(corpusId).as("neighbor_id"), col(corpusEmb).as("_ce"))
     val crossed = graft.core.Joins.boundedCrossBroadcast(
       c, q, col("neighbor_id"), col("query_id"))
-    val scored =
-      (if (excludeSelf) crossed.filter(col("neighbor_id") =!= col("query_id")) else crossed)
-        .withColumn("score",
-          round(graft.functions.CosineSimilarity(col("_qe"), col("_ce")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select("query_id", "neighbor_id", "score")
+    cosineTopK(
+      if (excludeSelf) crossed.filter(col("neighbor_id") =!= col("query_id")) else crossed,
+      k)
   }
 
   /** Hard-negative mining for retrieval/classifier training: for each query,
@@ -73,15 +67,7 @@ object Ann {
       col(corpusLabel).as("_cl"))
     val crossed = graft.core.Joins.boundedCrossBroadcast(
       c, q, col("neighbor_id"), col("query_id"))
-    val scored = crossed
-      .filter(!(col("_cl") <=> col("_ql")))
-      .withColumn("score",
-        round(graft.functions.CosineSimilarity(col("_qe"), col("_ce")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select("query_id", "neighbor_id", "score")
+    cosineTopK(crossed.filter(!(col("_cl") <=> col("_ql"))), k)
   }
 
   /** Every centroid's (euclidean distance, cell) struct as ONE array
@@ -142,6 +128,11 @@ object Ann {
     if (broadcastQueries) c.join(broadcast(q), Seq("_cell"))
     else c.join(q, Seq("_cell"))
 
+  /** Per-query cosine top-k over candidate rows carrying (query_id, _qe,
+    * neighbor_id, _ce): scores rounded to 6 places, ties broken by the
+    * smaller neighbor id. The one ranking kernel of every search arm, exact
+    * and approximate, so an arm differs from brute force only in its
+    * candidates. */
   private def cosineTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
@@ -366,7 +357,8 @@ object Ann {
 
   /** Hyperplane-LSH bucketed ANN — the second indexed path besides IVF
     * (no training pass at all): corpus rows bucket by the sign sketch of
-    * `numPlanes` hyperplanes (the [[graft.dedup.EmbeddingDedup]] sketch),
+    * `numPlanes` hyperplanes ([[VectorFunctions.sketch]], as in
+    * [[graft.dedup.EmbeddingDedup]]),
     * and each query probes its own bucket plus every bucket within Hamming
     * distance `multiProbe` (standard multiprobe LSH). Cost is the probed
     * buckets' population — sum over C(numPlanes, <=multiProbe) of
@@ -392,38 +384,25 @@ object Ann {
       excludeSelf: Boolean = true): DataFrame = {
     require(numPlanes >= 1 && numPlanes <= 20, "numPlanes in [1, 20]")
     require(multiProbe >= 0 && multiProbe <= numPlanes, "multiProbe in [0, numPlanes]")
-    val rng = new scala.util.Random(seed)
-    val planes = explicitPlanes.getOrElse(Array.fill(numPlanes, dim)(rng.nextGaussian()))
+    val planes = explicitPlanes.getOrElse(VectorFunctions.planes(numPlanes, dim, seed))
     // The probe-mask enumeration below runs over planes.length — an
     // explicitPlanes array longer than the guard-checked numPlanes would
     // silently bypass the 2^20 bound (2^40 masks = driver OOM).
     require(planes.length >= 1 && planes.length <= 20,
       s"lshSearch: ${planes.length} explicit planes exceed the 20-plane bound")
-    def sketch(embCol: org.apache.spark.sql.Column) =
-      planes.zipWithIndex.map { case (p, i) =>
-        when(VectorFunctions.dot(embCol, array(p.toIndexedSeq.map(lit): _*)) > 0, 1L)
-          .otherwise(0L) * (1L << i)
-      }.reduce(_ + _)
     val masks = (0L until (1L << planes.length))
       .filter(m => java.lang.Long.bitCount(m) <= multiProbe)
     val c = corpus.select(col(corpusId).as("neighbor_id"),
-      col(corpusEmb).as("_ce"), sketch(col(corpusEmb)).as("_b"))
+      col(corpusEmb).as("_ce"), VectorFunctions.sketch(col(corpusEmb), planes).as("_b"))
     val q = queries
       .select(col(queryId).as("query_id"), col(queryEmb).as("_qe"),
-        sketch(col(queryEmb)).as("_qb"))
+        VectorFunctions.sketch(col(queryEmb), planes).as("_qb"))
       .withColumn("_b", explode(transform(
         array(masks.map(lit): _*), m => col("_qb").bitwiseXOR(m))))
     val joined = c.join(broadcast(q), Seq("_b"))
-    val scored =
-      (if (excludeSelf) joined.filter(col("neighbor_id") =!= col("query_id"))
-       else joined)
-        .withColumn("score",
-          round(graft.functions.CosineSimilarity(col("_qe"), col("_ce")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select("query_id", "neighbor_id", "score")
+    cosineTopK(
+      if (excludeSelf) joined.filter(col("neighbor_id") =!= col("query_id")) else joined,
+      k)
   }
 
   /** IVF query: for each query, scan only the `nProbe` nearest cells.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{MinHashSignature, TextFunctions, VectorFunctions}
 
 /** Deduplication operators for training-data pipelines (driver mandate: core
   * engine components beyond the reference's surface).
@@ -100,8 +100,9 @@ object MinHashDedup {
       numBands: Int,
       maxBucketSize: Option[Int],
       maxBucketHead: Option[Int]): (DataFrame, DataFrame) = {
-    require(numPerms % numBands == 0, "numPerms must be divisible by numBands")
-    val rowsPerBand = numPerms / numBands
+    // Band keys: hash of each band's slice of the signature. Only (band,
+    // key, id) go through the shuffle — never the shingle arrays.
+    val bands = posexplode(MinHashSignature.bandKeys(col("_sig"), numPerms, numBands))
     val sh = graft.functions.ShingleHashes(col(textCol), shingleSize)
     val docs = graft.core.PersistScope.register(
       df.select(col(idCol).as("_id"), sh.as("_sh"))
@@ -116,13 +117,7 @@ object MinHashDedup {
     // Signature: numPerms permutation minima in one fused codegen'd loop
     // (graft.functions.MinHashSignature) — the interpreted HOF equivalent
     // dominated this stage at 64 perms x ~100 shingles per doc.
-    val sig = graft.functions.MinHashSignature(col("_sh"), numPerms)
-
-    // Band keys: hash of each band's slice of the signature. Only (band,
-    // key, id) go through the shuffle — never the shingle arrays.
-    val bands = posexplode(transform(
-      sequence(lit(0), lit(numBands - 1)),
-      b => xxhash64(b, slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
+    val sig = MinHashSignature(col("_sh"), numPerms)
     val banded = BucketGuard.head(
       BucketGuard.cap(
         docs.withColumn("_sig", sig)
@@ -248,18 +243,14 @@ object MinHashDedup {
       shingleSize: Int = 3,
       numPerms: Int = 64,
       numBands: Int = 16): DataFrame = {
-    require(numPerms % numBands == 0, "numPerms must be divisible by numBands")
-    val rowsPerBand = numPerms / numBands
+    val bands = transform(MinHashSignature.bandKeys(col("_sig"), numPerms, numBands),
+      (key, b) => struct(b.as("_band"), key.as("_bkey")))
     val sh = graft.functions.ShingleHashes(col(textCol), shingleSize)
-    val sig = graft.functions.MinHashSignature(col("_sh"), numPerms)
+    val sig = MinHashSignature(col("_sh"), numPerms)
     df.select(col(idCol).as("_id"), sh.as("_sh"))
       .filter(size(col("_sh")) > 0)
       .withColumn("_sig", sig)
-      .select(col("_id"), col("_sh"),
-        transform(sequence(lit(0), lit(numBands - 1)), b => struct(
-          b.cast("int").as("_band"),
-          xxhash64(b, slice(col("_sig"), b * rowsPerBand + 1,
-            lit(rowsPerBand))).as("_bkey"))).as("_bands"))
+      .select(col("_id"), col("_sh"), bands.as("_bands"))
   }
 
   /** [[crossPairs]] against a precomputed reference [[signatureTable]]:
@@ -1178,12 +1169,8 @@ object EmbeddingDedup {
       explicitPlanes: Option[Array[Array[Double]]] = None,
       maxBucketSize: Option[Int] = None,
       maxBucketHead: Option[Int] = None): DataFrame = {
-    val rng = new scala.util.Random(seed)
-    val planes = explicitPlanes.getOrElse(Array.fill(numPlanes, dim)(rng.nextGaussian()))
-    val sketch = planes.zipWithIndex.map { case (p, i) =>
-      when(graft.functions.VectorFunctions.dot(
-        col(embCol), array(p.toIndexedSeq.map(lit): _*)) > 0, 1L).otherwise(0L) * (1L << i)
-    }.reduce(_ + _)
+    val sketch = VectorFunctions.sketch(col(embCol),
+      explicitPlanes.getOrElse(VectorFunctions.planes(numPlanes, dim, seed)))
     val docs = BucketGuard.head(
       BucketGuard.cap(
         df.select(col(idCol).as("_id"), col(embCol).as("_e"), sketch.as("_b")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{lit, sequence, slice, transform, xxhash64}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -96,4 +97,17 @@ object MinHashSignature {
 
   def apply(shingleHashes: Column, numPerms: Int): Column =
     ColumnBridge.column(MinHashSignature(ColumnBridge.expression(shingleHashes), numPerms))
+
+  /** LSH band keys of a signature column: `numBands` keys, key b the
+    * xxhash64 of band b's slice of `numPerms / numBands` minima, salted
+    * with b. Two documents at Jaccard s share a given band key with
+    * probability s^(numPerms / numBands). The one band-key kernel of batch
+    * MinHash dedup, the stored signature table and the streaming near-dup
+    * gates; callers `posexplode` it or pair each key with its index. */
+  def bandKeys(sig: Column, numPerms: Int, numBands: Int): Column = {
+    require(numPerms % numBands == 0, "numPerms must be divisible by numBands")
+    val rowsPerBand = numPerms / numBands
+    transform(sequence(lit(0), lit(numBands - 1)),
+      b => xxhash64(b, slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
+  }
 }

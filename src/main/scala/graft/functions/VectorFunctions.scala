@@ -36,6 +36,24 @@ object VectorFunctions {
   def euclideanToConst(a: Column, v: Array[Double]): Column =
     sqrt(aggregate(zip_with(d(a), constArray(v), (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
 
+  /** `numPlanes` random hyperplanes in `dim` dimensions, drawn row by row
+    * from `new Random(seed)` — so reruns (and the test oracles) agree. The
+    * one plane generator of every hyperplane-LSH arm: embedding blocking,
+    * embedding-blocked equijoin, embedding dedup and LSH search. */
+  def planes(numPlanes: Int, dim: Int, seed: Long): Array[Array[Double]] = {
+    val rng = new scala.util.Random(seed)
+    Array.fill(numPlanes, dim)(rng.nextGaussian())
+  }
+
+  /** Random-hyperplane sign sketch (Charikar 2002) of `emb`: bit i is set
+    * when `emb` lies on the positive side of `planes(i)`. Equal sketches
+    * form an LSH bucket; two vectors agree on a bit with probability
+    * 1 - angle / pi. At most 64 planes fit the Long. */
+  def sketch(emb: Column, planes: Array[Array[Double]]): Column =
+    planes.zipWithIndex.map { case (p, i) =>
+      when(dot(emb, constArray(p)) > 0, 1L).otherwise(0L) * (1L << i)
+    }.reduce(_ + _)
+
   /** Matryoshka truncation (Kusupati et al. 2022, the MRL recipe every
     * current embedding API exposes as `dimensions=`): keep the first
     * `dim` components and L2-renormalize, so cosine on the truncated

@@ -175,6 +175,14 @@ final case class HttpLlmClient(
     (in, out, in * pricePerMTokIn / 1e6 + out * pricePerMTokOut / 1e6)
   }
 
+  /** Tally a round trip whose answer carries no cost: embeddings and
+    * logprob probes. `LlmClient.embed`/`logprobConfidence` return no
+    * cost, so an op's meter charges these calls at $0; the tally has them. */
+  private def recordUsage(model: String, root: JsonNode): Unit = {
+    val (tin, tout, cost) = usageCost(root)
+    TokenTally.record(model, LlmResponse(Map.empty, cost, tin, tout))
+  }
+
   private def content(root: JsonNode): String = {
     val c = root.path("choices").path(0).path("message").path("content")
     if (c.isMissingNode || c.isNull)
@@ -291,6 +299,7 @@ final case class HttpLlmClient(
     val input = body.putArray("input")
     texts.foreach(input.add)
     val root = post("/embeddings", body)
+    recordUsage(model, root)
     val data = root.path("data")
     if (!data.isArray || data.size() != texts.size)
       throw new LlmHttpException(502, s"embeddings: expected ${texts.size} vectors, got ${data.size()}")
@@ -322,6 +331,7 @@ final case class HttpLlmClient(
     body.put("top_logprobs", 1)
     body.put("max_tokens", 4)
     val root = post("/chat/completions", body)
+    recordUsage(model, root)
     val lp = root.path("choices").path(0).path("logprobs").path("content").path(0).path("logprob")
     if (lp.isMissingNode || lp.isNull) 1.0 else math.exp(lp.asDouble())
   }

@@ -178,11 +178,14 @@ object Cached {
   /** Batch-miss fill: each key is looked up ONCE, `fetch` sends only the
     * distinct misses, and every item is answered from the responses in
     * hand — the cache is a bounded FIFO shared by the JVM, so a re-read
-    * after the provider call can find an entry evicted or cleared. */
+    * after the provider call can find an entry evicted or cleared. Every
+    * item answered without its own request counts as a cache hit, as a
+    * single call's hit does in `getOrCompute`. */
   private def fill(keys: IndexedSeq[String], bypassCache: Boolean)(
       fetch: IndexedSeq[Int] => Seq[LlmResponse]): IndexedSeq[LlmResponse] = {
     val found = keys.map(k => if (bypassCache) None else LlmCache.get(k))
     val misses = keys.indices.filter(found(_).isEmpty).distinctBy(keys)
+    if (!bypassCache) LlmCache.countHits(keys.size - misses.size)
     if (misses.isEmpty) return found.map(_.get)
     val fresh = fetch(misses)
     require(fresh.size == misses.size,
@@ -438,6 +441,7 @@ object LlmCache {
   private val hitCounter = new java.util.concurrent.atomic.AtomicLong()
   def hits: Long = hitCounter.get()
   def resetHits(): Unit = hitCounter.set(0L)
+  private[llm] def countHits(n: Int): Unit = hitCounter.addAndGet(n)
 
   def clear(): Unit = { map.clear(); order.clear() }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, VectorFunctions}
 import graft.llm.LlmClient
 
 /** Embedding-similarity blocking with runtime threshold calibration —
@@ -29,12 +29,7 @@ object Blocking {
       minCosine: Double = 0.0,
       numPlanes: Int = 8,
       seed: Long = 42): DataFrame = {
-    val rng = new scala.util.Random(seed)
-    val planes = Array.fill(numPlanes, dim)(rng.nextGaussian())
-    val sketch = planes.zipWithIndex.map { case (p, i) =>
-      when(graft.functions.VectorFunctions.dot(
-        col(embCol), array(p.toIndexedSeq.map(lit): _*)) > 0, 1L).otherwise(0L) * (1L << i)
-    }.reduce(_ + _)
+    val sketch = VectorFunctions.sketch(col(embCol), VectorFunctions.planes(numPlanes, dim, seed))
     val docs = df.select(col(idCol).as("_id"), col(embCol).as("_e"), sketch.as("_b"))
     val l = docs.select(col("_b"), col("_id").as("id_a"), col("_e").as("_ea"))
     val r = docs.select(col("_b"), col("_id").as("id_b"), col("_e").as("_eb"))

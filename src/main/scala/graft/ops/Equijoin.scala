@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorFunctions
 import graft.llm.LlmClient
 
 /** LLM-verified fuzzy join (reference docetl/operations/equijoin.py:1-778).
@@ -281,12 +282,8 @@ object EquijoinOp {
       sampleSize: Int = 100,
       numPlanes: Int = 8,
       seed: Long = 42): (DataFrame, Double) = {
-    val rng = new scala.util.Random(seed)
-    val planes = Array.fill(numPlanes, dim)(rng.nextGaussian())
-    def sketch(embCol: String) = planes.zipWithIndex.map { case (p, i) =>
-      when(graft.functions.VectorFunctions.dot(
-        col(embCol), array(p.toIndexedSeq.map(lit): _*)) > 0, 1L).otherwise(0L) * (1L << i)
-    }.reduce(_ + _)
+    val planes = VectorFunctions.planes(numPlanes, dim, seed)
+    def sketch(embCol: String) = VectorFunctions.sketch(col(embCol), planes)
     val l = left.select(sketch(leftEmbCol).as("_bkt"),
       col(leftEmbCol).as("_le"), expr(cfg.compareExprLeft).cast("string").as("_lr"))
     val r = right.select(sketch(rightEmbCol).as("_bkt"),
@@ -323,12 +320,8 @@ object EquijoinOp {
       client: LlmClient,
       numPlanes: Int = 8,
       seed: Long = 42): DataFrame = {
-    val rng = new scala.util.Random(seed)
-    val planes = Array.fill(numPlanes, dim)(rng.nextGaussian())
-    def sketch(embCol: String) = planes.zipWithIndex.map { case (p, i) =>
-      when(graft.functions.VectorFunctions.dot(
-        col(embCol), array(p.toIndexedSeq.map(lit): _*)) > 0, 1L).otherwise(0L) * (1L << i)
-    }.reduce(_ + _)
+    val planes = VectorFunctions.planes(numPlanes, dim, seed)
+    def sketch(embCol: String) = VectorFunctions.sketch(col(embCol), planes)
     val l = left.withColumn("_graft_bkt", sketch(leftEmbCol))
     val r = right.withColumn("_graft_bkt", sketch(rightEmbCol))
     // Collision suffixing happens inside apply(); reference the post-join names.

@@ -231,7 +231,8 @@ object RankOp {
   /** Picky-window refinement over the current top `sliceSize` rows: windows
     * of `windowSize` walked from the back, the client re-rates each window's
     * members, `numTopPerWindow` best bubble up, overlapping by
-    * `overlapFraction` — bounded by `callBudget` (reference rank.py:696-912).
+    * `overlapFraction` — bounded by `callBudget` distinct rating prompts
+    * (reference rank.py:696-912).
     * Returns the refined top slice re-ranked 1..sliceSize; rows outside the
     * slice keep their original `_rank`.
     */
@@ -254,15 +255,18 @@ object RankOp {
     val ratingSchema = StructType(Seq(StructField("rating", LongType)))
     val meter = Meter(spark, "refine_top_slice")
     var items = slice.toVector
-    var calls = 0
+    // The budget counts distinct prompts: a row re-rated by an overlapping
+    // window is answered from the response cache and costs no call.
+    val sent = collection.mutable.HashSet.empty[String]
     val step = math.max(1, (windowSize * (1 - overlapFraction)).toInt)
     var start = math.max(0, items.length - windowSize)
-    while (calls < callBudget && start >= 0) {
+    while (sent.size < callBudget && start >= 0) {
       val window = items.slice(start, start + windowSize)
       val rated = window.map { r =>
-        val resp = Cached.complete(client, meter, model, r.getString(renderIdx), ratingSchema)
-        calls += 1
-        (r, resp.values("rating").asInstanceOf[Long])
+        val prompt = r.getString(renderIdx)
+        sent += prompt
+        (r, Cached.complete(client, meter, model, prompt, ratingSchema)
+          .values("rating").asInstanceOf[Long])
       }
       val reordered = rated.sortBy(-_._2).map(_._1)
       items = items.patch(start, reordered, window.length)

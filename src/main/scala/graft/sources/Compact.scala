@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * scan) to decide whether compaction pays; `run` is one read +
   * repartition + write into a temp dir, then an atomic-ish swap (rename
   * within the same filesystem). Output file count =
-  * ceil(totalBytes / targetBytes) — bounded, deterministic. The rewrite
+  * ceil(totalBytes / targetBytes), at most the input file count —
+  * bounded, deterministic. The rewrite
   * shuffles once (round-robin repartition); pass `sortCols` to make the
   * pass double as a layout pass ([[graft.ops.ZOrder.layout]] composes
   * upstream for multi-dimension keys).
@@ -34,7 +35,10 @@ object Compact {
     require(targetBytes > 0, "targetBytes must be positive")
     val files = listDataFiles(spark, path)
     val total = files.map(_._2).sum
-    val target = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
+    // never more files than were found: a tiny targetBytes would otherwise
+    // plan one output partition per byte
+    val target = math.max(1,
+      math.min(files.size.toDouble, math.ceil(total.toDouble / targetBytes)).toInt)
     Plan(files.size, total, target, files.size > target * ratio)
   }
 

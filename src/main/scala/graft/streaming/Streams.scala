@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.MinHashSignature
+
 /** Structured Streaming operators (SURVEY.md §2.12: absent from the
   * reference; extension territory the driver mandates we cover Spark-first).
   *
@@ -144,10 +146,8 @@ object Streams {
       .selectExpr("user_id", "ts_seconds")
       .as[(Long, Long)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .groupByKey(_._1)
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    byUser.mapGroupsWithState[SessionState, SessionInfo](timeoutConf) {
+    val timeout = processingTime[Long](stateTtl)
+    byUser.mapGroupsWithState[SessionState, SessionInfo](timeout.conf) {
       case (userId, rows, state: GroupState[SessionState]) =>
         if (state.hasTimedOut) {
           // Idle past TTL: emit the closing snapshot, drop the state.
@@ -163,7 +163,7 @@ object Streams {
             case (Some(_), t) => Some(SessionState(t, t, 1)) // gap exceeded
           }
           merged.foreach(state.update)
-          stateTtl.foreach(state.setTimeoutDuration)
+          timeout.rearm(state, Nil)
           val s = merged.get
           SessionInfo(userId, s.start, s.last, s.n)
         }
@@ -273,13 +273,9 @@ object Streams {
       numPerms: Int = 64,
       numBands: Int = 16,
       jaccardThreshold: Double = 0.8): DataFrame = {
-    require(numPerms % numBands == 0, "numPerms must be divisible by numBands")
-    val rowsPerBand = numPerms / numBands
+    val bands = posexplode(MinHashSignature.bandKeys(col("_sig"), numPerms, numBands))
     val sh = graft.functions.ShingleHashes(col(textCol), shingleSize)
-    val sig = graft.functions.MinHashSignature(col("_sha"), numPerms)
-    val bands = posexplode(transform(
-      sequence(lit(0), lit(numBands - 1)),
-      b => xxhash64(b, slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
+    val sig = MinHashSignature(col("_sha"), numPerms)
     val banded = stream
       .select(col(idCol).as("id_new"), sh.as("_sha"))
       .filter(size(col("_sha")) > 0)
@@ -305,6 +301,55 @@ object Streams {
       }(org.apache.spark.sql.Encoders.row(schema))
   }
 
+  /** When a gate's idle state expires. `rearm` runs after every update of
+    * a live group, with the group's rows of this batch. Processing time
+    * slides `stateTtl` from now (no TTL: no timeout). Event time expires
+    * the group once the watermark passes its latest event + `stateTtl`. */
+  private final case class Timeout[T](
+      conf: GroupStateTimeout, rearm: (GroupState[_], Seq[T]) => Unit)
+
+  private def processingTime[T](stateTtl: Option[String]): Timeout[T] = Timeout(
+    if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+    else GroupStateTimeout.NoTimeout,
+    (state, _) => stateTtl.foreach(state.setTimeoutDuration))
+
+  /** Late rows can carry event times at or below the watermark; the
+    * timeout base stays ahead of it, or setting the timeout throws. */
+  private def eventTime[T](stateTtl: String, eventMs: T => Long): Timeout[T] = Timeout(
+    GroupStateTimeout.EventTimeTimeout,
+    (state, items) => state.setTimeoutTimestamp(
+      math.max(items.iterator.map(eventMs).max, state.getCurrentWatermarkMs()), stateTtl))
+
+  /** An event-time gate's input: the watermarked timestamp column must
+    * reach the stateful operator itself (the analyzer rejects event-time
+    * timeouts otherwise), so callers project it through. */
+  private def watermarked(rows: DataFrame, tsCol: String, watermarkDelay: String): DataFrame =
+    rows.filter(col(tsCol).isNotNull).withWatermark(tsCol, watermarkDelay)
+
+  private def fingerprint(text: String): String = {
+    val normalized = text.trim.toLowerCase.replaceAll("\\s+", " ")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(normalized.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** The exact-dedup gate's state function, one boolean per fingerprint.
+    * A new fingerprint passes one row, the min id: the group iterator's
+    * order after the shuffle is partition order, not arrival order, so the
+    * min id is deterministic across runs and parallelism. Duplicates of a
+    * live fingerprint drop and slide its timeout forward; a timed-out
+    * fingerprint is evicted. */
+  private def dedupGate[T](timeout: Timeout[T], id: T => Long, text: T => String)
+      : (String, Iterator[T], GroupState[Boolean]) => Iterator[(Long, String)] = {
+    case (_, _, state) if state.hasTimedOut =>
+      state.remove()
+      Iterator.empty
+    case (_, items, state) =>
+      val seq = items.toSeq
+      val first = if (state.exists) None else Some(seq.minBy(id))
+      if (first.isDefined) state.update(true)
+      timeout.rearm(state, seq)
+      first.iterator.map(t => (id(t), text(t)))
+  }
 
   /** Streaming exact dedup with keyed state (`flatMapGroupsWithState`):
     * the FIRST row per normalized-text fingerprint passes, every later
@@ -316,42 +361,34 @@ object Streams {
     * arriving after its original's state expired passes again. Input needs
     * (id: Long, text: String) columns.
     */
-  private def fingerprint(text: String): String = {
-    val normalized = text.trim.toLowerCase.replaceAll("\\s+", " ")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(normalized.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   def dedupExact(
       rows: Dataset[Row],
       stateTtl: Option[String] = None): Dataset[(Long, String)] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    val timeout = processingTime[(Long, String)](stateTtl)
     rows.selectExpr("id", "text")
       .as[(Long, String)](Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .groupByKey { case (_, text) => fingerprint(text) }
-      .flatMapGroupsWithState[Boolean, (Long, String)](
-        OutputMode.Append(), timeoutConf) {
-        case (_, items, state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // fingerprint idle past TTL: evict
-            Iterator.empty
-          } else if (state.exists) {
-            // Seen before: refresh the TTL (sliding policy — duplicates of a
-            // live fingerprint keep it live) and drop the duplicates.
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.empty
-          } else {
-            state.update(true)
-            stateTtl.foreach(state.setTimeoutDuration)
-            // The group iterator's order after the shuffle is partition
-            // order, not arrival order — pick the min id so the surviving
-            // record is deterministic across runs and parallelism.
-            Iterator.single(items.minBy(_._1))
-          }
-      }
+      .flatMapGroupsWithState[Boolean, (Long, String)](OutputMode.Append(), timeout.conf)(
+        dedupGate[(Long, String)](timeout, _._1, _._2))
+  }
+
+  /** The quota gate's state function, one Long counter per key: a batch's
+    * arrivals admit in id order while the key has room. A timed-out key is
+    * evicted, so its budget resets on its next arrival. */
+  private def quotaGate[T](timeout: Timeout[T], n: Int, id: T => Long, key: T => String)
+      : (String, Iterator[T], GroupState[Long]) => Iterator[(Long, String)] = {
+    case (_, _, state) if state.hasTimedOut =>
+      state.remove()
+      Iterator.empty
+    case (_, items, state) =>
+      val seq = items.toSeq
+      val used = state.getOption.getOrElse(0L)
+      val room = n - used.toInt
+      val admitted = if (room <= 0) Seq.empty else seq.sortBy(id).take(room)
+      state.update(used + admitted.size)
+      timeout.rearm(state, seq)
+      admitted.iterator.map(t => (id(t), key(t)))
   }
 
   /** Streaming per-key admission quota — the live counterpart of
@@ -376,29 +413,12 @@ object Streams {
       stateTtl: Option[String] = None): Dataset[(Long, String)] = {
     require(n >= 1, s"quota must be >= 1, got $n")
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    val timeout = processingTime[(Long, String)](stateTtl)
     rows.selectExpr("id", s"cast($keyCol as string) as _k")
       .as[(Long, String)](Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .groupByKey(_._2)
-      .flatMapGroupsWithState[Long, (Long, String)](
-        OutputMode.Append(), timeoutConf) {
-        case (_, items, state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove() // idle key: budget resets on next arrival
-            Iterator.empty
-          } else {
-            val used = state.getOption.getOrElse(0L)
-            val room = n - used.toInt
-            val admitted =
-              if (room <= 0) Seq.empty
-              else items.toSeq.sortBy(_._1).take(room)
-            state.update(used + admitted.size)
-            stateTtl.foreach(state.setTimeoutDuration)
-            admitted.iterator
-          }
-      }
+      .flatMapGroupsWithState[Long, (Long, String)](OutputMode.Append(), timeout.conf)(
+        quotaGate[(Long, String)](timeout, n, _._1, _._2))
   }
 
   /** Event-time variant of [[dedupExact]]'s TTL: fingerprints are evicted
@@ -423,36 +443,14 @@ object Streams {
       watermarkDelay: String,
       stateTtl: String): Dataset[(Long, String)] = {
     import rows.sparkSession.implicits._
-    // The watermarked timestamp column must reach the stateful operator
-    // itself (the analyzer rejects event-time timeouts otherwise) — project
-    // it through and take .getTime inside the function.
-    rows
-      .filter(org.apache.spark.sql.functions.col(tsCol).isNotNull)
-      .withWatermark(tsCol, watermarkDelay)
+    type T = (Long, String, java.sql.Timestamp)
+    val timeout = eventTime[T](stateTtl, _._3.getTime)
+    watermarked(rows, tsCol, watermarkDelay)
       .selectExpr("id", "text", tsCol)
-      .as[(Long, String, java.sql.Timestamp)](Encoders.tuple(
-        Encoders.scalaLong, Encoders.STRING, Encoders.TIMESTAMP))
+      .as[T](Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.TIMESTAMP))
       .groupByKey { case (_, text, _) => fingerprint(text) }
-      .flatMapGroupsWithState[Boolean, (Long, String)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        case (_, items, state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // watermark passed last-seen + TTL: evict
-            Iterator.empty
-          } else {
-            val seq = items.toSeq
-            // Late rows can carry event times at or below the watermark; the
-            // timeout base must stay ahead of it or setting the timeout throws.
-            val base = math.max(seq.iterator.map(_._3.getTime).max,
-              state.getCurrentWatermarkMs())
-            val first =
-              if (state.exists) None
-              else Some(seq.minBy(_._1)) // min id: deterministic survivor
-            state.update(true)
-            state.setTimeoutTimestamp(base, stateTtl)
-            first.map(t => (t._1, t._2)).iterator
-          }
-      }
+      .flatMapGroupsWithState[Boolean, (Long, String)](OutputMode.Append(), timeout.conf)(
+        dedupGate[T](timeout, _._1, _._2))
   }
 
   /** Event-time variant of [[quotaByKey]]'s TTL: an idle key's budget
@@ -470,77 +468,29 @@ object Streams {
       stateTtl: String): Dataset[(Long, String)] = {
     require(n >= 1, s"quota must be >= 1, got $n")
     import rows.sparkSession.implicits._
-    rows
-      .filter(org.apache.spark.sql.functions.col(tsCol).isNotNull)
-      .withWatermark(tsCol, watermarkDelay)
+    type T = (Long, String, java.sql.Timestamp)
+    val timeout = eventTime[T](stateTtl, _._3.getTime)
+    watermarked(rows, tsCol, watermarkDelay)
       .selectExpr("id", s"cast($keyCol as string) as _k", tsCol)
-      .as[(Long, String, java.sql.Timestamp)](Encoders.tuple(
-        Encoders.scalaLong, Encoders.STRING, Encoders.TIMESTAMP))
+      .as[T](Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.TIMESTAMP))
       .groupByKey(_._2)
-      .flatMapGroupsWithState[Long, (Long, String)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        case (_, items, state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove() // watermark passed last arrival + TTL: reset
-            Iterator.empty
-          } else {
-            val seq = items.toSeq
-            val used = state.getOption.getOrElse(0L)
-            val room = n - used.toInt
-            val admitted =
-              if (room <= 0) Seq.empty
-              else seq.sortBy(_._1).take(room)
-            state.update(used + admitted.size)
-            val base = math.max(seq.iterator.map(_._3.getTime).max,
-              state.getCurrentWatermarkMs())
-            state.setTimeoutTimestamp(base, stateTtl)
-            admitted.iterator.map(t => (t._1, t._2))
-          }
-      }
+      .flatMapGroupsWithState[Long, (Long, String)](OutputMode.Append(), timeout.conf)(
+        quotaGate[T](timeout, n, _._1, _._2))
   }
 
   /** Per-bucket LSH state: parallel seqs of member ids and their MinHash
     * signatures (Product encoder-friendly). */
   final case class BucketMembers(ids: Seq[Long], sigs: Seq[Seq[Long]])
 
-  /** Streaming NEAR-duplicate detection with keyed LSH state — the always-on
-    * analog of [[graft.dedup.MinHashDedup]].
-    *
-    * Each document's MinHash signature (the same fused codegen expressions
-    * as the batch op — Catalyst expressions compose onto streams) is split
-    * into band keys; the stream groups by (band, key) and each bucket's
-    * state holds up to `maxBucketState` (id, signature) members — the
-    * streaming form of the hot-bucket ban, which also bounds total state at
-    * `maxBucketState x #buckets`. A new document emits one
-    * (earlier_id, id, est_jaccard) event per bucket member whose
-    * matching-perm fraction reaches `threshold` (the standard MinHash
-    * Jaccard estimator — no shingle arrays ever enter state).
-    *
-    * A pair co-falling in several bands emits once per band; pipe through
-    * `dropDuplicates("id_a", "id_b")` (with a watermark for bounded state)
-    * when unique pair events are required.
-    *
-    * `maxBucketState` bounds each bucket, but over an infinite stream the
-    * NUMBER of (band, key) buckets grows without bound — `stateTtl`
-    * (processing time) evicts buckets idle past the TTL so total state is
-    * `maxBucketState x (buckets active within one TTL window)`. The recall
-    * trade: a near-duplicate arriving after every band bucket it shares
-    * with its original expired is not flagged. Input needs (id: Long,
-    * text: String) columns.
-    */
   /** Banded projection shared by the near-dup variants: id, MinHash
     * signature, and one (band, bandkey) row per band (plus `extraCols`
     * carried through, e.g. the watermarked event-time column). */
   private def bandedSignatures(
       rows: Dataset[Row], shingleSize: Int, numPerms: Int, numBands: Int,
       extraCols: Seq[String]): DataFrame = {
-    require(numPerms % numBands == 0, "numPerms must be divisible by numBands")
-    val rowsPerBand = numPerms / numBands
+    val bands = posexplode(MinHashSignature.bandKeys(col("_sig"), numPerms, numBands))
     val sh = graft.functions.ShingleHashes(col("text"), shingleSize)
-    val sig = graft.functions.MinHashSignature(col("_sh"), numPerms)
-    val bands = posexplode(transform(
-      sequence(lit(0), lit(numBands - 1)),
-      b => xxhash64(b, slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
+    val sig = MinHashSignature(col("_sh"), numPerms)
     val extras = extraCols.map(col)
     rows
       .select(col("id").cast("long").as("id") +: sh.as("_sh") +: extras: _*)
@@ -577,6 +527,49 @@ object Streams {
     (members, out.result())
   }
 
+  /** The near-dup gate's state function, one [[BucketMembers]] per
+    * (band, key) bucket: [[bucketStep]] over the batch's (id, signature)
+    * rows. A timed-out bucket is evicted with its members. */
+  private def nearDupGate[T](timeout: Timeout[T], threshold: Double, maxBucketState: Int,
+      idSig: T => (Long, Seq[Long]))
+      : ((Int, Long), Iterator[T], GroupState[BucketMembers]) => Iterator[(Long, Long, Double)] = {
+    case (_, _, state) if state.hasTimedOut =>
+      state.remove()
+      Iterator.empty
+    case (_, items, state) =>
+      val seq = items.toSeq
+      val (members, out) = bucketStep(seq.map(idSig),
+        state.getOption.getOrElse(BucketMembers(Nil, Nil)), threshold, maxBucketState)
+      state.update(members)
+      timeout.rearm(state, seq)
+      out.iterator
+  }
+
+  /** Streaming NEAR-duplicate detection with keyed LSH state — the always-on
+    * analog of [[graft.dedup.MinHashDedup]].
+    *
+    * Each document's MinHash signature (the same fused codegen expressions
+    * as the batch op — Catalyst expressions compose onto streams) is split
+    * into band keys; the stream groups by (band, key) and each bucket's
+    * state holds up to `maxBucketState` (id, signature) members — the
+    * streaming form of the hot-bucket ban, which also bounds total state at
+    * `maxBucketState x #buckets`. A new document emits one
+    * (earlier_id, id, est_jaccard) event per bucket member whose
+    * matching-perm fraction reaches `threshold` (the standard MinHash
+    * Jaccard estimator — no shingle arrays ever enter state).
+    *
+    * A pair co-falling in several bands emits once per band; pipe through
+    * `dropDuplicates("id_a", "id_b")` (with a watermark for bounded state)
+    * when unique pair events are required.
+    *
+    * `maxBucketState` bounds each bucket, but over an infinite stream the
+    * NUMBER of (band, key) buckets grows without bound — `stateTtl`
+    * (processing time) evicts buckets idle past the TTL so total state is
+    * `maxBucketState x (buckets active within one TTL window)`. The recall
+    * trade: a near-duplicate arriving after every band bucket it shares
+    * with its original expired is not flagged. Input needs (id: Long,
+    * text: String) columns.
+    */
   def dedupNearMinhash(
       rows: Dataset[Row],
       shingleSize: Int = 3,
@@ -587,26 +580,14 @@ object Streams {
       stateTtl: Option[String] = None): Dataset[(Long, Long, Double)] = {
     val banded = bandedSignatures(rows, shingleSize, numPerms, numBands, Nil)
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
+    type T = (Long, Seq[Long], Int, Long)
+    val timeout = processingTime[T](stateTtl)
     banded
       .as[(Long, Seq[Long], Int, Long)]
       .groupByKey { case (_, _, band, bkey) => (band, bkey) }
       .flatMapGroupsWithState[BucketMembers, (Long, Long, Double)](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[BucketMembers]) if state.hasTimedOut =>
-          state.remove() // bucket idle past TTL: evict its members
-          Iterator.empty
-        case (_, items, state: GroupState[BucketMembers]) =>
-          val (members, out) = bucketStep(
-            items.map { case (id, sig, _, _) => (id, sig) }.toSeq,
-            state.getOption.getOrElse(BucketMembers(Nil, Nil)),
-            threshold, maxBucketState)
-          state.update(members)
-          stateTtl.foreach(state.setTimeoutDuration)
-          out.iterator
-      }
+        OutputMode.Append(), timeout.conf)(
+        nearDupGate[T](timeout, threshold, maxBucketState, t => (t._1, t._2)))
   }
 
   /** Event-time variant of [[dedupNearMinhash]]'s TTL: a band bucket is
@@ -624,31 +605,17 @@ object Streams {
       numBands: Int = 16,
       threshold: Double = 0.8,
       maxBucketState: Int = 64): Dataset[(Long, Long, Double)] = {
-    val banded = bandedSignatures(rows.toDF()
-      .filter(org.apache.spark.sql.functions.col(tsCol).isNotNull)
-      .withWatermark(tsCol, watermarkDelay),
+    val banded = bandedSignatures(watermarked(rows, tsCol, watermarkDelay),
       shingleSize, numPerms, numBands, Seq(tsCol))
     import rows.sparkSession.implicits._
+    type T = (Long, Seq[Long], Int, Long, java.sql.Timestamp)
+    val timeout = eventTime[T](stateTtl, _._5.getTime)
     banded
       .as[(Long, Seq[Long], Int, Long, java.sql.Timestamp)]
       .groupByKey { case (_, _, band, bkey, _) => (band, bkey) }
       .flatMapGroupsWithState[BucketMembers, (Long, Long, Double)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        case (_, _, state: GroupState[BucketMembers]) if state.hasTimedOut =>
-          state.remove() // watermark passed last-seen + TTL: evict bucket
-          Iterator.empty
-        case (_, items, state: GroupState[BucketMembers]) =>
-          val seq = items.toSeq
-          val (members, out) = bucketStep(
-            seq.map { case (id, sig, _, _, _) => (id, sig) },
-            state.getOption.getOrElse(BucketMembers(Nil, Nil)),
-            threshold, maxBucketState)
-          state.update(members)
-          val base = math.max(seq.iterator.map(_._5.getTime).max,
-            state.getCurrentWatermarkMs())
-          state.setTimeoutTimestamp(base, stateTtl)
-          out.iterator
-      }
+        OutputMode.Append(), timeout.conf)(
+        nearDupGate[T](timeout, threshold, maxBucketState, t => (t._1, t._2)))
   }
 
   /** Streaming sink helper: run a streaming DataFrame to memory and return

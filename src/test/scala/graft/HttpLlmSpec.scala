@@ -93,7 +93,8 @@ object FakeLlmServer {
           body.substring(body.indexOf("[") + 1, body.lastIndexOf("]"))).map(_.group(1)).toSeq
         val data = inputs.indices.reverse.map(i =>
           s"""{"index":$i,"embedding":[${i + 1}.0,0.5]}""").mkString(",")
-        respond(ex, 200, s"""{"data":[$data]}""")
+        respond(ex, 200,
+          s"""{"data":[$data],"usage":{"prompt_tokens":${2 * inputs.size},"total_tokens":${2 * inputs.size}}}""")
       } else if (body.contains("\"results\"") || body.contains("numbered items")) {
         val items = """### Item \d+""".r.findAllIn(body).size
         val results = (1 to items).map(i => s"""{"label":"item$i"}""").mkString(",")
@@ -242,6 +243,27 @@ class HttpLlmSpec extends AnyFunSuite {
     FakeLlmServer.withServer { (url, _) =>
       val vs = HttpLlmClient(url).embed("emb", Seq("x", "y", "z"))
       assert(vs.map(_.head.toDouble) == Seq(1.0, 2.0, 3.0))
+    }
+  }
+
+  test("embed records its usage in TokenTally") {
+    FakeLlmServer.withServer { (url, _) =>
+      TokenTally.reset()
+      HttpLlmClient(url, pricePerMTokIn = 1.0).embed("emb-usage", Seq("x", "y", "z"))
+      val t = TokenTally.summary("emb-usage")
+      assert(t.calls == 1 && t.inputTokens == 6 && t.outputTokens == 0)
+      assert(math.abs(t.cost - 6 * 1.0 / 1e6) < 1e-12)
+    }
+  }
+
+  test("logprobConfidence records its usage in TokenTally") {
+    FakeLlmServer.withServer { (url, _) =>
+      TokenTally.reset()
+      HttpLlmClient(url, pricePerMTokIn = 1.0, pricePerMTokOut = 2.0)
+        .logprobConfidence("lp-usage", "is this relevant?")
+      val t = TokenTally.summary("lp-usage")
+      assert(t.calls == 1 && t.inputTokens == 10 && t.outputTokens == 5)
+      assert(math.abs(t.cost - (10 * 1.0 + 5 * 2.0) / 1e6) < 1e-12)
     }
   }
 

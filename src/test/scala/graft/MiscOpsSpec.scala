@@ -33,6 +33,20 @@ class RankSpec extends SparkSpec {
     assert(refined.select("_rank").collect().map(_.getLong(0)).sorted.toSeq ==
       (1L to 6L).toSeq)
   }
+  test("refineTopSlice spends its callBudget on distinct prompts, not cache hits") {
+    // slice 6, window 3, step 1: four windows rate 12 times over 6 rows;
+    // a budget of 6 distinct prompts walks all four, reaching the front
+    val rows = (0 until 6).map(i => Row(i.toLong, s"row $i", Seq(1.0, i * 0.1)))
+    val d = df(StructType(Seq(StructField("id", LongType), StructField("text", StringType),
+      StructField("e", ArrayType(DoubleType)))), rows: _*)
+    val ranked = RankOp.byEmbedding(d, "e", Array(1.0, 0.0), tieBreak = Seq("id"))
+    graft.llm.LlmCache.clear()
+    val before = client.callCount
+    val refined = RankOp.refineTopSlice(ranked, "text", client,
+      sliceSize = 6, windowSize = 3, callBudget = 6)
+    assert(client.callCount - before == 6)
+    assert(refined.count() == 6)
+  }
   test("bySlidingWindow matches a driver-side simulation of the window walk") {
     // 8 rows on a line: initial embedding order = id order (cosine to
     // [1,0] decreasing). Render "x"*(id%5) -> mock rating 1+(id%5)%7.

@@ -127,6 +127,18 @@ class Round11dSpec extends SparkSpec {
     assert(!calm.worthIt || calm.targetFiles >= 1)
   }
 
+  test("compact: a tiny targetBytes never writes more files than it found") {
+    import graft.sources.Compact
+    val dir = java.nio.file.Files.createTempDirectory("r11cmp4").toString
+    val path = s"$dir/rows"
+    spark.range(0, 400).repartition(4).write.mode("overwrite").parquet(path)
+    assert(Compact.dataFileCount(spark, path) == 4)
+    val executed = Compact.run(spark, path, targetBytes = 1, force = true)
+    assert(executed.targetFiles <= 4)
+    assert(Compact.dataFileCount(spark, path) <= 4)
+    assert(spark.read.parquet(path).count() == 400)
+  }
+
   // ------------------------------------------------ epub
 
   test("epub: spine order wins over entry-name order; no-OPF falls back") {

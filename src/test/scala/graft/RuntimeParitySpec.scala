@@ -50,6 +50,15 @@ class BatchPromptSpec extends SparkSpec {
     assert(m.size == 6 && m(1L) == "positive" && m(2L) == "negative")
     assert(m(4L) == m(1L)) // exact dup of doc 1
   }
+  test("a warm batch_prompt re-run counts every row as a cache hit") {
+    LlmCache.clear()
+    val distinct = docsDf.filter(col("doc_id") =!= 4L).coalesce(1) // 5 distinct texts
+    val cfg = SemanticMapConfig(name = "bph", prompt = "{{ input.text }}",
+      outputSchema = Seq("sentiment" -> "str"), batchPrompt = true, batchSize = 64)
+    def hitsOf(run: => Unit): Long = { val h = LlmCache.hits; run; LlmCache.hits - h }
+    assert(hitsOf(SemanticMap(distinct, cfg, client).collect()) == 0)
+    assert(hitsOf(SemanticMap(distinct, cfg, client).collect()) == 5)
+  }
   test("batch_prompt rejects gleaning") {
     intercept[IllegalArgumentException] {
       SemanticMap(docsDf, SemanticMapConfig(
