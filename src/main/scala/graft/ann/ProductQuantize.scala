@@ -128,15 +128,10 @@ object ProductQuantize {
       col(queryEmb).as("_qe"), explode(probeCells).as("_cell"))
     val c = assignedCodes.select(col(corpusId).as("neighbor_id"),
       col(codesColName).as("_codes"), col("_cell"))
-    val scored = c.join(broadcast(q), Seq("_cell"))
+    adcTopK(c.join(broadcast(q), Seq("_cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_dist",
-        round(adcScore(col("_qe"), col("_codes"), cb), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select("query_id", "neighbor_id", "adc_dist")
+        round(adcScore(col("_qe"), col("_codes"), cb), 6)), k)
   }
 
   // ---- residual encoding (FAISS IndexIVFPQ semantics) -------------------
@@ -204,15 +199,10 @@ object ProductQuantize {
       .select("query_id", "_qr", "_cell")
     val c = assignedCodes.select(col(corpusId).as("neighbor_id"),
       col(codesColName).as("_codes"), col("_cell"))
-    val scored = c.join(broadcast(q), Seq("_cell"))
+    adcTopK(c.join(broadcast(q), Seq("_cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_dist",
-        round(adcScore(col("_qr"), col("_codes"), cb), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .select("query_id", "neighbor_id", "adc_dist")
+        round(adcScore(col("_qr"), col("_codes"), cb), 6)), k)
   }
 
   /** Asymmetric top-k: float queries against the PQ-coded corpus, smallest
@@ -232,11 +222,18 @@ object ProductQuantize {
       col(codesColName).as("_codes"))
     val crossed = graft.core.Joins.boundedCrossBroadcast(
       c, q, col("neighbor_id"), col("query_id"))
-    val scored =
+    adcTopK(
       (if (excludeSelf) crossed.filter(col("neighbor_id") =!= col("query_id"))
        else crossed)
-        .withColumn("adc_dist",
-          round(adcScore(col("_qe"), col("_codes"), cb), 6))
+        .withColumn("adc_dist", round(adcScore(col("_qe"), col("_codes"), cb), 6)),
+      k)
+  }
+
+  /** Per-query ADC top-k over scored candidate rows carrying (query_id,
+    * neighbor_id, adc_dist): smallest distance first, ties broken by the
+    * smaller neighbor id. The one ranking kernel of every PQ arm, so an arm
+    * differs from [[adcSearch]] only in its candidates. */
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     scored.withColumn("_rn", row_number().over(w))

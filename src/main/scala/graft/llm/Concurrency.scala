@@ -1,7 +1,6 @@
 package graft.llm
 
-import java.util.concurrent.{
-  ConcurrentHashMap, ExecutionException, ExecutorService, Executors, Future, FutureTask, Semaphore}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors, Future}
 
 import org.apache.spark.TaskContext
 
@@ -19,12 +18,12 @@ import org.apache.spark.TaskContext
   * results must not depend on response arrival order). The upstream
   * iterator is only advanced on the calling (task) thread.
   *
-  * An explicit width is the window's own. The default window instead draws
-  * on its task's budget, [[CallsPerCpu]] calls per CPU the task holds
-  * (`spark.task.cpus`), which every default window of the task shares: the
-  * chained LLM operators of one task (map → filter) split it rather than
-  * each taking a full share. An executor whose task slots are all busy
-  * thus keeps its whole pool in flight and queues no call behind it.
+  * The default window is the whole pool, whatever the partition layout: a
+  * one-partition input fills every thread, and the windows of concurrent
+  * tasks queue on the pool rather than on a per-task share. An explicit
+  * width only narrows a window. A window opened on a pool thread (a call
+  * that itself fans out) runs inline: full-width outer calls would
+  * otherwise hold every thread while their inner calls queue behind them.
   *
   * A failure propagates on the failing element's turn, so skip_on_error
   * semantics are per-row as in the serial path (the op catches inside `f`);
@@ -44,72 +43,35 @@ object Concurrency {
     * makes the calls (the executor, not the driver). */
   val poolSize: Int = CallsPerCpu * Runtime.getRuntime.availableProcessors
 
+  private val ThreadName = "graft-llm-async"
+
   private lazy val pool: ExecutorService =
     Executors.newFixedThreadPool(poolSize, r => {
-      val t = new Thread(r, "graft-llm-async")
+      val t = new Thread(r, ThreadName)
       t.setDaemon(true)
       t
     })
-
-  /** A task's call budget: `size` permits, one per call in flight. */
-  private final case class Budget(size: Int, permits: Semaphore)
-
-  /** Budgets of the running tasks, by task attempt. */
-  private val budgets = new ConcurrentHashMap[java.lang.Long, Budget]()
-
-  /** The calling task's budget, made on first use and dropped when the task
-    * completes; outside a task, a budget of its own for each window. */
-  private def taskBudget(): Budget = TaskContext.get() match {
-    case null => Budget(CallsPerCpu, new Semaphore(CallsPerCpu))
-    case tc =>
-      val id = tc.taskAttemptId()
-      // only this task's thread touches its entry
-      Option(budgets.get(id)).getOrElse {
-        val n = math.min(poolSize, CallsPerCpu * tc.cpus())
-        val b = Budget(n, new Semaphore(n))
-        budgets.put(id, b)
-        tc.addTaskCompletionListener[Unit](_ => budgets.remove(id))
-        b
-      }
-  }
 
   /** `f` over `it` with up to `parallelism` calls in flight, capped at the
     * pool size; 1 = serial. */
   def mapOrdered[A, B](it: Iterator[A], parallelism: Int)(f: A => B): Iterator[B] = {
     val width = math.min(parallelism, poolSize)
-    if (width <= 1) it.map(f) else windowed(it, width, None)(f)
+    if (width <= 1 || Thread.currentThread.getName == ThreadName) it.map(f)
+    else windowed(it, width)(f)
   }
 
   /** `window = Some(n)`: as [[mapOrdered]] with `n`. `None`: the default
-    * window, on the task's shared budget. */
+    * window, the whole pool. */
   def mapOrdered[A, B](it: Iterator[A], window: Option[Int])(f: A => B): Iterator[B] =
-    window match {
-      case Some(n) => mapOrdered(it, n)(f)
-      case None =>
-        val b = taskBudget()
-        windowed(it, b.size, Some(b.permits))(f)
-    }
+    mapOrdered(it, window.getOrElse(poolSize))(f)
 
-  private def windowed[A, B](it: Iterator[A], width: Int, budget: Option[Semaphore])(
+  private def windowed[A, B](it: Iterator[A], width: Int)(
       f: A => B): Iterator[B] = new Iterator[B] {
     // Touched only on the task thread: Spark runs completion listeners
     // on the thread that ran the task.
     private val window = new java.util.ArrayDeque[Future[B]]()
     private var ended = false
-    private def submit(a: A): Future[B] = budget match {
-      case None => pool.submit(() => f(a))
-      case Some(permits) =>
-        // Taken after the element is pulled, so only submitted calls hold
-        // permits, and they finish on their own: a chained upstream window
-        // that needs one always gets it. Released when the call is done or
-        // cancelled.
-        permits.acquire()
-        val task = new FutureTask[B](() => f(a)) {
-          override def done(): Unit = permits.release()
-        }
-        pool.execute(task)
-        task
-    }
+    private def submit(a: A): Future[B] = pool.submit(() => f(a))
     private def fill(): Unit =
       while (!ended && window.size < width && it.hasNext) window.add(submit(it.next()))
     private def cancelAll(): Unit = {

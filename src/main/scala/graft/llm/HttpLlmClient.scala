@@ -45,9 +45,11 @@ final class LlmHttpException(val status: Int, body: String)
   * reference's parse-and-retry.
   *
   * Compose as `RetryingClient(FallbackClient(RateLimitedClient(http)))`;
-  * the LLM operators run its calls through [[Concurrency.mapOrdered]] for
-  * in-partition parallelism — see HttpLlmSpec for the full stack under a
-  * local fake server.
+  * the LLM operators run its calls through [[Concurrency.mapOrdered]], so
+  * by default up to the executor's whole pool of `4 × cores` calls are in
+  * flight, even from a one-partition input (an op's `concurrency: n`
+  * narrows its window for a provider that takes fewer). See HttpLlmSpec
+  * for the full stack under a local fake server.
   *
   * Cost: `pricePerMTokIn`/`pricePerMTokOut` (dollars per million tokens)
   * applied to the usage block the provider returns.

@@ -131,10 +131,12 @@ object EquijoinOp {
             val model = cfg.model
             val meter = graft.llm.Meter(left.sparkSession, cfg.name)
             val s2 = withCmp.schema
+            val (iCl, iCr) = (s2.fieldIndex("_cl"), s2.fieldIndex("_cr"))
             withCmp.mapPartitions { it =>
-              it.filter { row =>
-                graft.llm.Cached.compare(client, meter, model,
-                  s"${row.getString(s2.fieldIndex("_cl"))}\n###\n${row.getString(s2.fieldIndex("_cr"))}")
+              graft.llm.Concurrency.flatMapOrdered(it, None) { row =>
+                if (graft.llm.Cached.compare(client, meter, model,
+                  s"${row.getString(iCl)}\n###\n${row.getString(iCr)}")) Iterator.single(row)
+                else Iterator.empty
               }
             }(Encoders.row(s2))
         }

@@ -53,8 +53,12 @@ object LinkResolveOp {
     val mappingSchema = StructType(Seq(
       StructField("_lv", StringType), StructField("_cid", StringType)))
     val confirmed = graft.core.PersistScope.register(cands.mapPartitions { it =>
-      it.filter(row => graft.llm.Cached.compare(client, meter, model,
-        s"${row.getString(0).trim.toLowerCase}\n###\n${row.getString(1).trim.toLowerCase}"))
+      graft.llm.Concurrency.flatMapOrdered(it, None) { row =>
+        if (graft.llm.Cached.compare(client, meter, model,
+          s"${row.getString(0).trim.toLowerCase}\n###\n${row.getString(1).trim.toLowerCase}"))
+          Iterator.single(row)
+        else Iterator.empty
+      }
     }(Encoders.row(mappingSchema))
       // one canonical target per dangling value: smallest id wins
       .groupBy("_lv").agg(min("_cid").as("_cid"))

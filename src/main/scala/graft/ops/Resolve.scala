@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.graph.ConnectedComponents
-import graft.llm.{Cached, LlmClient, Meter}
+import graft.llm.{Cached, Concurrency, LlmClient, Meter}
 
 /** Entity resolution (reference docetl/operations/resolve.py:33-892).
   *
@@ -198,7 +198,7 @@ object ResolveOp {
         val (iIda, iIdb) = (s.fieldIndex("_ida"), s.fieldIndex("_idb"))
         val model = cfg.model
         pairBase.mapPartitions { it =>
-          it.flatMap { row =>
+          Concurrency.flatMapOrdered(it, None) { row =>
             if (Cached.compare(client, meter, model,
               s"${row.getString(iCa)}\n###\n${row.getString(iCb)}"))
               Iterator.single(Row(row.getLong(iIda), row.getLong(iIdb)))

@@ -160,10 +160,10 @@ final case class SemanticMapConfig(
     /** In-partition async fan-out: up to this many provider calls in flight
       * per partition, on the executor's shared [[graft.llm.Concurrency]]
       * pool of `4 × cores` threads (reference runner.py:156). None = the
-      * task's share of that pool, 4 calls per task CPU, shared with the
-      * task's other default windows; the pool size caps larger values.
-      * 1 = serial. Results stay in input order; per-row error semantics
-      * (skip_on_error, validate retries, gleaning) are unchanged. */
+      * whole pool, whatever the partition layout; an explicit value only
+      * narrows the window (the pool size caps larger values). 1 = serial.
+      * Results stay in input order; per-row error semantics (skip_on_error,
+      * validate retries, gleaning) are unchanged. */
     concurrency: Option[Int] = None)
 
 /** LLM projection (reference docetl/operations/map.py:35-714).

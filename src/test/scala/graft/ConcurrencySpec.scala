@@ -33,9 +33,24 @@ object BlockingClient {
   val running, started = new AtomicInteger()
 }
 
-/** Calls in flight across the windows of the budget spec (per JVM). */
-object SharedBudgetProbe {
+/** Calls in flight across the windows of one spec (per JVM). */
+object WindowProbe {
   val inflight, peak = new AtomicInteger()
+  def reset(): Unit = { inflight.set(0); peak.set(0) }
+  /** `body`, counted in flight for at least `ms` milliseconds. */
+  def held[T](ms: Long)(body: => T): T = {
+    peak.accumulateAndGet(inflight.incrementAndGet(), math.max)
+    try { Thread.sleep(ms); body } finally inflight.decrementAndGet()
+  }
+}
+
+/** MockLlmClient's answers, each call held for 5 ms in [[WindowProbe]]. */
+final case class InflightProbeClient() extends LlmClient {
+  private val mock = MockLlmClient()
+  override def complete(model: String, prompt: String, schema: StructType): LlmResponse =
+    WindowProbe.held(5)(mock.complete(model, prompt, schema))
+  override def embed(model: String, texts: Seq[String]): Seq[Array[Float]] =
+    mock.embed(model, texts)
 }
 
 /** The single-flight response cache. */
@@ -153,25 +168,45 @@ class ConcurrencyDefaultSpec extends SparkSpec {
     assert(peak.get() <= Concurrency.poolSize && peak.get() > 1)
   }
 
-  test("default windows of one task share its budget of 4 calls per task CPU") {
-    // more chained default windows than the budget has permits: a permit is
-    // only held by a submitted call, so the chain cannot starve itself
+  test("default windows of a lone task fill the pool past 4 calls per CPU") {
+    assume(Concurrency.poolSize > Concurrency.CallsPerCpu)
     val depth = 6
-    SharedBudgetProbe.inflight.set(0); SharedBudgetProbe.peak.set(0)
+    WindowProbe.reset()
     val out = spark.sparkContext.parallelize(0L until 200L, 1).mapPartitions { it =>
       (1 to depth).foldLeft(it) { (up, _) =>
-        Concurrency.mapOrdered(up, None) { v =>
-          SharedBudgetProbe.peak.accumulateAndGet(
-            SharedBudgetProbe.inflight.incrementAndGet(), math.max)
-          Thread.sleep(2)
-          SharedBudgetProbe.inflight.decrementAndGet()
-          v + 1
-        }
+        Concurrency.mapOrdered(up, None)(v => WindowProbe.held(5)(v + 1))
       }
     }.collect().toSeq
     assert(out == (0L until 200L).map(_ + depth))
-    assert(SharedBudgetProbe.peak.get() <= Concurrency.CallsPerCpu)
-    assert(SharedBudgetProbe.peak.get() > 1)
+    assert(WindowProbe.peak.get() > Concurrency.CallsPerCpu)
+    assert(WindowProbe.peak.get() <= Concurrency.poolSize)
+  }
+
+  test("default windows of concurrent tasks together keep at most the pool in flight") {
+    WindowProbe.reset()
+    val out = spark.sparkContext.parallelize(0L until 400L, 2).mapPartitions { it =>
+      Concurrency.mapOrdered(it, None)(v => WindowProbe.held(5)(v * 2))
+    }.collect().toSeq
+    assert(out == (0L until 400L).map(_ * 2))
+    assert(WindowProbe.peak.get() > 1)
+    assert(WindowProbe.peak.get() <= Concurrency.poolSize)
+  }
+
+  test("a default window opened inside a call runs inline instead of starving the pool") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // every pool thread holds an outer call before any inner window opens:
+    // inner calls queued behind them would never run
+    val n = Concurrency.poolSize + 4
+    val allIn = new CountDownLatch(Concurrency.poolSize)
+    val run = Future {
+      Concurrency.mapOrdered((1 to n).iterator, None) { i =>
+        allIn.countDown()
+        allIn.await(10, TimeUnit.SECONDS)
+        Concurrency.mapOrdered((1 to 3).iterator, None)(j => 10 * i + j).sum
+      }.toList
+    }(ExecutionContext.global)
+    assert(Await.result(run, 30.seconds) == (1 to n).map(i => 30 * i + 6))
   }
 
   private lazy val docsPath: String = {
@@ -281,5 +316,65 @@ class ConcurrencyDefaultSpec extends SparkSpec {
     assert(sequential.size == 6)
     assert(windowed == sequential)
     assert(windowedCalls == sequentialCalls)
+  }
+}
+
+/** Pairwise LLM verdicts (resolve, equijoin verify) keep calls in flight
+  * within a partition, with the serial path's results and call count. */
+class PairwiseWindowSpec extends SparkSpec {
+
+  private val bases = Seq("acme", "globex", "initech", "umbrella", "hooli")
+  private val styles = Seq[String => String](identity, _.toUpperCase, " " + _, _ + " ")
+
+  private def counted[T](run: => T): (T, Long) = {
+    LlmCache.clear(); MockLlmClient.resetCalls(); WindowProbe.reset()
+    val out = run
+    (out, MockLlmClient().callCount)
+  }
+
+  test("resolve verdicts on a one-partition input: calls in flight, same clusters and calls") {
+    // two buckets (id % 2) of ten rows: 90 candidate pairs with distinct
+    // renders; the mock matches renders equal after trim + lowercase, so
+    // each bucket holds five clusters of two
+    val rows = (0 until 20).map(i => Row(i.toLong, styles((i / 10) * 2 + i % 2)(bases((i / 2) % 5))))
+    val d = df(StructType(Seq(StructField("id", LongType), StructField("name", StringType))), rows: _*)
+      .coalesce(1)
+    val (out, calls) = counted {
+      ResolveOp(d, ResolveOp.Config(
+        name = "pairwise_window", idKey = "id", blockExpr = "id % 2", compareExpr = "name",
+        resolveKeys = Seq("name")), InflightProbeClient())
+        .select("id", "name").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }
+    // a cluster's canonical value is its smallest member (the mock's rule)
+    val expected = rows.map { r =>
+      val (id, name) = (r.getLong(0), r.getString(1))
+      id -> rows.filter(o => o.getLong(0) % 2 == id % 2 &&
+        o.getString(1).trim.toLowerCase == name.trim.toLowerCase).map(_.getString(1)).min
+    }.toMap
+    assert(out == expected)
+    assert(expected.values.toSet.size == 10)
+    assert(calls == 90 + 10) // every pair once, one canonicalization per cluster
+    assert(WindowProbe.peak.get() > 1, "pairwise verdicts ran one at a time")
+  }
+
+  test("equijoin LLM verify on one-partition sides: calls in flight, same rows and calls") {
+    val side = (0 until 8).map(i => Row(i.toLong, styles(i % 4)(bases(i % 5))))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("k", StringType)))
+    val l = df(schema, side: _*).coalesce(1)
+    val r = df(schema, side: _*).toDF("rid", "k2").coalesce(1)
+    val (out, calls) = counted {
+      EquijoinOp(l, r, EquijoinOp.Config(
+        name = "pairwise_window_join", condition = "length(k) >= 0", // cross: 64 candidate pairs
+        compareExprLeft = "k", compareExprRight = "k2", llmVerify = true), InflightProbeClient())
+        .select("id", "rid").collect().map(x => x.getLong(0) -> x.getLong(1)).toSet
+    }
+    val expected = (for {
+      a <- side; b <- side
+      if a.getString(1).trim.toLowerCase == b.getString(1).trim.toLowerCase
+    } yield a.getLong(0) -> b.getLong(0)).toSet
+    assert(out == expected)
+    assert(expected.size > side.size) // some rows match more than themselves
+    assert(calls == 64) // one call per pair: the eight renders are distinct
+    assert(WindowProbe.peak.get() > 1, "verify calls ran one at a time")
   }
 }

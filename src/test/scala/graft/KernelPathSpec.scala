@@ -25,6 +25,7 @@ class KernelPathSpec extends AnyFunSuite {
       raw"""slice\(col\("_sig"\)|xxhash64\(\s*\w+\s*,\s*slice\(""".r),
     ("per-query cosine top-k", "ann/Ann.scala",
       raw"""orderBy\(col\("score"\)\.desc,\s*col\("neighbor_id"\)\.asc\)""".r),
+    ("per-query ADC top-k", "ann/ProductQuantize.scala", raw"""orderBy\(col\("adc_dist"\)\.asc""".r),
     ("processing-time gate timeout", "streaming/Streams.scala", raw"\bsetTimeoutDuration\b".r),
     ("event-time gate timeout", "streaming/Streams.scala", raw"\bsetTimeoutTimestamp\b".r))
 
@@ -42,6 +43,8 @@ class KernelPathSpec extends AnyFunSuite {
       Seq("MinHash band keys"))
     assert(hits("""Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)""") == Seq("per-query cosine top-k"))
+    assert(hits("""Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)""") == Seq("per-query ADC top-k"))
     assert(hits("stateTtl.foreach(state.setTimeoutDuration)") == Seq("processing-time gate timeout"))
     assert(hits("state.setTimeoutTimestamp(base, stateTtl)") == Seq("event-time gate timeout"))
     assert(hits("VectorFunctions.sketch(col(e), VectorFunctions.planes(8, dim, seed))").isEmpty)
