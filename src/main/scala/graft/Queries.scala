@@ -1610,8 +1610,9 @@ object Queries {
     ),
     (
       // Gopher-style repetition quality signals (dup/top token + 2-gram
-      // fractions) as pure codegen'd Column expressions — per-row compute
-      // inside the scan stage, no shuffle at any corpus size. The oracle
+      // fractions) as row-local Column expressions (native ShingleHashes
+      // and TopGramCount counts) — per-row compute inside the scan stage,
+      // no shuffle at any corpus size. The oracle
       // recomputes each fraction from first principles with DuckDB list
       // lambdas (dup_2gram via distinct gram strings vs Spark's hashed
       // ShingleHashes distinct count — equal up to 64-bit collisions, the

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -53,24 +54,8 @@ object Verify {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith)) }
-    selected.foreach { case (name, fn) =>
-      currentQuery = name
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // Vacuous-gate lint: a query whose engine output is empty will
-        // "pass" against an equally-empty oracle while exercising nothing
-        // (r10's q146). Warn loudly so a zero-row fixture gets salted.
-        val n = spark.read.parquet(s"$outDir/$name").count()
-        if (n == 0L)
-          System.err.println(
-            s"[verify] WARNING: $name produced 0 rows — if the oracle is " +
-              "also empty this gate is vacuous; salt the fixture")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally graft.core.PersistScope.unpersistAll() // op-internal caches
-    }
+    val failed = dump(spark, sfDir, outDir, selected.toSeq,
+      name => currentQuery = name)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -96,5 +81,40 @@ object Verify {
       System.err.println(s"[verify] LINT SUMMARY: " +
         s"${unpartitionedWindows.get()} unpartitioned Window execution(s) " +
         "— see LINT lines above; fix before shipping")
+    if (failed.nonEmpty) {
+      System.err.println(failureLine(failed))
+      sys.exit(1)
+    }
   }
+
+  /** Writes each query's result to `outDir/<name>` as parquet and returns
+    * the names of the queries that threw, in run order. `starting` hears
+    * each name before its query runs. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      starting: String => Unit = _ => ()): Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      starting(name)
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        // Vacuous-gate lint: a query whose engine output is empty will
+        // "pass" against an equally-empty oracle while exercising nothing
+        // (r10's q146). Warn loudly so a zero-row fixture gets salted.
+        val n = spark.read.parquet(s"$outDir/$name").count()
+        if (n == 0L)
+          System.err.println(
+            s"[verify] WARNING: $name produced 0 rows — if the oracle is " +
+              "also empty this gate is vacuous; salt the fixture")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+      finally graft.core.PersistScope.unpersistAll() // op-internal caches
+    }
+
+  /** The one line a failed run ends with. */
+  def failureLine(failed: Seq[String]): String =
+    s"[verify] FAILED ${failed.size} queries: ${failed.mkString(" ")}"
 }

@@ -20,6 +20,14 @@ object GraftSession {
       // distribution is data-dependent — skew is the norm, not the edge case.
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Spark's cache of generated classes defaults to 100 entries in four
+      // LRU segments. Graft plans inline driver-trained state (centroids,
+      // codebooks) as literals, so six curation queries already compile
+      // ~92 distinct classes; at 100 entries an overfull segment evicts
+      // every class it holds before reuse, and how many depends on the
+      // code's hashes. A static conf: it must be set before the first
+      // query of the JVM compiles.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   def getOrCreate(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()

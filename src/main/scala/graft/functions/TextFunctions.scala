@@ -109,10 +109,11 @@ object TextFunctions {
 
   // --- repetition / duplication signals (Gopher-style quality rules,
   // publicly described in the Gopher paper's MassiveText filters and the
-  // open Dolma toolkit). All pure Column expressions: per-row compute,
-  // embarrassingly parallel, no shuffle — they run inside the scan stage at
-  // any corpus size. The O(distinct × tokens) mode computation is per-row
-  // and bounded by document length, not data size.
+  // open Dolma toolkit). Per-row compute, embarrassingly parallel, no
+  // shuffle — they run inside the scan stage at any corpus size. The
+  // distinct counts and the mode counts are native expressions
+  // ([[ShingleHashes]], [[TopGramCount]]): one counting pass per row, no
+  // higher-order lambda, so nothing is evaluated interpreted.
 
   /** Fraction of whitespace tokens that are repeats of an earlier token:
     * 1 - distinct/total. High values mark degenerate boilerplate. */
@@ -122,11 +123,7 @@ object TextFunctions {
   }
 
   /** Frequency share of the single most common token (mode / total). */
-  def topTokenFraction(c: Column): Column = {
-    val toks = split(c, " ")
-    round(array_max(transform(array_distinct(toks),
-      t => size(filter(toks, y => y === t)))).cast("double") / size(toks), 6)
-  }
+  def topTokenFraction(c: Column): Column = topNgramFraction(c, 1)
 
   /** Fraction of word n-grams that are repeats: 1 - distinct/total. Distinct
     * counting rides the fused [[ShingleHashes]] pass (64-bit-collision
@@ -142,9 +139,8 @@ object TextFunctions {
     * tokens collapse to one whole-text gram -> 1.0 (maximally repetitive by
     * convention; filter short docs first). */
   def topNgramFraction(c: Column, n: Int): Column = {
-    val grams = shingles(c, n)
-    round(array_max(transform(array_distinct(grams),
-      g => size(filter(grams, y => y === g)))).cast("double") / size(grams), 6)
+    val total = greatest(size(split(c, " ")) - (n - 1), lit(1))
+    round(TopGramCount(c, n).cast("double") / total, 6)
   }
 
   /** Word n-gram shingles as an array column (dedup building block).

@@ -3,31 +3,24 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.ClippedNgramOverlap
+
 /** N-gram overlap F1 (ROUGE-N with clipped counts — Lin 2004) between a
   * candidate and a reference text column: the standard gate for
   * summary/answer quality AND the instruction-dedup filter self-instruct
   * style pipelines apply (drop a generated instruction when its ROUGE
   * overlap with an existing one exceeds a threshold).
   *
-  * Scale shape: grams build as per-row array expressions fused into the
-  * scan; clipped-overlap counting then runs as TWO keyed aggregations
-  * and ONE (id, order, gram)-keyed join — count candidate grams per
-  * key, count reference grams per key, join, sum least(c, r). All
-  * shuffles key on (id, order, gram), so a book-length document costs
-  * its gram count, never gram² — the row-local alternative (fold over
-  * distinct grams × filter per gram) is quadratic per row and banned by
-  * the HOF invariant. Totals ride the same aggregations (word metrics)
-  * or are closed form from lengths (char/BLEU); every metric is a
-  * ratio of exact BIGINT counts.
-  *
-  * The multi-order metrics ([[bleu]], [[chrF]]) share ONE gram-structs
-  * builder and ONE clipped-overlap pipeline — [[orderedGramStructs]] /
-  * [[clippedOverlap]] — so another multi-order metric composes them
-  * instead of cloning the machinery. [[ngramF1]] (single order)
-  * deliberately keeps a plain-string gram path: the (order, gram)
-  * struct key and the flatten-over-orders wrapper each measured ~10×
-  * slower on single-order shapes (the r17 q193 bench regression),
-  * while the multi-order metrics amortize them across orders.
+  * Scale shape: every metric is computed inside the row. The n-gram
+  * metrics ([[ngramF1]], [[bleu]], [[chrF]]) count their clipped
+  * overlaps with the native [[ClippedNgramOverlap]] expression (one
+  * count map per order, exact gram keys), take their per-order totals
+  * in closed form from lengths, and combine the orders
+  * as plain Columns: one narrow projection per metric, no shuffle and no
+  * join, so a book-length document costs its gram count. The edit and
+  * subsequence metrics ([[rougeL]], [[wer]], [[cer]]) run one
+  * mapPartitions DP kernel. Every metric returns one row per input row
+  * and is a ratio of exact BIGINT counts.
   */
 object TextSim {
 
@@ -35,97 +28,30 @@ object TextSim {
   private def tokens(c: Column): Column =
     graft.functions.TextFunctions.alnumTokens(c)
 
-  /** (order, gram) structs for every order in `orders` over a STAGED
-    * container column — `sizeOf`/`gramAt` abstract words (token
-    * arrays) vs characters (whitespace-stripped strings). One flatten
-    * builds all orders per row; callers must pass a plain column
-    * reference (not an expression) as `src`, so the HOF lambdas
-    * re-evaluate a column read per element, never the upstream
-    * cleaning chain (the staging rule — it cost q282 6.6 s once).
-    * Orders with too few units contribute an empty array (guarding
-    * Spark's descending sequence(1, 0)). */
-  private def orderedGramStructs(src: Column, orders: Range,
-      sizeOf: Column => Column,
-      gramAt: (Column, Column, Int) => Column): Column =
-    flatten(array(orders.map { n =>
-      when(sizeOf(src) >= n,
-        transform(sequence(lit(1), sizeOf(src) - (n - 1)),
-          i => struct(lit(n).as("_n"), gramAt(src, i, n).as("_g"))))
-        .otherwise(array().cast("array<struct<_n:int,_g:string>>"))
-    }: _*))
-
-  /** Word n-grams (space-joined token windows) for `orders`. */
-  private def wordGramStructs(toksCol: Column, orders: Range): Column =
-    orderedGramStructs(toksCol, orders, size,
-      (t, i, n) => array_join(slice(t, i, lit(n)), " "))
-
-  /** Character n-grams (substrings) for `orders`. */
-  private def charGramStructs(strCol: Column, orders: Range): Column =
-    orderedGramStructs(strCol, orders, length,
-      (s, i, n) => s.substr(i, lit(n)))
-
-  /** Clipped multiset overlap per (id, order): explode both sides'
-    * (order, gram) structs, count multiplicities keyed by
-    * (ids, _n, _g), join, and sum least(c, r) per (ids, _n) — the one
-    * shuffle the whole metric family pays. Rows/orders with no shared
-    * gram are simply absent (callers left-join and coalesce to 0). */
-  private def clippedOverlap(base: DataFrame, idCols: Seq[String],
-      candGrams: Column, refGrams: Column): DataFrame = {
-    val ids = idCols.map(col)
-    def counted(src: Column, out: String) = base
-      .select(ids :+ explode(src).as("_x"): _*)
-      .select(ids :+ col("_x._n").as("_n") :+ col("_x._g").as("_g"): _*)
-      .groupBy(ids :+ col("_n") :+ col("_g"): _*)
-      .agg(count(lit(1)).as(out))
-    counted(candGrams, "_cc")
-      .join(counted(refGrams, "_rc"), idCols :+ "_n" :+ "_g")
-      .groupBy(ids :+ col("_n"): _*)
-      .agg(sum(least(col("_cc"), col("_rc"))).as("_ov"))
-  }
-
   /** Per-row ROUGE-N: (idCols..., cand_grams, ref_grams, overlap,
-    * precision, recall, f1) at gram order `n`. `overlap` is the clipped
-    * multiset intersection size: Σ over distinct grams of
-    * least(count_in_candidate, count_in_reference). Rows where either
-    * side has no grams report 0.0 metrics (not null — a gate-friendly
-    * sentinel; an empty candidate genuinely earns zero). */
+    * precision, recall, f1) at gram order `n`, one row out per row in.
+    * `overlap` is the clipped multiset intersection size: Σ over
+    * distinct grams of least(count_in_candidate, count_in_reference).
+    * Rows where either side has no grams report 0.0 metrics (not null —
+    * a gate-friendly sentinel; an empty candidate genuinely earns zero).
+    */
   def ngramF1(df: DataFrame, idCols: Seq[String], candCol: String,
       refCol: String, n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val ids = idCols.map(col)
-    val staged = df.select(ids :+ tokens(col(candCol)).as("_ctf") :+
-      tokens(col(refCol)).as("_rtf"): _*)
-    // single-order fast path: PLAIN string grams, no (order, gram)
-    // structs and no flatten(array(...)) wrapper — Probe17 measured the
-    // multi-order machinery 10x slower on single-order shapes (structs
-    // and the flatten wrapper each cost ~10x independently; BENCH r51's
-    // q193 1.49s vs 0.12s regression), while the multi-order metrics
-    // ([[bleu]]/[[chrF]]) amortize it across orders and stay flat
-    def gramsOf(c: Column): Column =
-      when(size(c) >= n,
-        transform(sequence(lit(1), size(c) - (n - 1)),
-          i => array_join(slice(c, i, lit(n)), " ")))
-        .otherwise(array().cast("array<string>"))
-    val base = staged.select(ids :+ gramsOf(col("_ctf")).as("_cg") :+
-      gramsOf(col("_rtf")).as("_rg"): _*)
-    val totals = base.select(ids :+ size(col("_cg")).cast("bigint")
-      .as("cand_grams") :+ size(col("_rg")).cast("bigint")
-      .as("ref_grams"): _*)
-    def counted(g: String, out: String) = base
-      .select(ids :+ explode(col(g)).as("_g"): _*)
-      .groupBy(ids :+ col("_g"): _*)
-      .agg(count(lit(1)).as(out))
-    val overlap = counted("_cg", "_cc")
-      .join(counted("_rg", "_rc"), idCols :+ "_g")
-      .groupBy(ids: _*)
-      .agg(sum(least(col("_cc"), col("_rc"))).as("overlap"))
-    val joined = totals.join(overlap, idCols, "left")
-      .withColumn("overlap", coalesce(col("overlap"), lit(0L)))
+    val staged = df.select(ids :+ tokens(col(candCol)).as("_ct") :+
+      tokens(col(refCol)).as("_rt"): _*)
+    def grams(t: Column): Column =
+      greatest(size(t) - (n - 1), lit(0)).cast("bigint")
+    val counted = staged.select(ids :+ grams(col("_ct")).as("cand_grams") :+
+      grams(col("_rt")).as("ref_grams") :+
+      coalesce(element_at(ClippedNgramOverlap(col("_ct"), col("_rt"), n, n), 1), lit(0L))
+        .as("overlap"): _*)
     val p = when(col("cand_grams") > 0,
       col("overlap").cast("double") / col("cand_grams")).otherwise(0.0)
     val r = when(col("ref_grams") > 0,
       col("overlap").cast("double") / col("ref_grams")).otherwise(0.0)
-    joined
+    counted
       .withColumn("precision", round(p, 6))
       .withColumn("recall", round(r, 6))
       .withColumn("f1",
@@ -494,11 +420,11 @@ object TextSim {
     * the over-orders sum (order-free — the q149 rule); the brevity
     * penalty is one exp over a ratio of exact token counts.
     *
-    * Scale shape: identical to [[chrF]] — one per-row flatten builds
-    * all orders' grams ([[orderedGramStructs]]), clipped overlap is
-    * the shared (id, n, gram)-keyed join ([[clippedOverlap]]),
-    * per-order totals are closed form from token counts. Output:
-    * (idCols..., cand_tokens, ref_tokens, bleu). */
+    * Scale shape: one projection — clipped overlaps for all orders from
+    * one [[ClippedNgramOverlap]] call, per-order totals closed form
+    * from token counts, the orders unrolled as Columns.
+    * Output: (idCols..., cand_tokens, ref_tokens, bleu), one row out per
+    * row in. */
   def bleu(df: DataFrame, idCols: Seq[String], candCol: String,
       refCol: String, maxN: Int = 4): DataFrame = {
     require(idCols.nonEmpty, "bleu needs at least one id column")
@@ -506,33 +432,25 @@ object TextSim {
     val ids = idCols.map(col)
     val base = df.select(ids :+ tokens(col(candCol)).as("_ct") :+
       tokens(col(refCol)).as("_rt"): _*)
-    val overlap = clippedOverlap(base, idCols,
-      wordGramStructs(col("_ct"), 1 to maxN),
-      wordGramStructs(col("_rt"), 1 to maxN))
-    val skeleton = base
       .select(ids :+ size(col("_ct")).cast("bigint").as("_lc") :+
-        size(col("_rt")).cast("bigint").as("_lr"): _*)
-      .withColumn("_n", explode(sequence(lit(1), lit(maxN))))
-      .withColumn("_tot", greatest(col("_lc") - col("_n") + 1, lit(0L)))
-    val perOrder = skeleton
-      .join(overlap, idCols :+ "_n", "left")
-      .withColumn("_ov", coalesce(col("_ov"), lit(0L)))
-      .withColumn("_zero", col("_tot") === 0 || col("_ov") === 0)
-      .withColumn("_lnMicro", when(col("_zero"), lit(0L))
-        .otherwise(round(log(col("_ov").cast("double") / col("_tot")) * 1e6)
-          .cast("bigint")))
+        size(col("_rt")).cast("bigint").as("_lr") :+
+        ClippedNgramOverlap(col("_ct"), col("_rt"), 1, maxN).as("_ov"): _*)
+    val perOrder = (1 to maxN).map { n =>
+      val tot = greatest(col("_lc") - n + 1, lit(0L))
+      val ov = coalesce(element_at(col("_ov"), n), lit(0L))
+      val zero = tot === 0 || ov === 0
+      (zero, when(zero, lit(0L))
+        .otherwise(round(log(ov.cast("double") / tot) * 1e6).cast("bigint")))
+    }
+    val anyZero = perOrder.map(_._1).reduce(_ || _)
+    val sumLn = perOrder.map(_._2).reduce(_ + _)
     val bp = when(col("_lc") >= col("_lr"), lit(1.0))
       .otherwise(exp(lit(1.0) - col("_lr").cast("double") / col("_lc")))
-    perOrder.groupBy(ids: _*)
-      .agg(first(col("_lc")).as("_lc"), first(col("_lr")).as("_lr"),
-        max(when(col("_zero"), 1).otherwise(0)).as("_anyZero"),
-        sum(col("_lnMicro")).as("_sln"))
-      .withColumn("bleu",
-        round(when(col("_anyZero") === 1 || col("_lc") === 0, 0.0)
-          .otherwise(bp *
-            exp(col("_sln").cast("double") / (maxN * 1e6))), 6))
-      .select(ids :+ col("_lc").as("cand_tokens") :+
-        col("_lr").as("ref_tokens") :+ col("bleu"): _*)
+    base.select(ids :+ col("_lc").as("cand_tokens") :+
+      col("_lr").as("ref_tokens") :+
+      round(when(anyZero || col("_lc") === 0, 0.0)
+        .otherwise(bp * exp(sumLn.cast("double") / (maxN * 1e6))), 6)
+        .as("bleu"): _*)
   }
 
   /** Per-row chrF (Popović 2015): character n-gram F-score, the
@@ -548,17 +466,16 @@ object TextSim {
     * P = 0) rather than the "effective order" rule — deterministic on
     * degenerate inputs and documented here.
     *
-    * Determinism: per-(row, order) precisions/recalls round to INTEGER
-    * MICRO units before the over-orders sum (a raw double Σ over the
-    * orders group would be partition-order dependent — the q149 rule).
+    * Determinism: per-order precisions/recalls round HALF_UP to INTEGER
+    * MICRO units before the over-orders sum (the q149 rule), so the
+    * result does not depend on the order the terms are added in.
     *
-    * Scale shape: grams for ALL orders build in one per-row flatten
-    * ([[orderedGramStructs]] over the STAGED cleaned-string column, so
-    * HOF lambdas never re-evaluate the cleaning chain per element);
-    * clipped overlap is the shared [[clippedOverlap]] machinery keyed
-    * by (id, n, gram); per-order totals are CLOSED FORM from the
-    * cleaned lengths (len − n + 1), so only the overlap join shuffles.
-    * Output: (idCols..., chrf). */
+    * Scale shape: one projection — clipped overlaps for all orders from
+    * one [[ClippedNgramOverlap]] call over the cleaned strings (grams
+    * are windows of code points, as Spark's `length` counts them),
+    * per-order totals CLOSED FORM from the cleaned lengths (len − n + 1),
+    * the orders unrolled as Columns. Output:
+    * (idCols..., chrf), one row out per row in. */
   def chrF(df: DataFrame, idCols: Seq[String], candCol: String,
       refCol: String, maxN: Int = 6, beta: Double = 2.0): DataFrame = {
     require(idCols.nonEmpty, "chrF needs at least one id column")
@@ -569,37 +486,22 @@ object TextSim {
       coalesce(regexp_replace(c, "\\s+", ""), lit(""))
     val base = df.select(ids :+ cleaned(col(candCol)).as("_cs") :+
       cleaned(col(refCol)).as("_rs"): _*)
-    val overlap = clippedOverlap(base, idCols,
-      charGramStructs(col("_cs"), 1 to maxN),
-      charGramStructs(col("_rs"), 1 to maxN))
-    // per-(row, order) skeleton with closed-form totals; left join
-    // pulls in the (possibly absent) overlap
-    val skeleton = base
       .select(ids :+ length(col("_cs")).as("_lc") :+
-        length(col("_rs")).as("_lr"): _*)
-      .withColumn("_n", explode(sequence(lit(1), lit(maxN))))
-      .withColumn("_ct", greatest(col("_lc") - col("_n") + 1, lit(0)))
-      .withColumn("_rt", greatest(col("_lr") - col("_n") + 1, lit(0)))
-    val perOrder = skeleton
-      .join(overlap, idCols :+ "_n", "left")
-      .withColumn("_ov", coalesce(col("_ov"), lit(0L)))
-      .withColumn("_pMicro", when(col("_ct") > 0,
-        round(col("_ov") * 1e6 / col("_ct")).cast("bigint"))
-        .otherwise(lit(0L)))
-      .withColumn("_rMicro", when(col("_rt") > 0,
-        round(col("_ov") * 1e6 / col("_rt")).cast("bigint"))
-        .otherwise(lit(0L)))
+        length(col("_rs")).as("_lr") :+
+        ClippedNgramOverlap(col("_cs"), col("_rs"), 1, maxN).as("_ov"): _*)
+    def micro(len: String, n: Int): Column = {
+      val tot = greatest(col(len) - n + 1, lit(0))
+      when(tot > 0, round(element_at(col("_ov"), n) * 1e6 / tot).cast("bigint"))
+        .otherwise(lit(0L))
+    }
+    def avg(len: String): Column =
+      (1 to maxN).map(micro(len, _)).reduce(_ + _).cast("double") / (maxN * 1e6)
+    val (chrP, chrR) = (avg("_lc"), avg("_lr"))
     val b2 = beta * beta
-    perOrder.groupBy(ids: _*)
-      .agg(sum(col("_pMicro")).as("_sp"), sum(col("_rMicro")).as("_sr"))
-      .withColumn("_chrP", col("_sp").cast("double") / (maxN * 1e6))
-      .withColumn("_chrR", col("_sr").cast("double") / (maxN * 1e6))
-      .withColumn("chrf",
-        round(when(lit(b2) * col("_chrP") + col("_chrR") > 0,
-          lit(1 + b2) * col("_chrP") * col("_chrR") /
-            (lit(b2) * col("_chrP") + col("_chrR")))
-          .otherwise(0.0), 6))
-      .select(ids :+ col("chrf"): _*)
+    base.select(ids :+
+      round(when(lit(b2) * chrP + chrR > 0,
+        lit(1 + b2) * chrP * chrR / (lit(b2) * chrP + chrR))
+        .otherwise(0.0), 6).as("chrf"): _*)
   }
 
   /** Per-row ROUGE-L (Lin 2004 §3): LCS-based precision/recall/F1 over

@@ -7,11 +7,13 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard for the similarity kernels: each is written once, in its
-  * own file, and every arm that uses it calls it. A second copy anywhere
-  * under `graft` fails this spec. Copies drift (a seed, a rounding, a tie
-  * order), and an exact-vs-approximate recall check hooks one kernel per
-  * arm. */
+/** Source guard for the similarity and n-gram counting kernels: each is
+  * written once, in its own file, and every arm that uses it calls it. A
+  * second copy anywhere under `graft` fails this spec, and so does a
+  * return of the keyed-shuffle overlap join or the per-gram `filter` mode
+  * search the n-gram kernels replaced. Copies drift (a seed, a rounding, a
+  * tie order), and an exact-vs-approximate recall check hooks one kernel
+  * per arm. */
 class KernelPathSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
@@ -27,7 +29,11 @@ class KernelPathSpec extends AnyFunSuite {
       raw"""orderBy\(col\("score"\)\.desc,\s*col\("neighbor_id"\)\.asc\)""".r),
     ("per-query ADC top-k", "ann/ProductQuantize.scala", raw"""orderBy\(col\("adc_dist"\)\.asc""".r),
     ("processing-time gate timeout", "streaming/Streams.scala", raw"\bsetTimeoutDuration\b".r),
-    ("event-time gate timeout", "streaming/Streams.scala", raw"\bsetTimeoutTimestamp\b".r))
+    ("event-time gate timeout", "streaming/Streams.scala", raw"\bsetTimeoutTimestamp\b".r),
+    ("clipped n-gram overlap", "functions/NgramCounts.scala",
+      raw"""\btable\.take\(|least\(col\("_cc"\)""".r),
+    ("n-gram mode count", "functions/NgramCounts.scala",
+      raw"""\.load\(seq, n\)|transform\(array_distinct\(\w+\),\s*\w+\s*=>\s*size\(filter\(""".r))
 
   /** Comments blanked, so prose may describe a kernel. */
   private def uncommented(src: String): String =
@@ -47,6 +53,13 @@ class KernelPathSpec extends AnyFunSuite {
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)""") == Seq("per-query ADC top-k"))
     assert(hits("stateTtl.foreach(state.setTimeoutDuration)") == Seq("processing-time gate timeout"))
     assert(hits("state.setTimeoutTimestamp(base, stateTtl)") == Seq("event-time gate timeout"))
+    assert(hits("""agg(sum(least(col("_cc"), col("_rc"))).as("_ov"))""") ==
+      Seq("clipped n-gram overlap"))
+    assert(hits("""round(array_max(transform(array_distinct(toks),
+      t => size(filter(toks, y => y === t)))).cast("double") / size(toks), 6)""") ==
+      Seq("n-gram mode count"))
+    assert(hits("size(filter(toks, t => array_contains(sw, t)))").isEmpty)
+    assert(hits("ClippedNgramOverlap(col(\"_cs\"), col(\"_rs\"), 1, maxN)").isEmpty)
     assert(hits("VectorFunctions.sketch(col(e), VectorFunctions.planes(8, dim, seed))").isEmpty)
     assert(hits("""posexplode(MinHashSignature.bandKeys(col("_sig"), 64, 16))""").isEmpty)
     assert(hits("""xxhash64(concat_ws(" ", slice(col("_toks"), i, n)))""").isEmpty)

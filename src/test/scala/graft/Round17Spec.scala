@@ -429,22 +429,26 @@ class Round17Spec extends SparkSpec {
     assert(!plan.contains("windowspecdefinition"), plan.take(1200))
   }
 
-  test("q283/q284 shape: one overlap join + one skeleton join, no more") {
+  test("q283/q284/q193 shape: one narrow projection, no join, no Exchange") {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("cand", StringType), StructField("ref", StringType)))
     val d = tmpParquet(df(schema,
       Row(1L, "the cat sat", "the cat sat on the mat")), "gramplan")
     for ((name, out) <- Seq(
         ("chrf", graft.ops.TextSim.chrF(d, Seq("id"), "cand", "ref")),
-        ("bleu", graft.ops.TextSim.bleu(d, Seq("id"), "cand", "ref")))) {
+        ("bleu", graft.ops.TextSim.bleu(d, Seq("id"), "cand", "ref")),
+        ("ngram_f1", graft.ops.TextSim.ngramF1(d, Seq("id"), "cand", "ref", 2)))) {
       val plan = out.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$name: ${plan.take(900)}")
-      assert(!plan.contains("BroadcastNestedLoopJoin"),
+      // the clipped overlaps are counted inside the row: no join and no
+      // shuffle anywhere in the metric family
+      assert(joinNodes(plan) == 0, s"$name: ${plan.take(900)}")
+      assert(!plan.contains("Exchange"), s"$name: ${plan.take(900)}")
+      val exprs = out.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case e => e })
+      assert(!exprs.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.ScalaUDF]), name)
+      assert(exprs.exists(_.isInstanceOf[graft.functions.ClippedNgramOverlap]),
         s"$name: ${plan.take(900)}")
-      // the clipped-overlap inner join + the skeleton left join are
-      // the ONLY joins the metric family pays
-      assert(joinNodes(plan) <= 2, s"$name: ${joinNodes(plan)} joins")
-      assert(!plan.contains("windowspecdefinition"), s"$name")
     }
   }
 

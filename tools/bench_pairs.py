@@ -10,7 +10,10 @@ prints each side's median and quartiles, the pairs the change won (ties count
 for neither), and each side's quartile spread against the spread limit: the
 metric's bound times the parent's median. A gain needs the change to win at
 least nine pairs in ten and the medians to differ by more than the parent's
-quartile spread. The metrics, their direction and their bounds come from the
+quartile spread. It also prints whether the runs are disjoint: every change
+run better than every parent run. A metric whose spread is over the limit
+counts as moved only then, and as unresolved otherwise. The metrics, their
+direction and their bounds come from the
 parent tree's BENCHMARK.json; the script reads that file and `perfbench/` in
 both trees and writes to neither. Every run is printed, and with `--log`
 appended to a file as one JSON line.
@@ -50,6 +53,13 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def disjoint(parent, change, better):
+    """True when every change run is better than every parent run."""
+    if better == "lower":
+        return max(change) < min(parent)
+    return min(change) > max(parent)
+
+
 def report(metric, runs):
     name, better, bound = metric["name"], metric["better"], metric["bound"]
     pairs = [(p["metrics"].get(name), c["metrics"].get(name)) for p, c in runs]
@@ -73,6 +83,10 @@ def report(metric, runs):
           f"change {'within' if cq3 - cq1 < limit else 'OVER'}")
     print(f"  gain (>= 9/10 pairs won, median moved by more than the parent's spread): "
           f"{'yes' if gain else 'no'}")
+    print(f"  disjoint (every change run {'below' if better == 'lower' else 'above'} "
+          f"every parent run: change {min(chg):.4g} .. {max(chg):.4g}, "
+          f"parent {min(par):.4g} .. {max(par):.4g}): "
+          f"{'yes' if disjoint(par, chg, better) else 'no'}")
 
 
 def main():
