@@ -136,11 +136,11 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Session bring-up warm-ups (scan, shuffle, object-operator encoders).
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.core.Tables(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count().count()
-    spark.read.parquet(s"$sfDir/documents.parquet").limit(8)
-      .mapPartitions(it => it)(org.apache.spark.sql.Encoders.row(
-        spark.read.parquet(s"$sfDir/documents.parquet").schema)).count()
+    val docs = graft.core.Tables(spark, sfDir, "documents")
+    docs.limit(8).mapPartitions(it => it)(
+      org.apache.spark.sql.Encoders.row(docs.schema)).count()
     // Optional comma-separated name filter for hand-profiling single queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -3293,7 +3293,7 @@ object Queries {
       "q127_provenance",
       (s: SparkSession, dir: String) =>
         graft.sources.Provenance.withSourceFile(
-          s.read.parquet(s"$dir/documents.parquet"))
+          t(s, dir, "documents"))
           .select("doc_id", "_source_file"),
       Some("SELECT doc_id, 'documents.parquet' AS _source_file FROM documents")
     ),
@@ -5378,7 +5378,7 @@ object Queries {
         t(s, dir, "documents").select(cols.map(col): _*)
           .repartition(64).write.mode("overwrite").parquet(path)
         val before = graft.ops.Datacard
-          .fingerprint(s.read.parquet(path), cols).head()
+          .fingerprint(Tables.parquet(s, path), cols).head()
         val executed = graft.sources.Compact.run(s, path, 64L << 20)
         require(executed.worthIt,
           s"compact judged the 64-file layout not worth it: $executed")
@@ -5387,10 +5387,10 @@ object Queries {
             executed.targetFiles,
           s"post-compact layout != ${executed.targetFiles} files")
         val after = graft.ops.Datacard
-          .fingerprint(s.read.parquet(path), cols).head()
+          .fingerprint(Tables.parquet(s, path), cols).head()
         require(before == after,
           s"compact changed the content fingerprint: $before -> $after")
-        s.read.parquet(path).select(cols.map(col): _*)
+        Tables.parquet(s, path).select(cols.map(col): _*)
       },
       Some("""
         SELECT doc_id, text, lang, source FROM documents""")
@@ -6826,7 +6826,7 @@ object Queries {
           docs.filter(col("doc_id") % 2 === 0), "text")
           .write.mode("overwrite").parquet(path)
         graft.ops.StupidBackoff.perDocWithModel(docs, "doc_id", "text",
-          s.read.parquet(path))
+          Tables.parquet(s, path))
       },
       Some("""
         WITH ref AS (

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** Scale rehearsal (VERDICT r16 item 5): answer the "would this still
   * be linear at 100×?" question with DATA instead of plan reading.
@@ -24,9 +25,19 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
 
+  /** The id offset between synthetic copies: the span of `id` in `base`, so
+    * copy c's ids `[lo + c*stride, hi + c*stride]` never meet another
+    * copy's. */
+  private def stride(base: DataFrame, id: String): Long = {
+    val r = base.agg(min(col(id)).cast("long"), max(col(id)).cast("long")).head()
+    require(!r.isNullAt(0), s"no $id to offset")
+    r.getLong(1) - r.getLong(0) + 1
+  }
+
   private def synthDocs(spark: SparkSession, sfDir: String, k: Int,
       dir: java.nio.file.Path): String = {
     val base = graft.core.Tables(spark, sfDir, "documents")
+    val docStride = stride(base, "doc_id")
     val p = dir.resolve(s"docs_x$k.parquet").toString
     val copies = base
       .withColumn("_copy", explode(sequence(lit(0), lit(k - 1))))
@@ -37,7 +48,7 @@ object ScaleSmoke {
           transform(split(col("text"), " "),
             t => concat(t, lit("~"), col("_copy"))))))
     copies.select(
-        (col("doc_id") + col("_copy") * 100000000L).as("doc_id"),
+        (col("doc_id") + col("_copy") * docStride).as("doc_id"),
         col("_text").as("text"),
         col("lang"), col("source"),
         length(col("_text")).as("n_chars"))
@@ -48,10 +59,11 @@ object ScaleSmoke {
   private def synthEmb(spark: SparkSession, sfDir: String, k: Int,
       dir: java.nio.file.Path): String = {
     val base = graft.core.Tables(spark, sfDir, "embeddings")
+    val vecStride = stride(base, "vec_id")
     val p = dir.resolve(s"emb_x$k.parquet").toString
     base.withColumn("_copy", explode(sequence(lit(0), lit(k - 1))))
       .select(
-        (col("vec_id") + col("_copy") * 100000000L).as("vec_id"),
+        (col("vec_id") + col("_copy") * vecStride).as("vec_id"),
         // rotate-ish perturbation: shift each copy's vectors off the
         // originals so IVF cells keep realistic occupancy
         transform(col("embedding"), (x, i) =>
@@ -71,12 +83,13 @@ object ScaleSmoke {
   private def synthEvents(spark: SparkSession, sfDir: String, k: Int,
       dir: java.nio.file.Path): String = {
     val base = graft.core.Tables(spark, sfDir, "events")
+    val (eventStride, userStride) = (stride(base, "event_id"), stride(base, "user_id"))
     val p = dir.resolve(s"events_x$k.parquet").toString
     base.withColumn("_copy", explode(sequence(lit(0), lit(k - 1))))
       .select(
-        (col("event_id") + col("_copy") * 1000000000L).as("event_id"),
+        (col("event_id") + col("_copy") * eventStride).as("event_id"),
         col("ts"),
-        (col("user_id") + col("_copy") * 100000000L).as("user_id"),
+        (col("user_id") + col("_copy") * userStride).as("user_id"),
         col("event_type"), col("value"), col("props"))
       .write.mode("overwrite").parquet(p)
     p
@@ -90,10 +103,12 @@ object ScaleSmoke {
     * the session's shuffle-partition count across every scale, so the
     * curve isolates per-row state-commit cost from partition-count
     * effects. Returns (output rows, input rows, summed state commit ms,
-    * summed state rows). */
+    * summed state rows), summed over every micro-batch: the progress comes
+    * from a listener, since `recentProgress` keeps only the last
+    * `spark.sql.streaming.numRecentProgressUpdates` batches. */
   private def streamIntervalJoinGate(spark: SparkSession,
       eventsPath: String, checkpoint: String): (Long, Long, Long, Long) = {
-    val schema = spark.read.parquet(eventsPath).schema
+    val schema = graft.core.Tables.parquet(spark, eventsPath).schema
     def side(tpe: String, prefix: String) =
       spark.readStream.schema(schema).parquet(eventsPath)
         .filter(col("event_type") === tpe)
@@ -106,17 +121,46 @@ object ScaleSmoke {
       before = "1 hour", after = "0 seconds",
       watermarkDelay = "0 seconds")
       .select("p_id", "c_id")
-    val q = out.writeStream.format("noop")
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val progress = q.recentProgress
+    val log = new ProgressLog
+    spark.streams.addListener(log)
+    val progress = try {
+      val q = out.writeStream.format("noop")
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      log.of(q.runId)
+    } finally spark.streams.removeListener(log)
     val outRows = progress.map(_.sink.numOutputRows).filter(_ > 0).sum
     val inRows = progress.map(_.numInputRows).sum
     val commitMs = progress.flatMap(_.stateOperators).map(_.commitTimeMs).sum
     val stateRows = progress.flatMap(_.stateOperators)
       .map(_.numRowsTotal).filter(_ > 0).lastOption.getOrElse(0L)
     (outRows, inRows, commitMs, stateRows)
+  }
+
+  /** Every progress report the listener bus delivers. The bus posts a
+    * query's termination after its last progress, so once that arrives the
+    * query's reports are complete. */
+  private final class ProgressLog extends StreamingQueryListener {
+    private val reports = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    private val ended = new java.util.concurrent.LinkedBlockingQueue[java.util.UUID]
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      reports.add(e.progress)
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      ended.add(e.runId)
+
+    /** The reports of the run `runId`, after its termination reached the bus. */
+    def of(runId: java.util.UUID): Seq[StreamingQueryProgress] = {
+      var seen = false
+      while (!seen) {
+        val id = ended.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        require(id != null, s"stream run $runId never reported its termination")
+        seen = id == runId
+      }
+      import scala.jdk.CollectionConverters._
+      reports.asScala.filter(_.runId == runId).toSeq
+    }
   }
 
   private def timed(f: => Long): (Double, Long) = {

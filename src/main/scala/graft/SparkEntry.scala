@@ -15,7 +15,7 @@ object SparkEntry {
     * merge, filter-consumes-decision-key, and partial aggregation. */
   def entry(spark: SparkSession): DataFrame = {
     val client = MockLlmClient()
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = graft.core.Tables(spark, "/root/testdata/sf0.001", "documents")
     val mapped = SemanticMap(docs, SemanticMapConfig(
       name = "flagship_map", prompt = "{{ input.text }}",
       outputSchema = Seq("sentiment" -> "str")), client)

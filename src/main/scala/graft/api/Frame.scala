@@ -198,7 +198,7 @@ object implicits {
 object Graft {
   def readParquet(spark: SparkSession, path: String,
       client: LlmClient = MockLlmClient()): Frame =
-    Frame(spark.read.parquet(path), client)
+    Frame(graft.core.Tables.parquet(spark, path), client)
   def readJson(spark: SparkSession, path: String,
       client: LlmClient = MockLlmClient()): Frame =
     Frame(spark.read.json(path), client)

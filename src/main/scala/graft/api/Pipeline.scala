@@ -526,7 +526,7 @@ object Pipeline {
   def read(spark: SparkSession, path: String): DataFrame = ext(path) match {
     case "json"    => spark.read.json(path)
     case "csv"     => spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-    case "parquet" => spark.read.parquet(path)
+    case "parquet" => graft.core.Tables.parquet(spark, path)
     case e => throw new IllegalArgumentException(s"unsupported input extension .$e ($path)")
   }
 

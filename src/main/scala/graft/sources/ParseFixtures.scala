@@ -99,7 +99,7 @@ object ParseFixtures {
     * n_nationkey order. */
   def xlsxDir(spark: SparkSession, sfDir: String): String =
     cached(sfDir, "xlsx") { out =>
-      val rows = spark.read.parquet(s"$sfDir/nation.parquet")
+      val rows = graft.core.Tables(spark, sfDir, "nation")
         .selectExpr("n_nationkey", "n_name", "n_regionkey")
         .orderBy("n_nationkey")
         .collect()
@@ -110,7 +110,7 @@ object ParseFixtures {
     }
 
   private def docRows(spark: SparkSession, sfDir: String, limitId: Option[Int]): Seq[(Long, String)] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.core.Tables(spark, sfDir, "documents")
     val slice = limitId.map(n => docs.filter(s"doc_id < $n")).getOrElse(docs)
     slice.selectExpr("doc_id", "text").orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq

@@ -19,35 +19,39 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Runs `action` and sums the per-task updates of the named accumulators
     * over the jobs it ran. */
   protected def accumulated(names: Set[String])(action: => Unit): Map[String, Double] = {
-    import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{
-      SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sums = new ConcurrentHashMap[String, java.lang.Double]()
-    val started, ended = new AtomicInteger()
+    val sums = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+    val jobs = listening(_.taskInfo.accumulables.foreach { a =>
+      (a.name, a.update) match {
+        case (Some(n), Some(v: Number)) if names(n) =>
+          sums.merge(n, v.doubleValue, (x, y) => x + y)
+        case _ => ()
+      }
+    })(action)
+    assert(jobs > 0, "the action ran no job")
+    names.map(n => n -> Option(sums.get(n)).map(_.doubleValue).getOrElse(0.0)).toMap
+  }
+
+  /** The number of Spark jobs `action` submits. */
+  protected def jobsIn(action: => Unit): Int = listening(_ => ())(action)
+
+  /** Runs `action` with a listener that counts job starts and hands every
+    * task end to `onTask`, then drains the listener bus, so the listener has
+    * seen every event the action posted. Returns the jobs started. */
+  private def listening(onTask: org.apache.spark.scheduler.SparkListenerTaskEnd => Unit)(
+      action: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val started = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        e.taskInfo.accumulables.foreach { a =>
-          (a.name, a.update) match {
-            case (Some(n), Some(v: Number)) if names(n) =>
-              sums.merge(n, v.doubleValue, (x, y) => x + y)
-            case _ => ()
-          }
-        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = onTask(e)
     }
-    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
     try {
       action
-      // the listener bus is asynchronous; a job's task ends reach the
-      // listener before its job end
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
-      while ((started.get() == 0 || ended.get() < started.get()) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.get() > 0 && ended.get() == started.get(), "jobs did not finish on the bus")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    names.map(n => n -> Option(sums.get(n)).map(_.doubleValue).getOrElse(0.0)).toMap
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    started.get()
   }
 
   def df(schema: StructType, rows: Row*): DataFrame =

@@ -1,7 +1,7 @@
 """Paired benchmark runs of two source trees: a parent and a change.
 
     python3 tools/bench_pairs.py --parent ../parent --change . \
-        --workload semantic_cold --seeds 1-10 [--seconds 15] [--log runs.jsonl]
+        --workload semantic_cold --seeds 1-10 [--seconds 15] [--log runs.jsonl] [--layers]
 
 For each seed it runs `perfbench/run.py --trace 0` once in each tree,
 alternating which tree goes first, and reads the result from each run's last
@@ -14,9 +14,13 @@ quartile spread. It also prints whether the runs are disjoint: every change
 run better than every parent run. A metric whose spread is over the limit
 counts as moved only then, and as unresolved otherwise. The metrics, their
 direction and their bounds come from the
-parent tree's BENCHMARK.json; the script reads that file and `perfbench/` in
-both trees and writes to neither. Every run is printed, and with `--log`
+parent tree's BENCHMARK.json. Every run is printed, and with `--log`
 appended to a file as one JSON line.
+
+With `--layers`, after the pairs it runs `--trace 1` once in each tree on the
+first seed and prints the layer metrics that place a change (`LAYERS`) side by
+side. The script writes nothing in either tree but what `perfbench/run.py`
+writes under `.bench_build/`.
 """
 import argparse
 import json
@@ -31,9 +35,13 @@ def seed_range(text):
     return list(range(int(lo), int(hi or lo) + 1))
 
 
-def run_once(tree, workload, seed, seconds):
+# Per-layer metrics that say which layer a change moved.
+LAYERS = ("api.build_jobs", "api.build_s", "exec.jobs", "exec.s", "codegen.classes")
+
+
+def run_once(tree, workload, seed, seconds, trace=0):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     r = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = r.stdout.strip().splitlines()
     try:
@@ -89,6 +97,33 @@ def report(metric, runs):
           f"{'yes' if disjoint(par, chg, better) else 'no'}")
 
 
+def logged(run, log, **tags):
+    """Prints a run as one JSON line and appends it to the log, if any."""
+    line = dict(run, **tags)
+    print(json.dumps(line), flush=True)
+    if log:
+        with open(log, "a") as fh:
+            fh.write(json.dumps(line) + "\n")
+    return run
+
+
+def layers(trees, workload, seed, seconds, log):
+    got = {side: logged(run_once(tree, workload, seed, seconds, trace=1), log,
+                        side=side, seed=seed, workload=workload, trace=1)
+           for side, tree in trees.items()}
+    print(f"\nlayers (--trace 1, seed {seed}; median over traced passes)")
+    print(f"  {'metric':<18}{'parent':>12}{'change':>12}")
+    for name in LAYERS:
+        p, c = (got[side]["metrics"].get(name) for side in ("parent", "change"))
+        if p is None or c is None:
+            print(f"  {name:<18}{'not reported':>24}")
+        else:
+            print(f"  {name:<18}{p:>12.4g}{c:>12.4g}")
+    for side in trees:
+        ok = got[side]["correct"] and not got[side]["failed"]
+        print(f"  {side}: traced run {'correct' if ok else 'with a failed op or check'}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="source tree of the parent commit")
@@ -98,6 +133,8 @@ def main():
     ap.add_argument("--seconds", type=float, default=None,
                     help="timed window per run (default: BENCHMARK.json's run_seconds)")
     ap.add_argument("--log", help="append every run to this file as JSON lines")
+    ap.add_argument("--layers", action="store_true",
+                    help="then one traced run per tree on the first seed, layer by layer")
     a = ap.parse_args()
     with open(os.path.join(a.parent, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -109,12 +146,8 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
         for side in order:
-            got[side] = run_once(trees[side], a.workload, seed, seconds)
-            line = dict(got[side], side=side, seed=seed, workload=a.workload)
-            print(json.dumps(line), flush=True)
-            if a.log:
-                with open(a.log, "a") as fh:
-                    fh.write(json.dumps(line) + "\n")
+            got[side] = logged(run_once(trees[side], a.workload, seed, seconds), a.log,
+                               side=side, seed=seed, workload=a.workload)
         runs.append((got["parent"], got["change"]))
 
     print()
@@ -123,6 +156,8 @@ def main():
         print(f"{side}: {len(runs)} runs, {len(bad)} with a failed op or check")
     for metric in bench["end_to_end"]:
         report(metric, runs)
+    if a.layers:
+        layers(trees, a.workload, seed_range(a.seeds)[0], seconds, a.log)
     return 0
 
 
