@@ -1,32 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Materialize, PersistScope}
 
-/** Benchmark main (driver contract): runs every SparkEntry query against
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line of per-query seconds.
+/** Benchmark main: runs every SparkEntry query against `SPARK_GRAFT_SF_DIR`
+  * and prints ONE JSON line of per-query seconds.
   *
-  * Measures STEADY-STATE throughput, JMH-style: one unmeasured warm-up
-  * iteration of the full workload first (compiling every whole-stage-codegen
-  * class and heating the JIT on real loop trip counts), then
-  * `SPARK_GRAFT_ITERS` (default 3) timed full-suite sweeps; each query
-  * reports its MIN across sweeps plus a max-min `spread` field, so a plan
-  * regression is distinguishable from single-run jitter. At the 100 TB
-  * design point a query's one-time ~0.5 s codegen+JIT compile is noise; on
-  * a 5 k-row bench table it would otherwise be 80% of the measurement.
+  * Each query is timed to its whole result: a noop write of every row
+  * ([[graft.core.Materialize.noop]]), the same materialization perfbench
+  * uses, so no query is timed as a pruned row count.
   *
-  * Tail-readability contract (r18): the printed line ends with the
-  * per-query MINIMA (`"queries"`) and a `"total_s"` scalar, and the
-  * spread dict namespaces its keys (`"q71~spread"`), so ANY stdout-tail
-  * truncation leaves an unambiguous artifact — the r17 driver capture
-  * kept exactly the spread dict under bare query names, which read as
-  * 25x-inflated per-query times.
+  * Measures steady-state throughput, JMH-style: one unmeasured warm-up
+  * sweep of the full suite first (compiling every whole-stage-codegen class
+  * and heating the JIT on real loop trip counts), then `SPARK_GRAFT_ITERS`
+  * (default 3) timed sweeps; each query reports its MIN across sweeps plus
+  * a max-min `~spread` field.
   *
-  * Environment gating (r18): a round-artifact run (full suite at sf0.1)
-  * that measures as noisy OR environment-inflated vs committed history
-  * (`env_ratio_vs_best` >= 1.1) re-runs its timed sweeps up to
-  * `SPARK_GRAFT_MAX_ATTEMPTS` (default 3) times and stamps the artifact
-  * from the best attempt — the r17 driver artifact was a noisy 1.38x
-  * sweep even though clean runs existed minutes earlier.
+  * Tail-readability: the line ends with the per-query minima (`"queries"`)
+  * and a `"total_s"` scalar, and the spread dict namespaces its keys
+  * (`"q71~spread"`), so a truncated stdout tail never shows a spread under
+  * a bare query name. The full line is also written to `target/bench.json`.
   *
   * A query that throws is a failure, not a timing: it is left out of the
   * per-query minima and `total_s`, stamped in `"failed"`, and the run
@@ -34,23 +27,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def median(xs: Seq[Double]): Double =
-    if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
-
-  /** One timed pass of `iters` full-suite sweeps: (query, min seconds,
-    * max-min spread) per query that succeeded in every sweep, and the
-    * queries that threw in any sweep. A failed query is a failure, not a
-    * timing — it stays out of the per-query minima and `total_s`. */
+  /** `iters` timed full-suite sweeps: (query, min seconds, max-min spread)
+    * per query that succeeded in every sweep, and the queries that threw in
+    * any sweep. */
   private[graft] def timedSweeps(spark: SparkSession, sfDir: String,
-      suite: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)],
+      suite: Seq[(String, (SparkSession, String) => DataFrame)],
       iters: Int): (Seq[(String, Double, Double)], Seq[String]) = {
     val times = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     (1 to iters).foreach { _ =>
       suite.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
+        val ok = try { Materialize.noop(fn(spark, sfDir)); true } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[graft] bench: $name failed — $e")
             false
@@ -59,7 +47,7 @@ object Bench {
         // Flush op-internal persists between queries (untimed): each query
         // re-persists its own frames anyway, so this only stops storage
         // blocks accumulating across the suite.
-        graft.core.PersistScope.unpersistAll()
+        PersistScope.unpersistAll()
         if (ok) times(name) = times.getOrElse(name, Vector.empty) :+ dt
         else failed += name
       }
@@ -68,199 +56,43 @@ object Bench {
       (name, ts.min, ts.max - ts.min) }, failed.toSeq)
   }
 
-  /** Cross-run environment gauge: UNIFORM machine-load inflation never
-    * trips the within-run spread heuristic (all iterations are equally
-    * slow), so compare this run's per-query mins against the best
-    * committed same-sf artifact history. Median ratio ~1 = clean
-    * environment; >>1 = the whole run is inflated and per-query deltas
-    * vs older artifacts are environment, not code (BENCH_r52-r54 ran
-    * ~1.25-1.38x on binaries identical to r51's 1.07x). Parse failures
-    * are LOGGED, not swallowed (the r17 ADVICE item), so the provenance
-    * field cannot disappear silently when the format drifts. */
-  private def envRatio(results: Seq[(String, Double, Double)],
-      sfDir: String): Option[Double] = try {
-    val re = "BENCH_r(\\d+)\\.json".r
-    val hist = scala.collection.mutable.Map[String, Double]()
-    val dirStream = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-    try {
-      val it = dirStream.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        if (re.findFirstIn(f.getFileName.toString).isDefined) try {
-          val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          // same-scale artifacts only — an sf0.01 dev run must not
-          // compare against the committed sf0.1 history
-          val sameSf = txt.contains(s""""sf":"$sfDir"""")
-          // scope to the "queries" map — the spread dict repeats the
-          // query names (bare pre-r18, "~spread"-suffixed after). The
-          // map is flat by construction, so the first '}' closes it;
-          // assert that instead of trusting it.
-          val qi = if (sameSf) txt.indexOf("\"queries\":{") else -1
-          val end = if (qi >= 0) txt.indexOf("}", qi) else -1
-          if (qi >= 0 && end > qi) {
-            val body = txt.substring(qi + "\"queries\":{".length, end)
-            require(!body.contains("{"),
-              s"${f.getFileName}: nested value inside \"queries\" map")
-            val qre = """"(q[0-9][A-Za-z0-9_]*)":([0-9.eE+-]+)""".r
-            for (m <- qre.findAllMatchIn(body)) {
-              val q = m.group(1); val v = m.group(2).toDouble
-              hist.update(q, math.min(hist.getOrElse(q, Double.MaxValue), v))
-            }
-          }
-        } catch {
-          // one malformed artifact must not kill the whole gauge —
-          // log it and keep reading the rest of the history
-          case e: Exception => System.err.println(
-            s"[graft] bench: skipping unparseable ${f.getFileName} — " +
-              e.getMessage)
-        }
-      }
-    } finally dirStream.close()
-    val ratios = results.flatMap { case (q, minSec, _) =>
-      hist.get(q).filter(_ > 0.01).map(h => minSec / h) }
-    if (ratios.size >= 20)
-      Some(math.round(median(ratios) * 1000) / 1000.0)
-    else None
-  } catch {
-    case e: Exception =>
-      System.err.println(
-        s"[graft] bench: env_ratio_vs_best unavailable — ${e.getMessage}")
-      None
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
+    // Optional comma-separated name filter for hand-profiling single queries.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Session bring-up warm-ups (scan, shuffle, object-operator encoders).
-    graft.core.Tables(spark, sfDir, "lineitem")
-      .groupBy("l_returnflag").count().count()
-    val docs = graft.core.Tables(spark, sfDir, "documents")
-    docs.limit(8).mapPartitions(it => it)(
-      org.apache.spark.sql.Encoders.row(docs.schema)).count()
-    // Optional comma-separated name filter for hand-profiling single queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Warm-up iteration: the full workload once, unmeasured (JMH-style).
-    // Compiles every whole-stage-codegen class and heats the JIT on the real
-    // loop trip counts before anything is timed.
+    // Warm-up sweep: the full suite once, unmeasured. A query that fails
+    // here fails again in the timed sweeps, which report it.
     suite.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try Materialize.noop(fn(spark, sfDir))
+      catch { case scala.util.control.NonFatal(_) => () }
     }
-    graft.core.PersistScope.unpersistAll()
-    val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    // Round-artifact runs (full suite at sf0.1, full iterations) gate on
-    // a quiet environment: re-run the timed sweeps when the attempt is
-    // noisy or inflated vs history, keep the best attempt (lowest total —
-    // monotone with ambient load). Dev runs take their single attempt.
-    val isRoundArtifact = sfDir.replaceAll("/+$", "").endsWith("sf0.1") &&
-      only.isEmpty && iters >= 3
-    val maxAttempts = if (isRoundArtifact)
-      sys.env.getOrElse("SPARK_GRAFT_MAX_ATTEMPTS", "3").toInt else 1
-    require(maxAttempts >= 1,
-      s"SPARK_GRAFT_MAX_ATTEMPTS must be >= 1, got $maxAttempts — a " +
-        "zero-attempt run would stamp an empty round artifact")
-    // best attempt = lowest total (monotone with ambient load), carried
-    // WITH the noisy/env gauges computed inside the loop so the stamped
-    // fields are exactly the gating decision (no recomputation, no
-    // second BENCH_r*.json history scan)
-    var best: Option[(Seq[(String, Double, Double)], Boolean,
-      Option[Double])] = None
-    var attempt = 0
-    var clean = false
-    // every attempt's total, stamped into the artifact: best-of-attempts
-    // can only LOWER the stamped numbers vs single-attempt history, so
-    // the selection must be visible (VERDICT r18 item 5 — a reader
-    // comparing eras needs to see whether the loop engaged and by how
-    // much)
-    val attemptTotals = scala.collection.mutable.ArrayBuffer[Double]()
-    // queries that threw in ANY attempt: stamped, and the run exits non-zero
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-    while (attempt < maxAttempts && !clean) {
-      val (results, failedNow) = timedSweeps(spark, sfDir, suite, iters)
-      failed ++= failedNow
-      attempt += 1
-      attemptTotals += results.map(_._2).sum
-      val attemptNoisy = results.nonEmpty &&
-        median(results.map(_._3)) > 0.5 * median(results.map(_._2))
-      val attemptEnv = envRatio(results, sfDir)
-      clean = !attemptNoisy && attemptEnv.forall(_ < 1.1)
-      if (best.forall(b => results.map(_._2).sum < b._1.map(_._2).sum))
-        best = Some((results, attemptNoisy, attemptEnv))
-      if (!clean && attempt < maxAttempts) System.err.println(
-        s"[graft] bench: attempt $attempt measured noisy=$attemptNoisy " +
-          s"env_ratio=${attemptEnv.getOrElse(Double.NaN)} — re-running the sweep " +
-          "(round artifacts stamp from a quiet environment)")
-    }
-    val (bestResults, noisy, env) = best.getOrElse((Seq.empty, false, None))
-    // a query that failed in another attempt is stamped failed, not timed
-    val results = bestResults.filterNot(r => failed(r._1))
-    if (noisy) System.err.println(
-      "[graft] bench: median spread exceeds 50% of median min — this run " +
-        "was taken under load; treat per-query numbers as upper bounds")
+    PersistScope.unpersistAll()
+    val (results, failed) = timedSweeps(spark, sfDir, suite, iters)
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // namespaced spread keys: a truncated tail can never show a spread
-    // value under a bare query name again
     val spreads = results
       .map { case (k, _, s) => s"\"" + k + "~spread\":" +
         String.format(java.util.Locale.ROOT, "%.4f", Double.box(s)) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val envField = env.map(r => s""""env_ratio_vs_best":$r,""").getOrElse("")
-    // Measurement-environment provenance: the bench JVM switched to a
-    // fixed heap (-Xms = -Xmx) + UseParallelGC at BENCH_r46 — earlier
-    // artifacts were G1-collected, so cross-era per-query deltas mix a
-    // GC change with code changes. Stamp the environment into every
-    // artifact so a reader never has to reconstruct that from git.
-    val gc = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    val jvm = new StringBuilder().append(
-      scala.jdk.CollectionConverters.ListHasAsScala(gc).asScala
-        .map(_.getName).mkString("+")).append(
-      s"; heap=${Runtime.getRuntime.maxMemory() >> 20}m").toString
-    // Field order is the tail-truncation contract: metadata first, the
-    // namespaced spread dict next, per-query MINIMA second-to-last, and
-    // a closing total_s scalar — any suffix of this line reads
-    // unambiguously.
-    // additive keys only: attempt_totals lists every attempt in run
-    // order and first_attempt_total_s pins the un-selected number, so
-    // the best-of-attempts bias vs pre-r18 single-attempt artifacts is
-    // readable off the artifact itself
-    val attemptsField = if (attemptTotals.nonEmpty)
-      s""""attempt_totals":${attemptTotals.mkString("[", ",", "]")},""" +
-        s""""first_attempt_total_s":${attemptTotals.head},"""
-      else ""
     val failedField = failed.map(q => s"\"$q\"").mkString("[", ",", "]")
+    // Field order is the tail-truncation contract: metadata first, the
+    // spread dict next, per-query minima second-to-last, total_s last.
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""iterations":$iters,"attempts":$attempt,"noisy_run":$noisy,""" +
-      s""""failed":$failedField,""" +
-      attemptsField +
-      envField + s""""jvm":"$jvm","sf":"$sfDir","spread":$spreads,""" +
+      s""""iterations":$iters,"materialize":"noop","cpus":$cpus,""" +
+      s""""sf":"$sfDir","failed":$failedField,"spread":$spreads,""" +
       s""""queries":$qs,"total_s":$total}"""
-    // The driver captures only the TAIL of stdout, and a 67-query 3-iteration
-    // JSON line is long enough to lose its head to that window (it did in
-    // round 7 — the judge had to re-run the bench). Persist the full line to
-    // a file too, so the artifact survives any stdout truncation.
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, json.getBytes("UTF-8"))
-    // Driver rounds bench at sf0.1 with the full suite: also write the round
-    // artifact itself (next BENCH_rNN.json after the largest committed one),
-    // so the repo copy is never a truncated stdout tail. Local sf0.01 runs,
-    // filtered suites, and reduced-iteration profiling runs skip this —
-    // they must not masquerade as round artifacts.
-    if (isRoundArtifact) {
-      val rePat = "BENCH_r(\\d+)\\.json".r
-      val prev = Option(new java.io.File(".").listFiles()).toSeq.flatten
-        .flatMap(f => rePat.unapplySeq(f.getName).map(_.head.toInt))
-      val next = (prev :+ 0).max + 1
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"BENCH_r$next%02d.json"), json.getBytes("UTF-8"))
-    }
     println(json)
     spark.stop()
     if (failed.nonEmpty) {

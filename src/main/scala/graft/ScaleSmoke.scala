@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import graft.core.Materialize.noop
 
 /** Scale rehearsal (VERDICT r16 item 5): answer the "would this still
   * be linear at 100×?" question with DATA instead of plan reading.
@@ -21,7 +22,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   * nothing about operator scaling on realistic corpora.
   *
   * Usage: runMain graft.ScaleSmoke [sfDir] [scales] [outFile]
-  *   defaults: /root/testdata/sf0.1  1,10,100  SCALE_SMOKE.md
+  *   defaults: /root/testdata/sf0.1  1,10,100  target/SCALE_SMOKE.md
   */
 object ScaleSmoke {
 
@@ -186,7 +187,7 @@ object ScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = (if (args.length > 1) args(1) else "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
-    val outFile = if (args.length > 2) args(2) else "SCALE_SMOKE.md"
+    val outFile = if (args.length > 2) args(2) else "target/SCALE_SMOKE.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .appName("graft-scale-smoke")
@@ -223,25 +224,25 @@ object ScaleSmoke {
         org.apache.spark.sql.types.StructField("phrase",
           org.apache.spark.sql.types.StringType))))
 
-    // family name -> (docs, emb, scale) => row count (forces execution)
+    // family name -> (docs, emb, scale) => rows of the whole result, run
+    // to a noop write (the way Bench times a query)
     def families(docs: DataFrame, emb: DataFrame, k: Int) = Seq(
       "minhash_keep_best" -> (() =>
-        graft.dedup.MinHashDedup.keepBest(docs, "doc_id", "text").count()),
+        noop(graft.dedup.MinHashDedup.keepBest(docs, "doc_id", "text"))),
       "edit_pairs_passjoin" -> (() =>
-        graft.dedup.EditDedup.pairs(docs, "doc_id", "text", t = 2).count()),
+        noop(graft.dedup.EditDedup.pairs(docs, "doc_id", "text", t = 2))),
       "ivf_search" -> (() => {
         val cent = graft.ann.Ann.trainCentroids(emb, "embedding", 64)
         val assigned = graft.ann.Ann.ivfAssign(emb, "embedding", cent)
         val queries = emb.filter(col("vec_id") < 500)
-        graft.ann.Ann.ivfSearch(assigned, "vec_id", "embedding",
-          queries, "vec_id", "embedding", cent, k = 10, nProbe = 4).count()
+        noop(graft.ann.Ann.ivfSearch(assigned, "vec_id", "embedding",
+          queries, "vec_id", "embedding", cent, k = 10, nProbe = 4))
       }),
       "blocklist_filter" -> (() =>
-        graft.ops.Blocklist.filterBlocked(docs, "text", phrases, "phrase")
-          .count()),
+        noop(graft.ops.Blocklist.filterBlocked(docs, "text", phrases, "phrase"))),
       "budget_select" -> (() =>
-        graft.ops.BudgetSelect(docs, "n_chars", "n_chars",
-          budget = 150000L * k, tieBreak = "doc_id").count()),
+        noop(graft.ops.BudgetSelect(docs, "n_chars", "n_chars",
+          budget = 150000L * k, tieBreak = "doc_id"))),
       // r18 additions (VERDICT r17 item 6): the DP-kernel family
       // (WER + CER on a half-prefix candidate — the q288/q291 shape),
       // the quantization family (PQ encode + IVF-PQ probe search),
@@ -256,10 +257,10 @@ object ScaleSmoke {
         val cand = docs.withColumn("_cand", concat_ws(" ",
           zip_with(toks, sequence(lit(1), greatest(size(toks), lit(1))),
             (w, i) => when(i % 3 === 0, lit("zzqx")).otherwise(w))))
-        graft.ops.TextSim.wer(cand, Seq("doc_id"), "_cand", "text",
-          maxTokens = 200).count() +
-          graft.ops.TextSim.cer(cand, Seq("doc_id"), "_cand", "text",
-            maxChars = 400).count()
+        noop(graft.ops.TextSim.wer(cand, Seq("doc_id"), "_cand", "text",
+          maxTokens = 200)) +
+          noop(graft.ops.TextSim.cer(cand, Seq("doc_id"), "_cand", "text",
+            maxChars = 400))
       }),
       "ivfpq_search" -> (() => {
         val cent = graft.ann.Ann.trainCentroids(emb, "embedding", 64)
@@ -268,12 +269,12 @@ object ScaleSmoke {
           emb, "embedding", nSub = 8, nCodes = 16)
         val coded = graft.ann.ProductQuantize.encode(
           assigned, "embedding", cb)
-        graft.ann.ProductQuantize.ivfPqSearch(coded, "vec_id",
+        noop(graft.ann.ProductQuantize.ivfPqSearch(coded, "vec_id",
           "pq_codes", cb, cent, emb.filter(col("vec_id") < 500),
-          "vec_id", "embedding", k = 10, nProbe = 4).count()
+          "vec_id", "embedding", k = 10, nProbe = 4))
       }),
       "datacard" -> (() =>
-        graft.ops.Datacard(docs, "text", "lang").count()))
+        noop(graft.ops.Datacard(docs, "text", "lang"))))
 
     // synthesize each scale ONCE; the warm-up sweep reuses the
     // smallest scale's files rather than regenerating them
@@ -329,7 +330,8 @@ object ScaleSmoke {
     sb.append("Synthetic scale-up of the sf0.1 tables (token-suffixed ")
       .append("copies — no manufactured\ncross-copy near-dups; see ")
       .append("`graft.ScaleSmoke` scaladoc). local[")
-      .append(cpus).append("], one warm-up sweep.\n\n")
+      .append(cpus).append("], one warm-up sweep; each family is timed to a ")
+      .append("noop write of its\nwhole result.\n\n")
     sb.append("| family | scale | seconds | output rows | driver heap MB |")
       .append(" growth vs 1x |\n|---|---|---|---|---|---|\n")
     val base = rows.filter(_._2 == scales.min).map(r => r._1 -> r._3).toMap
@@ -360,8 +362,9 @@ object ScaleSmoke {
     val pass = worst <= 3.0 && memMax <= math.max(4L * memBase, memBase + 512L)
     sb.append(s"\nVerdict: ${if (pass) "PASS" else "FAIL"} — time growth " +
       "within 3x of data growth and driver heap flat.\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      sb.toString.getBytes("UTF-8"))
+    val out = java.nio.file.Paths.get(outFile).toAbsolutePath
+    java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.write(out, sb.toString.getBytes("UTF-8"))
     println(sb.toString)
     pass
   }

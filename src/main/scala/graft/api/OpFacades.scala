@@ -752,10 +752,13 @@ trait OpFacades[Self <: OpFacades[Self]] {
       mergesPerRound: Int = 1): Self =
     append("bpe_train", "text_key" -> textKey, "num_merges" -> numMerges,
       "merges_per_round" -> mergesPerRound)
+  /** `greedy` unset leaves the Registry default (greedy past 256 trained
+    * merges). */
   def bpeEncode(textKey: String, numMerges: Int,
-      greedy: Boolean = false): Self =
-    append("bpe_encode", "text_key" -> textKey, "num_merges" -> numMerges,
-      "greedy" -> greedy)
+      greedy: Option[Boolean] = None): Self =
+    append("bpe_encode", (Seq[(String, Any)]("text_key" -> textKey,
+      "num_merges" -> numMerges) ++
+      greedy.map(v => "greedy" -> (v: Any)).toSeq): _*)
   /** GPT-2-parity byte-level arms (`level: byte`). */
   def bpeTrainByteLevel(textKey: String, numMerges: Int,
       mergesPerRound: Int = 1): Self =

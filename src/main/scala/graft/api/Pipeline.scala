@@ -236,153 +236,143 @@ object Pipeline {
         .orElse(step.get("except").map(_.strList).map(binary("except", false, _)))
     }
 
-    var last: Option[DataFrame] = None
-    val stepOutputs = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
-    conf("pipeline")("steps").asList.foreach { step =>
-      val ctx = OpContext(spark, client, datasets.toMap)
-      val (out, outHash) = step.get("join") match {
-        case Some(j) =>
-          val left = datasets(j("left").str)
-          val right = datasets(j("right").str)
-          val hasEmbBlocking =
-            j.get("blocking").exists(_.strOr("method", "") == "embedding")
-          // Without embedding blocking a missing condition would silently
-          // cross-join — the all-pairs stage SCALE.md forbids. Fail loudly.
-          val condition = j.get("condition").map(_.str).getOrElse {
-            if (hasEmbBlocking) "true"
-            else throw new IllegalArgumentException(
-              s"join step '${step("name").str}' needs `condition` (or embedding blocking)")
-          }
-          val jCfg = EquijoinOp.Config(
-            name = step("name").str,
-            condition = condition,
-            compareExprLeft = j.strOr("compare_left", ""),
-            compareExprRight = j.strOr("compare_right", ""),
-            llmVerify = j.boolOr("llm_verify", false),
-            model = j.strOr("model", "mock"),
-            limitLeft = j.get("limit_left").map(_.int),
-            limitRight = j.get("limit_right").map(_.int),
-            leftIdKey = j.strOr("left_id", ""),
-            rightIdKey = j.strOr("right_id", ""),
-            limitComparisons = j.get("limit_comparisons").map(_.int),
-            maxPairsPerKey = j.get("max_pairs_per_key").map(_.int.toLong),
-            cascade = j.get("cascade").map(c => graft.ops.CascadeCompare.Config(
-              proxyModel = c.strOr("proxy_model", "proxy"),
-              oracleModel = c.strOr("oracle_model", "oracle"),
-              targetPrecision = c.dblOr("target_precision", 0.9),
-              calibrationSize = c.intOr("calibration_size", 100))))
-          // `blocking: { method: embedding, ... }` switches candidate
-          // generation to hyperplane-LSH cosine blocking; without a fixed
-          // `threshold` the recall-targeted runtime calibration fits one.
-          val joinedBase = j.get("blocking") match {
-            case Some(b) => b.strOr("method", "") match {
-              case "embedding" =>
-                val (lEmb, rEmb, dim) = (b("left_emb").str, b("right_emb").str, b("dim").int)
-                b.get("threshold") match {
-                  case Some(t) => EquijoinOp.withEmbeddingBlocking(
-                    left, right, jCfg, lEmb, rEmb, dim, t.dbl, client,
-                    b.intOr("num_planes", 8))
-                  case None => EquijoinOp.withAutoEmbeddingBlocking(
-                    left, right, jCfg, lEmb, rEmb, dim, client,
-                    b.dblOr("target_recall", 0.95), b.intOr("sample_size", 100),
-                    b.intOr("num_planes", 8))._1
-                }
-              case other => throw new IllegalArgumentException(
-                s"unknown join blocking method '$other' (embedding)")
+    try {
+      var last: Option[DataFrame] = None
+      val stepOutputs = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
+      conf("pipeline")("steps").asList.foreach { step =>
+        val ctx = OpContext(spark, client, datasets.toMap)
+        // Each step starts from a head: a join, a set op or a named input.
+        val (head, headHash) = step.get("join") match {
+          case Some(j) =>
+            val left = datasets(j("left").str)
+            val right = datasets(j("right").str)
+            val hasEmbBlocking =
+              j.get("blocking").exists(_.strOr("method", "") == "embedding")
+            // Without embedding blocking a missing condition would silently
+            // cross-join — the all-pairs stage SCALE.md forbids. Fail loudly.
+            val condition = j.get("condition").map(_.str).getOrElse {
+              if (hasEmbBlocking) "true"
+              else throw new IllegalArgumentException(
+                s"join step '${step("name").str}' needs `condition` (or embedding blocking)")
             }
-            case None => EquijoinOp(left, right, jCfg, client)
-          }
-          // Step-level `sample:` applies to join-headed steps too (the
-          // joined result truncates before the op chain).
-          val joined = step.get("sample").map(n => joinedBase.limit(n.int))
-            .getOrElse(joinedBase)
-          val joinHash = CheckpointStore.rollingHash(
-            hashes(j("left").str) + "+" + hashes(j("right").str), j)
-          // sample participates in the checkpoint key (see input-headed case)
-          val baseHash = step.get("sample")
-            .map(n => CheckpointStore.sha256(joinHash + "|sample=" + n.int))
-            .getOrElse(joinHash)
-          applyOps(joined, baseHash, step, ctx)
-        case None => setOpHead(step) match {
-          case Some((setDf, setHash)) =>
-            val sampled = step.get("sample").map(n => setDf.limit(n.int)).getOrElse(setDf)
-            val baseHash = step.get("sample")
-              .map(n => CheckpointStore.sha256(setHash + "|sample=" + n.int))
-              .getOrElse(setHash)
-            applyOps(sampled, baseHash, step, ctx)
-          case None =>
+            val jCfg = EquijoinOp.Config(
+              name = step("name").str,
+              condition = condition,
+              compareExprLeft = j.strOr("compare_left", ""),
+              compareExprRight = j.strOr("compare_right", ""),
+              llmVerify = j.boolOr("llm_verify", false),
+              model = j.strOr("model", "mock"),
+              limitLeft = j.get("limit_left").map(_.int),
+              limitRight = j.get("limit_right").map(_.int),
+              leftIdKey = j.strOr("left_id", ""),
+              rightIdKey = j.strOr("right_id", ""),
+              limitComparisons = j.get("limit_comparisons").map(_.int),
+              maxPairsPerKey = j.get("max_pairs_per_key").map(_.int.toLong),
+              cascade = j.get("cascade").map(c => graft.ops.CascadeCompare.Config(
+                proxyModel = c.strOr("proxy_model", "proxy"),
+                oracleModel = c.strOr("oracle_model", "oracle"),
+                targetPrecision = c.dblOr("target_precision", 0.9),
+                calibrationSize = c.intOr("calibration_size", 100))))
+            // `blocking: { method: embedding, ... }` switches candidate
+            // generation to hyperplane-LSH cosine blocking; without a fixed
+            // `threshold` the recall-targeted runtime calibration fits one.
+            val joined = j.get("blocking") match {
+              case Some(b) => b.strOr("method", "") match {
+                case "embedding" =>
+                  val (lEmb, rEmb, dim) = (b("left_emb").str, b("right_emb").str, b("dim").int)
+                  b.get("threshold") match {
+                    case Some(t) => EquijoinOp.withEmbeddingBlocking(
+                      left, right, jCfg, lEmb, rEmb, dim, t.dbl, client,
+                      b.intOr("num_planes", 8))
+                    case None => EquijoinOp.withAutoEmbeddingBlocking(
+                      left, right, jCfg, lEmb, rEmb, dim, client,
+                      b.dblOr("target_recall", 0.95), b.intOr("sample_size", 100),
+                      b.intOr("num_planes", 8))._1
+                  }
+                case other => throw new IllegalArgumentException(
+                  s"unknown join blocking method '$other' (embedding)")
+              }
+              case None => EquijoinOp(left, right, jCfg, client)
+            }
+            joined -> CheckpointStore.rollingHash(
+              hashes(j("left").str) + "+" + hashes(j("right").str), j)
+          case None => setOpHead(step).getOrElse {
             val input = step("input").str
-            val df0 = datasets.getOrElse(input,
-              throw new IllegalArgumentException(s"unknown step input '$input'"))
-            // `sample: n` truncates the step input — the optimizer's
-            // run-on-sample hook (reference containers.py:454-455); Catalyst
-            // pushes the limit into the scan.
-            val sampled = step.get("sample").map(n => df0.limit(n.int)).getOrElse(df0)
-            // the truncation participates in the checkpoint key: a sampled
-            // step must never reuse (or poison) a full-run checkpoint
-            val baseHash = step.get("sample")
-              .map(n => CheckpointStore.sha256(hashes(input) + "|sample=" + n.int))
-              .getOrElse(hashes(input))
-            applyOps(sampled, baseHash, step, ctx)
+            datasets.getOrElse(input, throw new IllegalArgumentException(
+              s"unknown step input '$input'")) -> hashes(input)
+          }
+        }
+        // `sample: n` truncates the step's head before the op chain — the
+        // optimizer's run-on-sample hook (reference containers.py:454-455);
+        // Catalyst pushes the limit into the scan. The truncation joins the
+        // checkpoint key: a sampled step must never reuse (or poison) a
+        // full-run checkpoint.
+        val (sampled, baseHash) = step.get("sample") match {
+          case Some(n) => head.limit(n.int) ->
+            CheckpointStore.sha256(headHash + "|sample=" + n.int)
+          case None => head -> headHash
+        }
+        val (out, outHash) = applyOps(sampled, baseHash, step, ctx)
+        val persisted = if (step.boolOr("persist", false)) out.persist() else out
+        datasets(step("name").str) = persisted
+        hashes(step("name").str) = outHash
+        stepOutputs += step("name").str -> persisted
+        last = Some(persisted)
+      }
+
+      val result = last.getOrElse(
+        throw new IllegalArgumentException("pipeline has no steps"))
+      conf("pipeline").get("output").foreach { o =>
+        (o.get("table"), o.get("path")) match {
+          case (Some(tbl), _) =>
+            // Managed-table sink with optional bucketing: bucketed tables
+            // co-locate join keys so later equi-joins/aggs on the bucket
+            // columns skip the shuffle entirely (SCALE.md; at 100 TB this is
+            // the difference between a map-side join and a full exchange).
+            val w0 = result.write.mode(o.strOr("mode", "overwrite"))
+              .format(o.strOr("format", "parquet"))
+            val w1 = o.get("bucket_by") match {
+              case Some(cols) =>
+                val bs = cols.strList
+                w0.bucketBy(o.intOr("num_buckets", 32), bs.head, bs.tail: _*)
+                  .sortBy(bs.head, bs.tail: _*)
+              case None => w0
+            }
+            w1.saveAsTable(tbl.str)
+          case (None, Some(p)) if o.get("shards").isDefined =>
+            // Sharded training-data export: deterministic id-hash routing +
+            // per-shard manifest (rows / tokens / order-free checksum) — the
+            // layout a training loader schedules from (ShardedSink).
+            graft.sources.ShardedSink.write(result, p.str, o("id_expr").str,
+              o.strOr("token_expr", "1"), o("shards").int,
+              o.strOr("mode", "overwrite"))
+          case (None, Some(p)) =>
+            // Path sink with optional hive-style partitioning: partition
+            // pruning on the listed columns is free for every later reader.
+            o.get("partition_by") match {
+              case Some(cols) =>
+                val w = result.write.mode(o.strOr("mode", "overwrite"))
+                  .partitionBy(cols.strList: _*)
+                ext(p.str) match {
+                  case "json"    => w.json(p.str)
+                  case "csv"     => w.option("header", "true").csv(p.str)
+                  case "parquet" => w.parquet(p.str)
+                  case e => throw new IllegalArgumentException(
+                    s"unsupported output extension .$e (${p.str})")
+                }
+              case None => write(result, p.str, o.strOr("mode", "overwrite"))
+            }
+          case (None, None) =>
+            throw new IllegalArgumentException("output needs `path` or `table`")
         }
       }
-      val persisted = if (step.boolOr("persist", false)) out.persist() else out
-      datasets(step("name").str) = persisted
-      hashes(step("name").str) = outHash
-      stepOutputs += step("name").str -> persisted
-      last = Some(persisted)
+      (result, stepOutputs.toSeq, opStats.toSeq)
+    } finally {
+      // Instrumentation caches served their purpose (single execution per
+      // op); don't leak them past the run, failed or not — recomputation is
+      // the caller's choice.
+      instrCaches.foreach(_.unpersist())
     }
-
-    val result = last.getOrElse(
-      throw new IllegalArgumentException("pipeline has no steps"))
-    conf("pipeline").get("output").foreach { o =>
-      (o.get("table"), o.get("path")) match {
-        case (Some(tbl), _) =>
-          // Managed-table sink with optional bucketing: bucketed tables
-          // co-locate join keys so later equi-joins/aggs on the bucket
-          // columns skip the shuffle entirely (SCALE.md; at 100 TB this is
-          // the difference between a map-side join and a full exchange).
-          val w0 = result.write.mode(o.strOr("mode", "overwrite"))
-            .format(o.strOr("format", "parquet"))
-          val w1 = o.get("bucket_by") match {
-            case Some(cols) =>
-              val bs = cols.strList
-              w0.bucketBy(o.intOr("num_buckets", 32), bs.head, bs.tail: _*)
-                .sortBy(bs.head, bs.tail: _*)
-            case None => w0
-          }
-          w1.saveAsTable(tbl.str)
-        case (None, Some(p)) if o.get("shards").isDefined =>
-          // Sharded training-data export: deterministic id-hash routing +
-          // per-shard manifest (rows / tokens / order-free checksum) — the
-          // layout a training loader schedules from (ShardedSink).
-          graft.sources.ShardedSink.write(result, p.str, o("id_expr").str,
-            o.strOr("token_expr", "1"), o("shards").int,
-            o.strOr("mode", "overwrite"))
-        case (None, Some(p)) =>
-          // Path sink with optional hive-style partitioning: partition
-          // pruning on the listed columns is free for every later reader.
-          o.get("partition_by") match {
-            case Some(cols) =>
-              val w = result.write.mode(o.strOr("mode", "overwrite"))
-                .partitionBy(cols.strList: _*)
-              ext(p.str) match {
-                case "json"    => w.json(p.str)
-                case "csv"     => w.option("header", "true").csv(p.str)
-                case "parquet" => w.parquet(p.str)
-                case e => throw new IllegalArgumentException(
-                  s"unsupported output extension .$e (${p.str})")
-              }
-            case None => write(result, p.str, o.strOr("mode", "overwrite"))
-          }
-        case (None, None) =>
-          throw new IllegalArgumentException("output needs `path` or `table`")
-      }
-    }
-    // Instrumentation caches served their purpose (single execution per op);
-    // don't leak them past the run — recomputation is the caller's choice.
-    instrCaches.foreach(_.unpersist())
-    (result, stepOutputs.toSeq, opStats.toSeq)
   }
 
   def runYaml(yaml: String, spark: SparkSession,

@@ -220,7 +220,7 @@ class Round10Spec extends SparkSpec {
     assert(roundTrips(LazyFrame.read("docs", path)
       .bpeTrain("text", 2)) == 2)
     assert(roundTrips(LazyFrame.read("docs", path)
-      .bpeEncode("text", 2, greedy = true)) == n)
+      .bpeEncode("text", 2, greedy = Some(true))) == n)
     assert(roundTrips(LazyFrame.read("docs", path)
       .cdcChunk("doc_id", "text", mode = "rewrite", p = 4)) == n)
     assert(roundTrips(LazyFrame.read("docs", path)
@@ -253,7 +253,7 @@ class Round10Spec extends SparkSpec {
     assert(f.sentenceStats("text").toDF.columns.contains("n_sentences"))
     assert(f.corpusOverlap("lang", "text").count() == 1)
     assert(f.bpeTrain("text", 2).count() == 2)
-    assert(f.bpeEncode("text", 2, greedy = true).toDF
+    assert(f.bpeEncode("text", 2, greedy = Some(true)).toDF
       .columns.contains("tokens"))
     val conv = f.conversationFromPairs("text", "lang", "sys")
       .conversationValidate("messages")
@@ -261,6 +261,19 @@ class Round10Spec extends SparkSpec {
     assert(f.conversationFromPairs("text", "lang")
       .chatRender("messages", graft.ops.ChatOps.ChatTemplate.ChatML)
       .toDF.columns.contains("mask_spans"))
+  }
+
+  test("bpeEncode facade leaves greedy to the Registry default") {
+    import graft.api.{Graft, LazyFrame, Pipeline}
+    val dir = java.nio.file.Files.createTempDirectory("lf10bpe").toString
+    val path = s"$dir/docs.parquet"
+    docsDf.write.mode("overwrite").parquet(path)
+    val yaml = LazyFrame.read("docs", path).bpeEncode("text", 4).toYaml
+    assert(!yaml.contains("greedy"), yaml)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "tokens").collect().map(_.toString).sorted.toSeq
+    assert(rows(Graft.fromDF(spark.read.parquet(path)).bpeEncode("text", 4).toDF) ==
+      rows(Pipeline.runYaml(yaml, spark)))
   }
 
   // ------------------------------------------------------------- Datacard

@@ -781,4 +781,28 @@ class InstrumentedRunSpec extends SparkSpec {
     // instrumentation caches are released after the run
     assert(spark.sparkContext.getPersistentRDDs.size <= persistedBefore)
   }
+
+  test("runInstrumented releases earlier ops' caches when an op throws") {
+    val dir = java.nio.file.Files.createTempDirectory("r5instrfail").toString
+    docsDf.write.mode("overwrite").parquet(s"$dir/d.parquet")
+    def conf(ops: String*) = graft.api.Conf.fromYaml(
+      s"""datasets:
+         |  d: { path: $dir/d.parquet }
+         |pipeline:
+         |  steps:
+         |    - name: s
+         |      input: d
+         |      operations:
+         |""".stripMargin + ops.map(o => s"        - $o\n").mkString)
+    val first = """{ type: code_map, name: m, outputs: { n_tok: "size(split(text, ' '))" } }"""
+    intercept[Exception] {
+      Pipeline.runInstrumented(conf(first,
+        """{ type: code_filter, name: f, predicate: "no_such_col > 1" }"""), spark)
+    }
+    // the first op's output, rebuilt uninstrumented: same plan as the one
+    // the failed run persisted and counted
+    val firstOut = Pipeline.runWithSteps(conf(first), spark)._1
+    assert(spark.sharedState.cacheManager.lookupCachedData(
+      firstOut.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+  }
 }
